@@ -113,13 +113,15 @@ object Tables {
     StructField("updated_at", TimestampType)))
 
   /** Idempotent "CREATE TABLE IF NOT EXISTS" analog (main.py:280-328):
-    * write an empty DataFrame with the control schema if absent. */
+    * write an empty DataFrame with the control schema if absent. The
+    * check goes through the Hadoop FileSystem of `dir`, so a URI
+    * (`file:///…`, `hdfs://…`) resolves the way Spark's writer does. */
   def ensureControlTable(spark: SparkSession, dir: String, name: String,
                          schema: StructType): Unit = {
-    val p = new java.io.File(s"$dir/$name")
-    if (!p.exists()) {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite").parquet(p.getAbsolutePath)
+        .write.mode("overwrite").parquet(p.toString)
     }
   }
 }

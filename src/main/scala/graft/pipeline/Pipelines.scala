@@ -69,9 +69,11 @@ object Pipelines {
   }
 
   /** Production webhook poster for postAlerts (S11: main.py:258-274) —
-    * one JSON `{"text": msg}` POST per alert line, 10s timeout,
-    * failures swallowed (alerting must never fail the run, matching the
-    * reference's try/except around the Slack call). */
+    * one JSON `{"text": msg}` POST per alert line, 10s timeout. A
+    * failed POST (no connection, or a non-2xx answer) never fails the
+    * run, matching the reference's try/except around the Slack call,
+    * but is logged as `alert_post_failed` with its cause. The URL is
+    * not logged: webhook URLs carry their secret in the path. */
   def webhookPoster(url: String): String => Unit = {
     val client = java.net.http.HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(10)).build()
@@ -82,13 +84,18 @@ object Pipelines {
       // alert
       val body = "{\"text\": \"" + EtlLog.escape(msg) + "\"}"
       try {
-        client.send(java.net.http.HttpRequest.newBuilder()
+        val status = client.send(java.net.http.HttpRequest.newBuilder()
           .uri(java.net.URI.create(url))
           .timeout(java.time.Duration.ofSeconds(10))
           .header("Content-Type", "application/json")
           .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
-          java.net.http.HttpResponse.BodyHandlers.discarding())
-      } catch { case _: Exception => () }
+          java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
+        if (status / 100 != 2) EtlLog.error("alert_post_failed", "error" -> s"HTTP $status")
+      } catch {
+        case e: Exception =>
+          EtlLog.error("alert_post_failed",
+            "error" -> (e.toString + Option(e.getCause).fold("")(c => s" <- $c")))
+      }
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,13 +10,25 @@ import graft.sink.{RetryingUpserter, UpsertRecord, UpsertTransport}
 
 /** The reverse-ETL lifecycle (SURVEY.md §3, Spark replacement), one run:
   *
-  *   read parquet → watermark filter → project/derive → broadcast-join
-  *   id_map → split {ready, ambiguous} → batched upsert sink → merge
-  *   id_map (last-writer-wins) → append DLQ + ledger → outcome agg →
-  *   alert check
+  *   read parquet → watermark filter → project/derive → join id_map →
+  *   batched upsert sink (keyless rows pass through unsent) → durable
+  *   results file → outcome agg → merge id_map (last-writer-wins) →
+  *   append DLQ + ledger → alert check
   *
-  * Control tables are parquet dirs under `controlDir` with the
-  * reference's DDL schemas (main.py:285-327 → Tables.*Schema).
+  * Each phase is one Spark action: the source and the id map are read
+  * once, by the sink's write, and every later phase reads the results
+  * file it left. Control tables are parquet dirs under `controlDir`
+  * with the reference's DDL schemas (main.py:285-327 → Tables.*Schema),
+  * read with those schemas so no read infers one from file footers.
+  *
+  * Id-map swap: the merged map is written to `id_map_next`, then
+  * `id_map` is deleted and `id_map_next` renamed over it (O(1) file
+  * operations, not a copy). A crash after `id_map_next` commits and
+  * before the rename leaves it on disk with its `_SUCCESS` marker, and
+  * it is always newer than `id_map`; the next run finds it on start and
+  * finishes the swap before reading anything, so the map is neither
+  * stale nor recreated empty. An `id_map_next` without `_SUCCESS` is a
+  * write that never committed and is ignored.
   *
   * Scale notes: the id map is broadcast only when small
   * (spark.sql.autoBroadcastJoinThreshold governs — we do NOT force the
@@ -120,17 +133,24 @@ object SyncJob {
           controlDir: String, transport: UpsertTransport): Summary = {
     import spark.implicits._
 
-    Tables.ensureControlTable(spark, controlDir, "id_map", Tables.idMapSchema)
-    Tables.ensureControlTable(spark, controlDir, "dlq", Tables.dlqSchema)
-    Tables.ensureControlTable(spark, controlDir, "ledger", Tables.runLedgerSchema)
-    def ctl(name: String): DataFrame = spark.read.parquet(s"$controlDir/$name")
-
     val runId = s"${cfg.jobType}-${cfg.nowMs}"
     val started = new java.sql.Timestamp(cfg.nowMs)
 
+    // finish an id-map swap a crashed run left half done BEFORE the
+    // existence check below, which would otherwise recreate it empty
+    val nextCommitted = new Path(s"$controlDir/id_map_next/_SUCCESS")
+    if (nextCommitted.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(nextCommitted)) {
+      swapIdMap(spark, controlDir)
+      EtlLog.info("id_map_recovered", "run_id" -> runId, "job_type" -> cfg.jobType)
+    }
+    ControlSchemas.foreach { case (name, schema) =>
+      Tables.ensureControlTable(spark, controlDir, name, schema)
+    }
+
     // --- S2/F1: delta read from the last successful watermark ---
     // (read OUTSIDE the try, like the reference — main.py:821)
-    val wm = if (cfg.useWatermark) readHighWatermark(ctl("ledger"), cfg.jobType) else None
+    val wm = if (cfg.useWatermark)
+      readHighWatermark(readControl(spark, controlDir, "ledger"), cfg.jobType) else None
     val delta = wm.map(t => source.filter(col("updated_at") >= lit(t))).getOrElse(source)
 
     // The reference's run_job never lets an exception escape without a
@@ -140,8 +160,7 @@ object SyncJob {
     // runBody's success-ledger append is its LAST fatal step (cleanup
     // after it is non-fatal), so reaching this catch implies no success
     // row was written — the run can never leave two contradictory rows.
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    try runBody(spark, delta, cfg, controlDir, transport, runId, started, wm, cached)
+    try runBody(spark, delta, cfg, controlDir, transport, runId, started, wm)
     catch {
       case e: Exception =>
         EtlLog.error("job_exception",
@@ -155,91 +174,107 @@ object SyncJob {
             "error_count", "status")
         failedRow.write.mode(SaveMode.Append).parquet(s"$controlDir/ledger")
         Summary(runId, cfg.jobType, 0, 0, 0, 0, 1, "failed", wm.map(_.getTime))
-    } finally {
-      // caches are unpersisted on BOTH outcomes — a crashed run must not
-      // leak executor storage (StreamingSync runs this per micro-batch)
-      cached.foreach(df => try df.unpersist() catch { case _: Exception => () })
     }
   }
+
+  private val ControlSchemas = Seq(
+    "id_map" -> Tables.idMapSchema, "dlq" -> Tables.dlqSchema,
+    "ledger" -> Tables.runLedgerSchema)
+
+  private def readControl(spark: SparkSession, controlDir: String, name: String): DataFrame =
+    spark.read.schema(ControlSchemas.toMap.apply(name)).parquet(s"$controlDir/$name")
+
+  /** Outcome of a keyless row in the results file: never sent, DLQ'd. */
+  private final val Ambiguous = "ambiguous"
+
+  /** A sink input row: natural_key, existing_id, props, payload, updated_at. */
+  private type SinkIn = (String, Option[String], Map[String, String], String, java.sql.Timestamp)
 
   private def runBody(spark: SparkSession, delta: DataFrame, cfg: Config,
                       controlDir: String, transport: UpsertTransport,
                       runId: String, started: java.sql.Timestamp,
-                      wm: Option[java.sql.Timestamp],
-                      cached: scala.collection.mutable.ListBuffer[DataFrame]): Summary = {
+                      wm: Option[java.sql.Timestamp]): Summary = {
     import spark.implicits._
-    def ctl(name: String): DataFrame = spark.read.parquet(s"$controlDir/$name")
 
     // --- J1: existing-id lookup (AQE picks broadcast vs shuffle) ---
-    val idMap = ctl("id_map")
+    val idMap = readControl(spark, controlDir, "id_map")
       .filter(col("hubspot_object_type") === cfg.objectType)
       .select(col("natural_key").as("im_key"), col("hubspot_id").as("existing_id"))
-    // cache the JOIN OUTPUT (both branches below filter it): caching
-    // only `ready` would recompute the scan+join for every use of
-    // `ambiguous` (two counts + the DLQ write = three extra passes)
     val matched = delta.join(idMap, delta("natural_key") === col("im_key"), "left")
-      .drop("im_key")
-      .cache()
-    cached += matched
 
-    // --- F3: ambiguity guard — no key at all → DLQ, not the sink ---
-    val ready = matched.filter(col("natural_key").isNotNull)
-    val ambiguous = matched.filter(col("natural_key").isNull)
-
-    val ambiguousCount = ambiguous.count()
-    val readCount = ready.count() + ambiguousCount
-
-    // --- S6/S7: batched, retrying sink; results come back as a DF ---
+    // --- S6/S7 + F3: batched, retrying sink; results come back as a DF.
+    // A row with no key at all is ambiguous (F3): it bypasses the sink
+    // and lands in the results file as outcome "ambiguous" for the DLQ.
     val batchSize = cfg.batchSize
     val objectType = cfg.objectType
-    val sinkOut = ready
+    val sinkOut = matched
       .select(col("natural_key"), col("existing_id"), col("props"),
-        // DLQ payload fidelity (main.py:398): the failed record's full
-        // JSON payload, truncated to 90 000 chars, rides along with the
+        // DLQ payload fidelity (main.py:398): the record's full JSON
+        // payload, truncated to 90 000 chars, rides along with the
         // record so the DLQ write needs no join back to the source
-        substring(to_json(col("props")), 1, 90000).as("payload"))
-      .as[(String, Option[String], Map[String, String], String)]
-      .mapPartitions { it =>
+        substring(to_json(col("props")), 1, 90000).as("payload"),
+        col("updated_at"))
+      .as[SinkIn]
+      .mapPartitions { rows =>
         val upserter = new RetryingUpserter(transport,
           maxRequestsPerSec = cfg.maxRequestsPerSec)
-        it.grouped(batchSize).flatMap { chunk =>
-          val recs = chunk.map { case (k, id, props, _) => UpsertRecord(k, id, props) }
-          // upsertBatch results are order-aligned with its input; keep
-          // the payload only on failures so the durable results file
-          // stays lean at scale
+        val batch = scala.collection.mutable.ArrayBuffer.empty[SinkIn]
+        // upsertBatch results are order-aligned with its input; keep
+        // the payload only on failures so the durable results file
+        // stays lean at scale
+        def flush() = {
+          val chunk = batch.toSeq
+          batch.clear()
+          val recs = chunk.map { case (k, id, props, _, _) => UpsertRecord(k, id, props) }
           upserter.upsertBatch(objectType, recs).zip(chunk).map {
-            case (r, (_, _, _, payload)) =>
+            case (r, (_, _, _, payload, upd)) =>
               (r.naturalKey, r.hubspotId, r.outcome, r.error, r.attempts,
-                if (r.outcome == "failed") payload else null)
+                if (r.outcome == "failed") payload else null, upd)
           }
         }
-      }.toDF("natural_key", "hubspot_id", "outcome", "error", "attempts", "payload")
+        // batches hold keyed rows only, so their composition is the
+        // same as if keyless rows had been filtered out upstream
+        rows.flatMap {
+          case (null, _, _, payload, upd) =>
+            Seq((null, None, Ambiguous, None, 0, payload, upd))
+          case row =>
+            batch += row
+            if (batch.size == batchSize) flush() else Nil
+        } ++ (if (batch.nonEmpty) flush() else Nil)
+      }.toDF("natural_key", "hubspot_id", "outcome", "error", "attempts", "payload",
+        "updated_at")
     // The sink is non-idempotent at the HTTP level, so its output is
     // persisted durably in ONE pass and re-read for every downstream
     // use — a .cache() can silently recompute (evicted partitions, AQE
     // replans) which would re-send the batch.
-    sinkOut.write.mode(SaveMode.Overwrite).parquet(s"$controlDir/results_$runId")
-    val results = spark.read.parquet(s"$controlDir/results_$runId")
+    val resultsDir = s"$controlDir/results_$runId"
+    sinkOut.write.mode(SaveMode.Overwrite).parquet(resultsDir)
+    val results = spark.read.schema(sinkOut.schema).parquet(resultsDir)
 
-    // --- A4: outcome counters (distributed agg, no accumulators) ---
-    val counts = results.groupBy("outcome").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val created = counts.getOrElse("created", 0L)
-    val updated = counts.getOrElse("updated", 0L)
-    val failed = counts.getOrElse("failed", 0L)
-    val skipped = ambiguousCount
+    // --- A4 + T1: outcome counters (distributed agg, no accumulators)
+    // and the watermark candidate, max(updated_at) of the keyed rows
+    // (the tighter variant the reference's comment wishes for,
+    // main.py:838), in one pass ---
+    val byOutcome = results.groupBy("outcome")
+      .agg(count(lit(1)), max(col("updated_at"))).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), Option(r.getTimestamp(2)))).toMap
+    def outcomes(o: String): Long = byOutcome.get(o).fold(0L)(_._1)
+    val created = outcomes("created")
+    val updated = outcomes("updated")
+    val failed = outcomes("failed")
+    val skipped = outcomes(Ambiguous)
+    val readCount = byOutcome.values.map(_._1).sum
+    val maxUpdated = byOutcome.collect { case (o, (_, Some(t))) if o != Ambiguous => t }
+      .reduceOption((a, b) => if (a.after(b)) a else b)
 
-    // --- J5: merge new ids into the id map (idempotent re-runs) ---
+    // --- J5: merge new ids into the id map (idempotent re-runs), then
+    // swap it in by rename (see the object doc for the crash rule) ---
     val newIds = results.filter(col("hubspot_id").isNotNull && col("outcome") =!= "failed")
       .select(lit(cfg.objectType).as("hubspot_object_type"), col("natural_key"),
         col("hubspot_id"), lit(started).as("updated_at"))
-    val mergedIdMap = mergeIdMap(ctl("id_map"), newIds).cache()
-    cached += mergedIdMap
-    mergedIdMap.count() // materialize before overwrite of the source dir
-    mergedIdMap.write.mode(SaveMode.Overwrite).parquet(s"$controlDir/id_map_next")
-    // atomic-ish swap: write next, then overwrite canonical from next
-    spark.read.parquet(s"$controlDir/id_map_next")
-      .write.mode(SaveMode.Overwrite).parquet(s"$controlDir/id_map")
+    mergeIdMap(readControl(spark, controlDir, "id_map"), newIds)
+      .write.mode(SaveMode.Overwrite).parquet(s"$controlDir/id_map_next")
+    swapIdMap(spark, controlDir)
 
     // --- S5/T2: DLQ append — sink failures + ambiguous rows ---
     // `attempt` is the CROSS-RUN counter the reference keeps
@@ -261,7 +296,7 @@ object SyncJob {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.dlqSchema)
       else {
-        val priorAttempts = ctl("dlq")
+        val priorAttempts = readControl(spark, controlDir, "dlq")
           .filter(col("job_type") === cfg.jobType)
           .groupBy(col("natural_key").as("pk"), errorClass(col("error")).as("pe"))
           .agg(max(col("attempt")).as("prior"))
@@ -278,20 +313,16 @@ object SyncJob {
             col("error_txt").as("error"),
             (coalesce(col("prior"), lit(0L)) + 1L).as("attempt"))
       }
-    val ambDlq = ambiguous
+    val ambDlq = results.filter(col("outcome") === Ambiguous)
       .select(lit(started).as("ts"), lit(cfg.jobType).as("job_type"),
         lit(null).cast("string").as("natural_key"),
         lit(cfg.objectType).as("hubspot_object_type"),
-        substring(to_json(col("props")), 1, 90000).as("payload"),
+        col("payload"),
         lit("ambiguous: no natural key").as("error"),
         lit(1L).as("attempt"))
     failDlq.unionByName(ambDlq).write.mode(SaveMode.Append).parquet(s"$controlDir/dlq")
 
-    // --- T1: watermark = max(updated_at) of the processed set (the
-    // tighter variant the reference's comment wishes for, main.py:838) ---
     val status = if (failed == 0) "success" else "partial"
-    val maxUpdated = ready.agg(max(col("updated_at"))).collect().headOption
-      .flatMap(r => Option(r.getTimestamp(0)))
     val newWm = if (failed == 0) maxUpdated.orElse(wm) else wm // hold on failure
 
     // --- S4: ledger append ---
@@ -309,7 +340,7 @@ object SyncJob {
       // the per-run sink-results dir has served every consumer (counts,
       // id-map merge, DLQ); drop it or StreamingSync accumulates one
       // directory per micro-batch forever
-      val resultsPath = new org.apache.hadoop.fs.Path(s"$controlDir/results_$runId")
+      val resultsPath = new Path(resultsDir)
       val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(resultsPath, true)
     } catch {
@@ -325,6 +356,19 @@ object SyncJob {
       "high_watermark_ms" -> newWm.map(_.getTime).getOrElse(-1L))
     Summary(runId, cfg.jobType, readCount, created, updated, skipped, failed,
       status, newWm.map(_.getTime))
+  }
+
+  /** Publishes `id_map_next` as `id_map`: delete, then rename. The
+    * session's cached plans over either path are refreshed, since the
+    * files under them changed outside Spark's writer. */
+  private def swapIdMap(spark: SparkSession, controlDir: String): Unit = {
+    val live = new Path(s"$controlDir/id_map")
+    val next = new Path(s"$controlDir/id_map_next")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(live, true)
+    if (!fs.rename(next, live))
+      throw new java.io.IOException(s"id-map swap: rename $next -> $live failed")
+    Seq(live, next).foreach(p => spark.catalog.refreshByPath(p.toString))
   }
 
   /** Stable error identity for attempt counting and alerting: the

@@ -106,8 +106,15 @@ class HttpSpec extends SparkSpec {
     }
     assert(seen.size == 1)
     assert(seen.peek() == """{"text": "alert: key=k1 attempts=5"}""")
-    // dead endpoint: must not throw (alerting never fails the run)
-    Pipelines.webhookPoster("http://127.0.0.1:1/nope")("x")
+    // dead endpoint (closed loopback port): must not throw (alerting
+    // never fails the run), but must log the failure with its cause
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try Pipelines.webhookPoster("http://127.0.0.1:1/nope")("x")
+    finally System.setErr(saved)
+    val logged = err.toString("UTF-8").linesIterator.find(_.contains("alert_post_failed"))
+    assert(logged.exists(_.contains("ConnectException")), err.toString("UTF-8"))
   }
 
   test("webhook body stays valid JSON when the message embeds raw HTTP bodies") {

@@ -309,6 +309,115 @@ class PipelineSpec extends SparkSpec {
     assert(s3.createdCount == 1 && s3.status == "success")
   }
 
+  test("control tables under a file:// URI controlDir: created once, then reused") {
+    val dir = "file://" + freshDir()
+    val cfg = SyncJob.Config("patients", "contacts", nowMs = 1750000000000L)
+    val s1 = SyncJob.run(spark, mkSource(Seq("A" -> "2024-01-01 00:00:00")), cfg, dir,
+      new StubTransport)
+    assert(s1.createdCount == 1 && s1.status == "success")
+    // the second run must find the id map written by the first (an
+    // existence check that misreads the URI would recreate it empty and
+    // turn the update into a second create)
+    val s2 = SyncJob.run(spark, mkSource(Seq("A" -> "2024-02-01 00:00:00")),
+      cfg.copy(nowMs = 1750000100000L), dir, new StubTransport)
+    assert(s2.createdCount == 0 && s2.updatedCount == 1, s2)
+    assert(spark.read.parquet(s"$dir/ledger").count() == 2)
+    assert(spark.read.parquet(s"$dir/id_map").collect().map(_.getString(1)).toSeq == Seq("A"))
+  }
+
+  /** A control dir after one successful run that mapped A and B. */
+  private def mappedAB(): (String, SyncJob.Config) = {
+    val dir = freshDir()
+    val cfg = SyncJob.Config("patients", "contacts", nowMs = 1750000000000L)
+    SyncJob.run(spark, mkSource(Seq("A" -> "2024-01-01 00:00:00", "B" -> "2024-01-02 00:00:00")),
+      cfg, dir, new StubTransport)
+    (dir, cfg.copy(nowMs = 1750000100000L))
+  }
+
+  private def idMapKeys(dir: String): Set[String] =
+    spark.read.parquet(s"$dir/id_map").collect().map(_.getString(1)).toSet
+
+  test("id-map swap crash window: a committed id_map_next is restored, never an empty map") {
+    val (dir, cfg) = mappedAB()
+    // a crash between the swap's delete and its rename leaves only the
+    // committed next map on disk
+    Files.move(java.nio.file.Paths.get(dir, "id_map"), java.nio.file.Paths.get(dir, "id_map_next"))
+    assert(new java.io.File(s"$dir/id_map_next/_SUCCESS").exists())
+    val s = SyncJob.run(spark,
+      mkSource(Seq("A" -> "2024-03-01 00:00:00", "C" -> "2024-03-02 00:00:00")),
+      cfg, dir, new StubTransport)
+    // A is already mapped → update; only the new key C is created
+    assert(s.createdCount == 1 && s.updatedCount == 1 && s.status == "success", s)
+    assert(idMapKeys(dir) == Set("A", "B", "C"))
+    assert(!new java.io.File(s"$dir/id_map_next").exists())
+  }
+
+  test("id-map swap crash window: a committed id_map_next beside the old map wins") {
+    val (dir, cfg) = mappedAB()
+    // a crash after the merged map committed but before the old one was
+    // deleted: both exist, and only the next map knows C's id
+    spark.read.parquet(s"$dir/id_map")
+      .union(Seq(("contacts", "C", "ID-C", java.sql.Timestamp.valueOf("2025-06-15 00:00:00")))
+        .toDF("hubspot_object_type", "natural_key", "hubspot_id", "updated_at"))
+      .write.parquet(s"$dir/id_map_next")
+    val s = SyncJob.run(spark, mkSource(Seq("C" -> "2024-03-02 00:00:00")),
+      cfg, dir, new StubTransport)
+    assert(s.createdCount == 0 && s.updatedCount == 1, s)
+    assert(idMapKeys(dir) == Set("A", "B", "C"))
+  }
+
+  test("id-map swap crash window: an id_map_next without _SUCCESS is ignored") {
+    val (dir, cfg) = mappedAB()
+    // an interrupted write of the next map: files, but no commit marker
+    Seq(("contacts", "Z", "ID-Z", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("hubspot_object_type", "natural_key", "hubspot_id", "updated_at")
+      .write.parquet(s"$dir/id_map_next")
+    new java.io.File(s"$dir/id_map_next/_SUCCESS").delete()
+    val s = SyncJob.run(spark,
+      mkSource(Seq("A" -> "2024-03-01 00:00:00", "Z" -> "2024-03-02 00:00:00")),
+      cfg, dir, new StubTransport)
+    // the live map decides: A updates, Z (only in the torn write) is new
+    assert(s.createdCount == 1 && s.updatedCount == 1, s)
+    assert(idMapKeys(dir) == Set("A", "B", "Z"))
+  }
+
+  test("one run's Spark work is pinned: job count, and id_map scanned by join and merge only") {
+    val (dir, cfg) = mappedAB()
+    val src = mkSource(Seq("A" -> "2024-03-01 00:00:00", "C" -> "2024-03-02 00:00:00",
+      "FAIL400-D" -> "2024-03-03 00:00:00", (null: String) -> "2024-03-04 00:00:00"))
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    def idMapScans(p: SparkPlanInfo): Int =
+      (if (p.nodeName.startsWith("Scan") &&
+        p.metadata.get("Location").exists(_.contains(s"$dir/id_map]"))) 1 else 0) +
+        p.children.map(idMapScans).sum
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val lst = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => scans.addAndGet(idMapScans(s.sparkPlanInfo))
+        case _ => ()
+      }
+    }
+    org.apache.spark.graft.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(lst)
+    val s = try {
+      val s = SyncJob.run(spark, src, cfg, dir, new StubTransport)
+      org.apache.spark.graft.ListenerBusAccess.drain(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(lst)
+    assert(s.readCount == 4 && s.createdCount == 1 && s.updatedCount == 1 &&
+      s.errorCount == 1 && s.skippedCount == 1, s)
+    info(s"jobs=${jobs.get} id_map scans=${scans.get}")
+    // every phase (watermark, sink, counts, merge, DLQ, ledger) is one
+    // action; a cached copy of the merged map or a copy-back of
+    // id_map_next would add jobs and, for the former, a third scan
+    assert(jobs.get <= 11, s"${jobs.get} Spark jobs for one run")
+    assert(scans.get == 2, s"id_map scanned ${scans.get} times")
+  }
+
   test("alerts fire at >=5 attempts only (A3; main.py:716,764)") {
     val dlq = Seq(
       ("patients", "k1", "HTTP 500", 4L),
