@@ -37,20 +37,25 @@ object Bench {
         // columns go unread — the instrument would then time a smaller
         // query than the one users run. The noop DSv2 sink computes
         // every output column of every row and discards them.
-        val ok = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-        } catch { case _: Throwable => false }
+        val failure = try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
+        } catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
         // no cross-query or cross-rep cache leaks: every rep pays its
         // own cache build, min still strips host-steal noise
         finally spark.sqlContext.clearCache()
-        ((System.nanoTime() - t0) / 1e9, ok)
+        ((System.nanoTime() - t0) / 1e9, failure)
       }
       // a FAILED rep must never win the min — a fast crash would
       // otherwise report as a phantom speedup; a query with zero
       // successful reps reports -1 (unambiguous failure marker)
-      val good = times.filter(_._2).map(_._1)
+      val good = times.filter(_._2.isEmpty).map(_._1)
       val best = if (good.nonEmpty) good.min else -1.0
-      System.err.println(s"""[bench] {"query":"$name","sec":${ms3(best)},"reps":${times.map(t => if (t._2) ms3(t._1) else "-1").mkString("[", ",", "]")}}""")
+      val errors = times.flatMap(_._2).distinct
+      val errorsJson =
+        if (errors.isEmpty) ""
+        else errors.map(e => "\"" + pipeline.EtlLog.escape(e) + "\"")
+          .mkString(""","errors":[""", ",", "]")
+      System.err.println(s"""[bench] {"query":"$name","sec":${ms3(best)},"reps":${times.map(t => if (t._2.isEmpty) ms3(t._1) else "-1").mkString("[", ",", "]")}$errorsJson}""")
       name -> best
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + ms3(v) }
@@ -259,7 +264,10 @@ object Bench {
           s""""sf":"$sfDir"}"""
         java.nio.file.Files.writeString(bestPath, ledger + "\n")
       }
-    } catch { case _: Exception => () } // artifact is best-effort
+    } catch { // artifact is best-effort, but a failed write says why
+      case e: Exception => System.err.println(
+        s"[bench] WARN artifact write failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
     println(line)
     spark.stop()
   }

@@ -1479,9 +1479,9 @@ object Extensions {
     *                   contract of the whole search.
     */
   /** LSH index default parameters — ONE definition consumed by every
-    * LSH call site ([[lshBucketRows]]/[[annTopK]] defaults,
-    * [[lshPurgeSearch]], [[lshBucketsFixture]], the incremental
-    * re-cap) so the serve, arrival, compaction, purge, and refresh
+    * LSH call site ([[lshBucketRows]]/[[annTopK]] defaults and the
+    * [[LshIndex]] lifecycle binding) so the serve, arrival,
+    * compaction, purge, and refresh
     * verbs can never build or anti-join a differently-parameterized
     * bucket fixture than the one `ext_ann_lsh` serves — the
     * diverging-artifact failure the [[lshStoredBuckets]] docstring
@@ -1620,9 +1620,9 @@ object Extensions {
   /** The stored LSH index — the capped (corpus_id, c_bucket) table,
     * fixture-persisted per (data, planes/cap params) when the source
     * is named. ONE builder shared by [[annTopK]]'s default path and
-    * the purge verb below, so a takedown anti-joins the SAME artifact
-    * searches serve (a diverging copy would purge a table nobody
-    * reads). */
+    * every [[LshIndex]] lifecycle verb, so a takedown anti-joins the
+    * SAME artifact searches serve (a diverging copy would purge a
+    * table nobody reads). */
   private[graft] def lshStoredBuckets(emb: DataFrame, nTables: Int,
       bitsPerTable: Int, bucketCap: Int,
       indexSrc: Option[String]): DataFrame = {
@@ -1643,38 +1643,6 @@ object Extensions {
 
   val annLsh: Q = Q("ext_ann_lsh",
     (spark, sfDir) => annLshSearch(spark, sfDir), None)
-
-  /** LSH purge — E71's vector-artifact shape applied to the bucket
-    * table: index entries are per-vector pure functions of the frozen
-    * hyperplanes, so a takedown is ONE broadcast anti-join on the
-    * stored capped table (entry I/O only — planes untouched, corpus
-    * never re-hashed), served to the same [[annTopK]] search path via
-    * `buckets0`. Results can never contain a purged id: the bucket
-    * table is the only candidate source. Cap interaction, same debt
-    * class as ext_ivfpq_purge's cell cap: [[capBuckets]] ranked rows
-    * over the PRE-purge bucket population, so under a BINDING cap a
-    * purged bucket can hold slightly fewer survivors than a
-    * from-scratch build over the filtered corpus would keep — but
-    * never a different SET for the rows it does hold (the cap's
-    * hash order is per-row, so survivors of the stored top-`cap` are
-    * a prefix-subset of the filtered build's top-`cap`), and the
-    * next compaction cadence (ext_lsh_compact) re-resolves the cap
-    * over the post-purge population. At driver SFs the cap has
-    * asserted headroom and equality to the filtered rebuild is exact
-    * (PurgeSpec). */
-  private[graft] def lshPurgeSearch(spark: SparkSession,
-                                    sfDir: String): DataFrame = {
-    val (emb, qids) = annInputs(spark, sfDir, None)
-    val stored = lshStoredBuckets(emb, LshTables, LshBits,
-      LshBucketCap, indexSrc = Some(s"$sfDir/embeddings.parquet"))
-    val purged = purgeVecIds(spark, sfDir)
-    val buckets = stored.join(broadcast(purged),
-      col("corpus_id") === col("vec_id"), "left_anti")
-    annTopK(emb, qids, buckets0 = Some(buckets))
-  }
-
-  val lshPurge: Q = Q("ext_lsh_purge",
-    (spark, sfDir) => lshPurgeSearch(spark, sfDir), None)
 
   // =====================================================================
   // E3c: IVF (inverted-file) ANN — the coarse-quantizer scale path.
@@ -3035,51 +3003,11 @@ object Extensions {
           argmaxCell(col(s"sub_$mi"), cbs(mi))): _*).as("code"))
   }
 
-  /** The incremental IVFPQ search: merged (stored standing-corpus
-    * combined index ∪ one-scan-encoded batch) served to [[ivfpqTopK]]
-    * via `codes0`. Models are the frozen FULL-corpus fixtures, so the
-    * merged index is row-identical to the monolithic `ivfpq-codes` at
-    * driver SFs (cap headroom asserted) and the search output EQUALS
-    * ext_topk_ivfpq's — asserted in ExtensionsSpec; no oracle for the
-    * same reason ext_topk_ivfpq has none. PlanSpec gates the plan: the
-    * standing corpus is served from its stored fixture (plan-time
-    * partition pruning included — the probed-cell predicate pushes
-    * through the union into the hive-partitioned half), and the only
-    * corpus-data scans are the batch encode plus the fixed query-side
-    * fetches. */
-  val ivfpqIncremental: Q = Q("ext_ivfpq_incremental",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-      val cs = ivfCentroids(emb, centroidSrc = Some(src))
-      if (cbs.isEmpty || cs.isEmpty) emptyTopK(pqNormalize(emb))
-      else {
-        // the stored standing-corpus half: the full ivfpqCellCodes
-        // discipline (cell-partitioned layout, relative cap, orphaned
-        // by either retrained model) applied to the 90% split
-        val corpusCodes = ivfpqCellCodes(corpus, cbs, cs, Some(src))
-        // batch-encode branch truncated with a LAZY localCheckpoint —
-        // ivfpqRefreshSearch's measured reason (the optimizer re-walks
-        // the unrolled encode subtree under every downstream
-        // join/window); the O(batch) code rows are what a production
-        // arrival appends. The stored branch stays lazy: probed-cell
-        // PartitionFilters + the PlanSpec stored-serve gate unchanged.
-        val merged = corpusCodes.unionByName(
-          deltaCheckpoint(ivfpqEncodeAssign(batch, cbs, cs)))
-        ivfpqTopK(emb, annQueryIds(emb), src = Some(src),
-          codes0 = Some(merged), cbs0 = Some(cbs), cs0 = Some(cs))
-      }
-    },
-    None)
-
   // =====================================================================
   // E45: combined-index COMPACTION — the missing third verb of the
   // index lifecycle (build → arrive → COMPACT → retrain). The arrival
-  // contract deliberately leaves two debts open, both documented at
-  // [[ivfpqIncremental]]: batch rows ride UNCAPPED between retrains
+  // contract deliberately leaves two debts open (see the code-index
+  // lifecycle section): batch rows ride UNCAPPED between retrains
   // (re-resolving the relative cap per arrival would cost an
   // index-sized count per search), and every read pays a union of the
   // stored base plus the accumulated batch appends — at 100 TB that
@@ -3176,76 +3104,6 @@ object Extensions {
       // compact2: cap-derivation change — see ivfpqCompactedCodes
       s"auto${IvfpqCellSkewFactor}_k${kPerHalf}x${kPerHalf}_compact2",
       kPerHalf * kPerHalf, totalRows)
-
-  /** The post-compaction IMI-PQ search — [[imipqIncremental]]'s state
-    * after the compaction job, served entirely from the compacted
-    * table. Output EQUALS `ext_topk_imipq` at driver SFs (asserted);
-    * PlanSpec gates the settled debts on the product layout. */
-  val imipqCompact: Q = Q("ext_imipq_compact",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-      val cs0 = imiCentroids(emb, 0, ImiK, Some(src))
-      val cs1 = imiCentroids(emb, 1, ImiK, Some(src))
-      if (cbs.isEmpty || cs0.isEmpty || cs1.isEmpty)
-        emptyTopK(pqNormalize(emb))
-      else {
-        val compacted = imipqCompactedCodes(
-          imipqCellCodes(corpus, cbs, cs0, cs1, Some(src)),
-          imipqEncodeAssign(batch, cbs, cs0, cs1), src,
-          // uncapped logical rows for the cap — see ivfpqCompact
-          totalRows = Some(
-            imiCellTable(corpus, cs0, cs1, Some(src)).count() +
-            batch.count())) // 1 encode row per vector — see ivfpqCompact
-        imipqTopK(emb, annQueryIds(emb), src = Some(src),
-          codes0 = Some(compacted), cbs0 = Some(cbs),
-          csH0 = Some(cs0), csH1 = Some(cs1))
-      }
-    },
-    None)
-
-  /** The post-compaction search: [[ivfpqIncremental]]'s state after
-    * the compaction job — served entirely from the compacted table.
-    * Output EQUALS both `ext_ivfpq_incremental` and (at driver SFs,
-    * cap headroom) the monolithic `ext_topk_ivfpq` — asserted in
-    * ExtensionsSpec; rows-only for the same approximate-index reason.
-    * PlanSpec gates the settled debts: the search plan scans
-    * `ivfpq-codes-compact` with probed-cell PartitionFilters, NO
-    * union, and exactly the TWO fixed query-side raw fetches (the
-    * incremental plan carries three — its per-search batch encode is
-    * gone, paid once at compaction). */
-  val ivfpqCompact: Q = Q("ext_ivfpq_compact",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-      val cs = ivfCentroids(emb, centroidSrc = Some(src))
-      if (cbs.isEmpty || cs.isEmpty) emptyTopK(pqNormalize(emb))
-      else {
-        val corpusCodes = ivfpqCellCodes(corpus, cbs, cs, Some(src))
-        val compacted = ivfpqCompactedCodes(corpusCodes,
-          ivfpqEncodeAssign(batch, cbs, cs), src,
-          // the relative cap re-derives from the UNCAPPED logical row
-          // count (the stored per-vector cell table is the persisted
-          // ingested-rows stat — its fixture count is metadata-only),
-          // never from counts of already-capped tables (round-10
-          // ADVICE: that ratchets the cap across compactions).
-          // By-name: evaluated only on a cold compact build.
-          // batch rows = batch VECTORS (the encode writes exactly one
-          // row per vector by construction — compactReport pins this),
-          // so the count never pays the encode's model FLOPs
-          totalRows = Some(ivfCellTable(corpus, cs, Some(src)).count() +
-            batch.count()))
-        ivfpqTopK(emb, annQueryIds(emb), src = Some(src),
-          codes0 = Some(compacted), cbs0 = Some(cbs), cs0 = Some(cs))
-      }
-    },
-    None)
 
   // =====================================================================
   // E44: residual-encoded IVFPQ — the TEXTBOOK formulation (Jégou et
@@ -3482,81 +3340,6 @@ object Extensions {
 
   val topkIvfpqr: Q = Q("ext_topk_ivfpqr",
     (spark, sfDir) => ivfpqrSearch(spark, sfDir), None)
-
-  /** The frozen full-corpus residual-model triple (centroids, cell
-    * means, residual codebook) shared by the residual maintenance
-    * pair below — loading them once per query keeps the model-fixture
-    * jobs off the per-search path ([[ivfpqTopK]]'s caller contract). */
-  private def ivfpqrModels(emb: DataFrame, src: String):
-      Option[(Array[Array[Double]], Array[Array[Double]],
-        Array[Array[Array[Double]]])] = {
-    val cs = ivfCentroids(emb, centroidSrc = Some(src))
-    if (cs.isEmpty) return None
-    val ms = ivfCellMeans(emb, cs, Some(src))
-    val cbs = pqrCodebooks(emb, cs, ms, Some(src))
-    if (cbs.isEmpty) None else Some((cs, ms, cbs))
-  }
-
-  /** Incremental residual-index maintenance — [[ivfpqIncremental]]'s
-    * arrival contract for the residual geometry: the standing corpus's
-    * cell-partitioned `ivfpqr-codes` stored once under the THREE
-    * frozen full-corpus models, each batch encoded (assignment +
-    * residual + M codes) in ONE O(batch) scan and unioned at read.
-    * Output equals `ext_topk_ivfpqr` at driver SFs (asserted);
-    * PlanSpec gates the stored serve + raw-scan budget + pruning
-    * through the union. */
-  val ivfpqrIncremental: Q = Q("ext_ivfpqr_incremental",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      ivfpqrModels(emb, src) match {
-        case None => emptyTopK(pqNormalize(emb))
-        case Some((cs, ms, cbs)) =>
-          // batch-encode branch truncated — ivfpqIncremental's reason
-          val merged = ivfpqrCellCodes(corpus, cbs, cs, ms, Some(src))
-            .unionByName(deltaCheckpoint(
-              ivfpqrEncodeAssign(batch, cbs, cs, ms)))
-          ivfpqrTopK(emb, annQueryIds(emb), src = Some(src),
-            codes0 = Some(merged), cbs0 = Some(cbs),
-            cs0 = Some(cs), ms0 = Some(ms))
-      }
-    },
-    None)
-
-  /** The post-compaction residual search — [[ivfpqCompact]]'s fold for
-    * the residual geometry, via the shared [[compactedCellCodes]].
-    * Output equals `ext_topk_ivfpqr` (asserted); PlanSpec gates the
-    * settled debts on the `ivfpqr-codes-compact` layout. */
-  val ivfpqrCompact: Q = Q("ext_ivfpqr_compact",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      ivfpqrModels(emb, src) match {
-        case None => emptyTopK(pqNormalize(emb))
-        case Some((cs, ms, cbs)) =>
-          val compacted = compactedCellCodes(
-            ivfpqrCellCodes(corpus, cbs, cs, ms, Some(src))
-              .unionByName(ivfpqrEncodeAssign(batch, cbs, cs, ms)),
-            "ivfpqr-codes-compact", src,
-            s"auto${IvfpqCellSkewFactor}_c16_compact2", 16, // cap-derivation bump
-            // uncapped logical rows for the cap — see ivfpqCompact.
-            // The residual index stores no uncapped per-vector table of
-            // its own, but its cells ARE the flat family's unit-centroid
-            // cells, so the flat stored cell table (same corpus split,
-            // same centroids, one row per ingested vector) is the
-            // persisted ingested-rows stat here too.
-            totalRows = Some(ivfCellTable(corpus, cs, Some(src)).count() +
-              batch.count())) // 1 encode row per vector — see ivfpqCompact
-          ivfpqrTopK(emb, annQueryIds(emb), src = Some(src),
-            codes0 = Some(compacted), cbs0 = Some(cbs),
-            cs0 = Some(cs), ms0 = Some(ms))
-      }
-    },
-    None)
 
   // =====================================================================
   // E41: IMI — inverted multi-index (Babenko & Lempitsky, CVPR 2012,
@@ -3869,38 +3652,6 @@ object Extensions {
       array((0 until m).map(mi =>
         argmaxCell(col(s"sub_$mi"), cbs(mi))): _*).as("code"))
   }
-
-  /** Incremental IMI-PQ maintenance: the stored standing-corpus
-    * combined index ∪ the one-scan-encoded batch, served to
-    * [[imipqTopK]] via `codes0` — [[ivfpqIncremental]]'s arrival
-    * contract with the product coarse quantizer. Output equals
-    * `ext_topk_imipq` at driver SFs (ExtensionsSpec); PlanSpec gates
-    * the stored corpus serve, the raw-scan count, and probed-cell
-    * pruning through the union. Retrain/compaction cadence is the
-    * drift rule, as for every PQ-family index. */
-  val imipqIncremental: Q = Q("ext_imipq_incremental",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val src = s"$sfDir/embeddings.parquet"
-      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-      val cs0 = imiCentroids(emb, 0, ImiK, Some(src))
-      val cs1 = imiCentroids(emb, 1, ImiK, Some(src))
-      if (cbs.isEmpty || cs0.isEmpty || cs1.isEmpty)
-        emptyTopK(pqNormalize(emb))
-      else {
-        val corpusCodes = imipqCellCodes(corpus, cbs, cs0, cs1, Some(src))
-        // batch-encode branch truncated — ivfpqIncremental's reason
-        val merged = corpusCodes
-          .unionByName(deltaCheckpoint(
-            imipqEncodeAssign(batch, cbs, cs0, cs1)))
-        imipqTopK(emb, annQueryIds(emb), src = Some(src),
-          codes0 = Some(merged), cbs0 = Some(cbs),
-          csH0 = Some(cs0), csH1 = Some(cs1))
-      }
-    },
-    None)
 
   // =====================================================================
   // Incremental vector-index maintenance — ext_dedup_incremental's
@@ -4353,8 +4104,13 @@ object Extensions {
     } catch {
       // the fixture is an optimization, never a point of failure: on a
       // read-only cwd, disk-full, unsupported atomic move, or any
-      // publish race fallout, compute the frame in-session instead
-      case _: Exception => live
+      // publish race fallout, compute the frame in-session instead —
+      // with one structured line (fixture_build's shape), so a fixture
+      // that never serves shows up in the run's own output
+      case e: Exception =>
+        graft.pipeline.EtlLog.error("fixture_fallback", "family" -> family,
+          "src" -> srcPath, "error" -> s"${e.getClass.getName}: ${e.getMessage}")
+        live
     }
   }
 
@@ -5916,76 +5672,6 @@ object Extensions {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
-  /** IVFPQ purge: the stored cell-partitioned code table minus the
-    * purged ids (one broadcast anti-join — code-row I/O, models
-    * untouched), served to the exact ivfpq search path. See the E71
-    * section note for the cap semantics compaction settles. */
-  private[graft] def ivfpqPurgeSearch(spark: SparkSession,
-                                      sfDir: String): DataFrame = {
-    val (emb, qids) = annInputs(spark, sfDir, None)
-    val src = Some(s"$sfDir/embeddings.parquet")
-    val cbs = pqCodebooks(emb, codebookSrc = src)
-    val cs = ivfCentroids(emb, centroidSrc = src)
-    if (cbs.isEmpty || cs.isEmpty)
-      return ivfpqTopK(emb, qids, src = src) // empty-corpus guard
-    val codes = ivfpqCellCodes(emb, cbs, cs, src)
-      .join(broadcast(purgeVecIds(spark, sfDir)),
-        col("corpus_id") === col("vec_id"), "left_anti")
-    ivfpqTopK(emb, qids, src = src, codes0 = Some(codes),
-      cbs0 = Some(cbs), cs0 = Some(cs))
-  }
-
-  val ivfpqPurge: Q = Q("ext_ivfpq_purge",
-    (spark, sfDir) => ivfpqPurgeSearch(spark, sfDir), None)
-
-  /** IMI-PQ purge — [[ivfpqPurgeSearch]]'s broadcast anti-join on the
-    * stored product-cell code table, served to [[imipqTopK]] via
-    * `codes0` (all three frozen models untouched). Completes the E71
-    * invariant for the product-routed family: before round 13 a
-    * takedown against a deployment serving ext_topk_imipq forced a
-    * full index rebuild — the exact cost the index exists to avoid.
-    * Same cell-cap debt as ivfpq's, settled by ext_imipq_compact. */
-  private[graft] def imipqPurgeSearch(spark: SparkSession,
-                                      sfDir: String): DataFrame = {
-    val (emb, qids) = annInputs(spark, sfDir, None)
-    val src = Some(s"$sfDir/embeddings.parquet")
-    val cbs = pqCodebooks(emb, codebookSrc = src)
-    val cs0 = imiCentroids(emb, 0, ImiK, src)
-    val cs1 = imiCentroids(emb, 1, ImiK, src)
-    if (cbs.isEmpty || cs0.isEmpty || cs1.isEmpty)
-      return imipqTopK(emb, qids, src = src) // empty-corpus guard
-    val codes = imipqCellCodes(emb, cbs, cs0, cs1, src)
-      .join(broadcast(purgeVecIds(spark, sfDir)),
-        col("corpus_id") === col("vec_id"), "left_anti")
-    imipqTopK(emb, qids, src = src, codes0 = Some(codes),
-      cbs0 = Some(cbs), csH0 = Some(cs0), csH1 = Some(cs1))
-  }
-
-  val imipqPurge: Q = Q("ext_imipq_purge",
-    (spark, sfDir) => imipqPurgeSearch(spark, sfDir), None)
-
-  /** Residual-IVFPQ purge — the same anti-join on the stored
-    * residual-code table, served to [[ivfpqrTopK]] (centroids, cell
-    * means, and residual codebook all frozen). Completes E71 for the
-    * residual family; cap debt settled by ext_ivfpqr_compact. */
-  private[graft] def ivfpqrPurgeSearch(spark: SparkSession,
-                                       sfDir: String): DataFrame = {
-    val (emb, qids) = annInputs(spark, sfDir, None)
-    val src = s"$sfDir/embeddings.parquet"
-    ivfpqrModels(emb, src) match {
-      case None => ivfpqrTopK(emb, qids, src = Some(src)) // empty guard
-      case Some((cs, ms, cbs)) =>
-        val codes = ivfpqrCellCodes(emb, cbs, cs, ms, Some(src))
-          .join(broadcast(purgeVecIds(spark, sfDir)),
-            col("corpus_id") === col("vec_id"), "left_anti")
-        ivfpqrTopK(emb, qids, src = Some(src), codes0 = Some(codes),
-          cbs0 = Some(cbs), cs0 = Some(cs), ms0 = Some(ms))
-    }
-  }
-
-  val ivfpqrPurge: Q = Q("ext_ivfpqr_purge",
-    (spark, sfDir) => ivfpqrPurgeSearch(spark, sfDir), None)
-
   // =====================================================================
   // E71b: substring-index purge — the fourth artifact class, and the
   // one where deletion SPLITS the stored columns: gram COUNTS have an
@@ -6901,13 +6587,8 @@ object Extensions {
   // familiar cell-cap debt; RefreshSpec asserts the refreshed search
   // equals a from-scratch snapshot-B build under the same models.
   // Rows-only: approximate index by design (ext_topk_ivfpq's reason).
-  //
-  // The search runs with src=None and emb = the snapshot-B vectors:
-  // the int8-rerank fixture is keyed to the FULL table's original
-  // content, and a changed vector's raw content differs — serving
-  // that fixture would rerank stale bytes. The stored artifacts this
-  // query serves are the snapshot-A code fixture and the frozen
-  // models; rerank reads the B vectors live (delta-correct).
+  // The verb itself is the generic refresh of the code-index lifecycle
+  // section below; this section holds the snapshot vectors and diff.
   // =====================================================================
   /** Vector snapshot A/B — [[snapshotDocsA]]'s derivation on vec_id
     * buckets, with changed vectors negated. */
@@ -6974,184 +6655,268 @@ object Extensions {
     (df, n.longValue())
   }
 
-  /** The refreshed snapshot-B ivfpq search — factored for RefreshSpec's
-    * equality-to-rebuilt assertion. */
-  private[graft] def ivfpqRefreshSearch(spark: SparkSession,
-                                        sfDir: String): DataFrame = {
-    val vecsA = snapshotVecsA(spark, sfDir)
-    val vecsB = snapshotVecsB(spark, sfDir)
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val src = s"$sfDir/embeddings.parquet"
-    // frozen FULL-corpus models — the arrival contract: a refresh
-    // never retrains (drift is the retrain trigger, E63's rule)
-    val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-    val cs = ivfCentroids(emb, centroidSrc = Some(src))
-    if (cbs.isEmpty || cs.isEmpty)
-      return ivfpqTopK(vecsB, annQueryIds(vecsB)) // empty-corpus guard
-    val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    // purge half: anti-join the stored snapshot-A code table (cell-
-    // partitioned fixture, models untouched); arrival half: ONE
-    // O(delta) encode+assign scan of the fresh B vectors
-    val codesA = ivfpqCellCodes(vecsA, cbs, cs, Some(src))
-    // the delta-encode branch is truncated with a LAZY localCheckpoint
-    // (round 14, measured): serving the search over the raw
-    // union-with-encode plan made Catalyst re-optimize the ~300-node
-    // encode expression subtree under every downstream join/window —
-    // the ablation read the full refresh search at ~2× the sum of its
-    // parts. The checkpoint materializes O(delta) code rows (exactly
-    // what a production arrival writes) on first use, keeps the stored
-    // branch lazy (probed-cell PartitionFilters + the PlanSpec
-    // stored-serve/LeftAnti gates untouched), and cut the registered
-    // verb ~40% at sf0.1. Search output identical: same rows, same
-    // deterministic rank tiebreaks.
-    val refreshed = codesA
-      .join(stale, col("corpus_id") === col("vec_id"), "left_anti")
-      .unionByName(deltaCheckpoint(
-        ivfpqEncodeAssign(vecsB.join(fresh, Seq("vec_id")), cbs, cs)))
-    ivfpqTopK(vecsB, annQueryIds(vecsB), codes0 = Some(refreshed),
-      cbs0 = Some(cbs), cs0 = Some(cs))
+  // =====================================================================
+  // The code-index lifecycle, written ONCE. Every stored vector index
+  // (ivfpq, imipq, ivfpqr, lsh) is maintained by the same four verbs
+  // under its FROZEN full-corpus models — no verb retrains (drift is
+  // the retrain trigger: ext_pq_incremental / ext_ivf_incremental):
+  //  * incremental (E35/E36/E39/E43): the stored standing-corpus split
+  //    ∪ the batch's one-scan arrival rows, settled, served. Rows are
+  //    per-vector pure functions of the frozen models, so the merged
+  //    index equals the monolithic one while the cap has headroom.
+  //  * compact (E45/E47/E50): that union folded into ONE fresh stored
+  //    table — the arrival debts (uncapped batch rows, per-batch small
+  //    files, a per-search union) paid once, reading only index rows
+  //    plus the O(batch) encode, never the raw corpus.
+  //  * purge (E71): one broadcast anti-join of the takedown ids on the
+  //    stored full-corpus table. The index is the only candidate
+  //    source, so no purged id can be returned; a bound cell/bucket cap
+  //    was resolved over the pre-purge rows (the debt compact settles).
+  //  * refresh (E76c/E76d): purge + arrive driven by the snapshot A/B
+  //    vector diff — stale ids anti-joined out of the stored snapshot-A
+  //    index, fresh vectors through ONE O(delta) arrival scan. The
+  //    serve runs src=None on the B vectors: the int8-rerank fixture
+  //    holds the full table's pre-revision content, so rerank reads
+  //    the B vectors live.
+  // A family differs only in what its [[CodeIndex]] binding supplies.
+  // Arrival branches of the incremental and refresh verbs are
+  // truncated with a LAZY [[deltaCheckpoint]] (LSH's incremental batch
+  // hash excepted — see [[LshIndex]]; round 14, measured):
+  // over the raw union-with-encode plan Catalyst re-optimized the
+  // ~300-node encode subtree under every downstream join/window (a
+  // refresh search read ~2× the sum of its parts); the checkpoint
+  // materializes the O(delta) rows a production arrival writes and
+  // keeps the stored branch lazy, so probed-cell PartitionFilters
+  // still push into it. Every verb is rows-only (approximate index);
+  // ExtensionsSpec, PurgeSpec and RefreshSpec assert equality with the
+  // family's monolithic or from-scratch build, PlanSpec the stored
+  // serve and the raw-scan budgets.
+  // =====================================================================
+  private type Codebooks = Array[Array[Array[Double]]]
+  private type Centroids = Array[Array[Double]]
+
+  /** One code-index family's lifecycle binding; `M` is its frozen
+    * model bundle. */
+  private abstract class CodeIndex[M] {
+    /** The frozen full-corpus models, or None on an empty corpus. */
+    def models(emb: DataFrame, src: String): Option[M]
+    /** The stored (fixture-persisted) index table of a vector split. */
+    def stored(split: DataFrame, m: M, src: String): DataFrame
+    /** The one-scan arrival rows of a vector batch. */
+    def arrive(batch: DataFrame, m: M): DataFrame
+    /** Post-merge step over stored ∪ arrival rows. */
+    def settle(merged: DataFrame): DataFrame = merged
+    /** Whether the incremental verb truncates its arrival branch. */
+    def checkpointBatch: Boolean = true
+    /** The uncapped ingested-row count of a stored corpus split — the
+      * relative cap's input at compaction; None when the fold
+      * resolves no relative cap. */
+    def ingestedRows(corpus: DataFrame, m: M, src: String): Option[Long] = None
+    /** The compaction fold of stored ∪ arrival rows into one fresh
+      * stored table; `rows` (by-name, cold builds only) is the uncapped
+      * logical row count. */
+    def fold(stored: DataFrame, arrivals: DataFrame, src: String,
+             rows: => Option[Long]): DataFrame
+    /** The family's search over the given index rows. */
+    def serve(emb: DataFrame, qids: DataFrame, index: DataFrame, m: M,
+              src: Option[String]): DataFrame
   }
 
-  lazy val ivfpqRefresh: Q = Q("ext_ivfpq_refresh",
-    (spark, sfDir) => ivfpqRefreshSearch(spark, sfDir), None)
+  private final case class IvfpqModels(cbs: Codebooks, cs: Centroids)
 
-  // =====================================================================
-  // E76d (round 14): refresh verbs for the REMAINING vector families —
-  // IMI-PQ, residual IVFPQ, and the LSH bucket index. Before this, a
-  // daily re-crawl (the E72 diff → E76 composition, THE production
-  // workload) could refresh postings, substr grams, and flat-IVFPQ
-  // codes, but a deployment serving ext_topk_imipq / ext_topk_ivfpqr /
-  // ext_ann_lsh had to run purge + arrival as separate manual verbs.
-  // Each verb below is the same E76c composition under that family's
-  // FROZEN models: content-hash diff → broadcast anti-join of the
-  // stale ids out of the stored snapshot-A index → ONE O(delta)
-  // encode/hash pass over the fresh vectors → serve the family's own
-  // search. Rows-only for the family's own reason (approximate index);
-  // RefreshSpec asserts equality to the from-scratch snapshot-B build
-  // under the same models, PlanSpec gates the stored serve + raw-scan
-  // budget. Serves run src=None on the B vectors — the int8 rerank
-  // fixture holds pre-revision content (ivfpqRefreshSearch's reason).
-  // =====================================================================
-  /** The refreshed snapshot-B IMI-PQ search — [[ivfpqRefreshSearch]]
-    * for the product-routed family: three frozen models (PQ codebooks
-    * + both half-quantizers), stale codes anti-joined from the stored
-    * snapshot-A product-cell table, fresh delta through ONE
-    * [[imipqEncodeAssign]] scan. */
-  private[graft] def imipqRefreshSearch(spark: SparkSession,
-                                        sfDir: String): DataFrame = {
-    val vecsA = snapshotVecsA(spark, sfDir)
-    val vecsB = snapshotVecsB(spark, sfDir)
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val src = s"$sfDir/embeddings.parquet"
-    // frozen FULL-corpus models — a refresh never retrains (E63)
-    val cbs = pqCodebooks(emb, codebookSrc = Some(src))
-    val cs0 = imiCentroids(emb, 0, ImiK, Some(src))
-    val cs1 = imiCentroids(emb, 1, ImiK, Some(src))
-    if (cbs.isEmpty || cs0.isEmpty || cs1.isEmpty)
-      return imipqTopK(vecsB, annQueryIds(vecsB)) // empty-corpus guard
-    val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val codesA = imipqCellCodes(vecsA, cbs, cs0, cs1, Some(src))
-    // delta-encode branch truncated — ivfpqRefreshSearch's reason
-    val refreshed = codesA
-      .join(stale, col("corpus_id") === col("vec_id"), "left_anti")
-      .unionByName(deltaCheckpoint(
-        imipqEncodeAssign(vecsB.join(fresh, Seq("vec_id")), cbs, cs0, cs1)))
-    imipqTopK(vecsB, annQueryIds(vecsB), codes0 = Some(refreshed),
-      cbs0 = Some(cbs), csH0 = Some(cs0), csH1 = Some(cs1))
-  }
-
-  lazy val imipqRefresh: Q = Q("ext_imipq_refresh",
-    (spark, sfDir) => imipqRefreshSearch(spark, sfDir), None)
-
-  /** The refreshed snapshot-B residual-IVFPQ search —
-    * [[ivfpqRefreshSearch]] for the residual geometry: centroids,
-    * cell means, and residual codebook all frozen; fresh delta through
-    * ONE [[ivfpqrEncodeAssign]] scan (assignment + residual + M codes
-    * in a single pass, the arrival contract). */
-  private[graft] def ivfpqrRefreshSearch(spark: SparkSession,
-                                         sfDir: String): DataFrame = {
-    val vecsB = snapshotVecsB(spark, sfDir)
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val src = s"$sfDir/embeddings.parquet"
-    ivfpqrModels(emb, src) match {
-      case None => ivfpqrTopK(vecsB, annQueryIds(vecsB)) // empty guard
-      case Some((cs, ms, cbs)) =>
-        val vecsA = snapshotVecsA(spark, sfDir)
-        val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-        val hint = refreshHint(nDelta)
-        val stale = hint(statuses
-          .filter(col("status").isin("removed", "changed"))
-          .select(col("doc_id").as("vec_id")))
-        val fresh = hint(statuses
-          .filter(col("status").isin("added", "changed"))
-          .select(col("doc_id").as("vec_id")))
-        val codesA = ivfpqrCellCodes(vecsA, cbs, cs, ms, Some(src))
-        // delta-encode branch truncated — ivfpqRefreshSearch's reason
-        val refreshed = codesA
-          .join(stale, col("corpus_id") === col("vec_id"), "left_anti")
-          .unionByName(deltaCheckpoint(
-            ivfpqrEncodeAssign(vecsB.join(fresh, Seq("vec_id")), cbs, cs, ms)))
-        ivfpqrTopK(vecsB, annQueryIds(vecsB), codes0 = Some(refreshed),
-          cbs0 = Some(cbs), cs0 = Some(cs), ms0 = Some(ms))
+  /** Flat-IVF cells × PQ codes (the combined `ivfpq-codes` index). */
+  private object IvfpqIndex extends CodeIndex[IvfpqModels] {
+    def models(emb: DataFrame, src: String): Option[IvfpqModels] = {
+      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
+      val cs = ivfCentroids(emb, centroidSrc = Some(src))
+      if (cbs.isEmpty || cs.isEmpty) None else Some(IvfpqModels(cbs, cs))
     }
+    def stored(split: DataFrame, m: IvfpqModels, src: String): DataFrame =
+      ivfpqCellCodes(split, m.cbs, m.cs, Some(src))
+    def arrive(batch: DataFrame, m: IvfpqModels): DataFrame =
+      ivfpqEncodeAssign(batch, m.cbs, m.cs)
+    // the stored per-vector cell table is the persisted ingested-rows
+    // stat (its fixture count is metadata-only) — never a count of an
+    // already-capped table, which would ratchet the cap down across
+    // compactions (round-10 ADVICE)
+    override def ingestedRows(corpus: DataFrame, m: IvfpqModels,
+                              src: String): Option[Long] =
+      Some(ivfCellTable(corpus, m.cs, Some(src)).count())
+    def fold(stored: DataFrame, arrivals: DataFrame, src: String,
+             rows: => Option[Long]): DataFrame =
+      ivfpqCompactedCodes(stored, arrivals, src, totalRows = rows)
+    def serve(emb: DataFrame, qids: DataFrame, index: DataFrame,
+              m: IvfpqModels, src: Option[String]): DataFrame =
+      ivfpqTopK(emb, qids, src = src, codes0 = Some(index),
+        cbs0 = Some(m.cbs), cs0 = Some(m.cs))
   }
 
-  lazy val ivfpqrRefresh: Q = Q("ext_ivfpqr_refresh",
-    (spark, sfDir) => ivfpqrRefreshSearch(spark, sfDir), None)
+  private final case class ImipqModels(cbs: Codebooks, cs0: Centroids,
+                                       cs1: Centroids)
 
-  /** The refreshed snapshot-B LSH search: stale bucket rows
-    * anti-joined from the stored snapshot-A capped bucket table, the
-    * fresh delta hashed in ONE O(batch) [[lshBucketRows]] scan (the
-    * hyperplanes are sha-derived constants — the family's frozen
-    * model), and the hot-bucket cap RE-applied to the merged table
-    * ([[lshIncremental]]'s reason: the cap is deterministic over the
-    * stored columns, so re-capping is idempotent and the refreshed
-    * table equals the from-scratch snapshot-B build exactly whenever
-    * the cap has headroom — RefreshSpec asserts it at driver SFs). */
-  private[graft] def lshRefreshSearch(spark: SparkSession,
-                                      sfDir: String): DataFrame = {
-    val vecsA = snapshotVecsA(spark, sfDir)
-    val vecsB = snapshotVecsB(spark, sfDir)
+  /** Product (IMI) cells × PQ codes (`imipq-codes`). */
+  private object ImipqIndex extends CodeIndex[ImipqModels] {
+    def models(emb: DataFrame, src: String): Option[ImipqModels] = {
+      val cbs = pqCodebooks(emb, codebookSrc = Some(src))
+      val cs0 = imiCentroids(emb, 0, ImiK, Some(src))
+      val cs1 = imiCentroids(emb, 1, ImiK, Some(src))
+      if (cbs.isEmpty || cs0.isEmpty || cs1.isEmpty) None
+      else Some(ImipqModels(cbs, cs0, cs1))
+    }
+    def stored(split: DataFrame, m: ImipqModels, src: String): DataFrame =
+      imipqCellCodes(split, m.cbs, m.cs0, m.cs1, Some(src))
+    def arrive(batch: DataFrame, m: ImipqModels): DataFrame =
+      imipqEncodeAssign(batch, m.cbs, m.cs0, m.cs1)
+    override def ingestedRows(corpus: DataFrame, m: ImipqModels,
+                              src: String): Option[Long] =
+      Some(imiCellTable(corpus, m.cs0, m.cs1, Some(src)).count())
+    def fold(stored: DataFrame, arrivals: DataFrame, src: String,
+             rows: => Option[Long]): DataFrame =
+      imipqCompactedCodes(stored, arrivals, src, totalRows = rows)
+    def serve(emb: DataFrame, qids: DataFrame, index: DataFrame,
+              m: ImipqModels, src: Option[String]): DataFrame =
+      imipqTopK(emb, qids, src = src, codes0 = Some(index),
+        cbs0 = Some(m.cbs), csH0 = Some(m.cs0), csH1 = Some(m.cs1))
+  }
+
+  private final case class IvfpqrModels(cs: Centroids, ms: Centroids,
+                                        cbs: Codebooks)
+
+  /** Flat-IVF cells × residual PQ codes (`ivfpqr-codes`): centroids,
+    * cell means and the residual codebook are all frozen. */
+  private object IvfpqrIndex extends CodeIndex[IvfpqrModels] {
+    def models(emb: DataFrame, src: String): Option[IvfpqrModels] = {
+      val cs = ivfCentroids(emb, centroidSrc = Some(src))
+      if (cs.isEmpty) return None
+      val ms = ivfCellMeans(emb, cs, Some(src))
+      val cbs = pqrCodebooks(emb, cs, ms, Some(src))
+      if (cbs.isEmpty) None else Some(IvfpqrModels(cs, ms, cbs))
+    }
+    def stored(split: DataFrame, m: IvfpqrModels, src: String): DataFrame =
+      ivfpqrCellCodes(split, m.cbs, m.cs, m.ms, Some(src))
+    def arrive(batch: DataFrame, m: IvfpqrModels): DataFrame =
+      ivfpqrEncodeAssign(batch, m.cbs, m.cs, m.ms)
+    // the residual index stores no uncapped per-vector table of its
+    // own, but its cells ARE the flat family's unit-centroid cells, so
+    // the flat stored cell table is the ingested-rows stat here too
+    override def ingestedRows(corpus: DataFrame, m: IvfpqrModels,
+                              src: String): Option[Long] =
+      Some(ivfCellTable(corpus, m.cs, Some(src)).count())
+    def fold(stored: DataFrame, arrivals: DataFrame, src: String,
+             rows: => Option[Long]): DataFrame =
+      compactedCellCodes(stored.unionByName(arrivals),
+        "ivfpqr-codes-compact", src,
+        s"auto${IvfpqCellSkewFactor}_c16_compact2", 16, rows)
+    def serve(emb: DataFrame, qids: DataFrame, index: DataFrame,
+              m: IvfpqrModels, src: Option[String]): DataFrame =
+      ivfpqrTopK(emb, qids, src = src, codes0 = Some(index),
+        cbs0 = Some(m.cbs), cs0 = Some(m.cs), ms0 = Some(m.ms))
+  }
+
+  /** The capped LSH bucket table (`lsh-buckets`). The hyperplanes are
+    * sha-derived constants, so the family has no trained model and no
+    * empty-corpus case. The hot-bucket cap is RE-applied after every
+    * merge: it is the search-shuffle skew guard, a stored-capped ∪
+    * uncapped-batch union would erode it, and the salted sha order is
+    * a pure function of the stored columns, so re-capping is
+    * deterministic and idempotent. Under a binding cap a purged bucket
+    * can hold fewer survivors than a filtered rebuild (never a
+    * different set for the rows it holds); compaction re-resolves it.
+    * The incremental verb keeps the batch hash a lazy branch (PlanSpec
+    * pins its scan in the served plan); refresh truncates it like
+    * every family's arrival. */
+  private object LshIndex extends CodeIndex[Unit] {
+    def models(emb: DataFrame, src: String): Option[Unit] = Some(())
+    def stored(split: DataFrame, m: Unit, src: String): DataFrame =
+      lshStoredBuckets(split, LshTables, LshBits, LshBucketCap, Some(src))
+    def arrive(batch: DataFrame, m: Unit): DataFrame =
+      lshBucketRows(batch, None)
+    override def settle(merged: DataFrame): DataFrame =
+      capBuckets(merged, LshBucketCap)
+    override def checkpointBatch: Boolean = false
+    def fold(stored: DataFrame, arrivals: DataFrame, src: String,
+             rows: => Option[Long]): DataFrame =
+      lshCompactedBuckets(stored, arrivals, src)
+    def serve(emb: DataFrame, qids: DataFrame, index: DataFrame, m: Unit,
+              src: Option[String]): DataFrame =
+      annTopK(emb, qids, buckets0 = Some(index))
+  }
+
+  /** Run a lifecycle verb under the family's frozen models over the
+    * full embeddings — the ONE empty-corpus guard. */
+  private def underModels[M](ix: CodeIndex[M], spark: SparkSession,
+      sfDir: String)(verb: (DataFrame, String, M) => DataFrame): DataFrame = {
+    val (emb, _) = annInputs(spark, sfDir, None)
     val src = s"$sfDir/embeddings.parquet"
-    val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val bucketsA = lshStoredBuckets(vecsA, LshTables, LshBits,
-      LshBucketCap, indexSrc = Some(src))
-    // delta-hash branch truncated — ivfpqRefreshSearch's reason (the
-    // O(batch) bucket rows are the production arrival write)
-    val refreshed = capBuckets(
-      bucketsA.join(stale, col("corpus_id") === col("vec_id"), "left_anti")
-        .unionByName(deltaCheckpoint(
-          lshBucketRows(vecsB.join(fresh, Seq("vec_id")), None))),
-      LshBucketCap)
-    annTopK(vecsB, annQueryIds(vecsB), buckets0 = Some(refreshed))
+    ix.models(emb, src).fold(emptyTopK(emb))(verb(emb, src, _))
   }
 
-  lazy val lshRefresh: Q = Q("ext_lsh_refresh",
-    (spark, sfDir) => lshRefreshSearch(spark, sfDir), None)
+  private def incrementalIndex[M](ix: CodeIndex[M])(spark: SparkSession,
+      sfDir: String): DataFrame =
+    underModels(ix, spark, sfDir) { (emb, src, m) =>
+      val (corpus, batch) = incrementalSplit(emb)
+      val arrivals = ix.arrive(batch, m)
+      val merged = ix.stored(corpus, m, src).unionByName(
+        if (ix.checkpointBatch) deltaCheckpoint(arrivals) else arrivals)
+      ix.serve(emb, annQueryIds(emb), ix.settle(merged), m, Some(src))
+    }
+
+  private def compactIndex[M](ix: CodeIndex[M])(spark: SparkSession,
+      sfDir: String): DataFrame =
+    underModels(ix, spark, sfDir) { (emb, src, m) =>
+      val (corpus, batch) = incrementalSplit(emb)
+      // by-name: counted only on a cold compact build; batch rows =
+      // batch vectors (an arrival writes one code row per vector)
+      val compacted = ix.fold(ix.stored(corpus, m, src),
+        ix.arrive(batch, m), src,
+        ix.ingestedRows(corpus, m, src).map(_ + batch.count()))
+      ix.serve(emb, annQueryIds(emb), compacted, m, Some(src))
+    }
+
+  private def purgeIndex[M](ix: CodeIndex[M])(spark: SparkSession,
+      sfDir: String): DataFrame =
+    underModels(ix, spark, sfDir) { (emb, src, m) =>
+      val purged = ix.stored(emb, m, src)
+        .join(broadcast(purgeVecIds(spark, sfDir)),
+          col("corpus_id") === col("vec_id"), "left_anti")
+      ix.serve(emb, annQueryIds(emb), purged, m, Some(src))
+    }
+
+  private def refreshIndex[M](ix: CodeIndex[M])(spark: SparkSession,
+      sfDir: String): DataFrame =
+    underModels(ix, spark, sfDir) { (_, src, m) =>
+      val vecsB = snapshotVecsB(spark, sfDir)
+      val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
+      val hint = refreshHint(nDelta)
+      def ids(status: String*): DataFrame = hint(statuses
+        .filter(col("status").isin(status: _*))
+        .select(col("doc_id").as("vec_id")))
+      // a changed vector rides both halves: its stale row anti-joins
+      // out, its fresh embedding arrives
+      val refreshed = ix.stored(snapshotVecsA(spark, sfDir), m, src)
+        .join(ids("removed", "changed"),
+          col("corpus_id") === col("vec_id"), "left_anti")
+        .unionByName(deltaCheckpoint(ix.arrive(
+          vecsB.join(ids("added", "changed"), Seq("vec_id")), m)))
+      ix.serve(vecsB, annQueryIds(vecsB), ix.settle(refreshed), m, None)
+    }
+
+  val imipqIncremental: Q = Q("ext_imipq_incremental", incrementalIndex(ImipqIndex), None)
+  val ivfpqIncremental: Q = Q("ext_ivfpq_incremental", incrementalIndex(IvfpqIndex), None)
+  val ivfpqCompact: Q = Q("ext_ivfpq_compact", compactIndex(IvfpqIndex), None)
+  val lshIncremental: Q = Q("ext_lsh_incremental", incrementalIndex(LshIndex), None)
+  val ivfpqrIncremental: Q = Q("ext_ivfpqr_incremental", incrementalIndex(IvfpqrIndex), None)
+  val ivfpqrCompact: Q = Q("ext_ivfpqr_compact", compactIndex(IvfpqrIndex), None)
+  val imipqCompact: Q = Q("ext_imipq_compact", compactIndex(ImipqIndex), None)
+  val lshCompact: Q = Q("ext_lsh_compact", compactIndex(LshIndex), None)
+  val ivfpqPurge: Q = Q("ext_ivfpq_purge", purgeIndex(IvfpqIndex), None)
+  val lshPurge: Q = Q("ext_lsh_purge", purgeIndex(LshIndex), None)
+  val imipqPurge: Q = Q("ext_imipq_purge", purgeIndex(ImipqIndex), None)
+  val ivfpqrPurge: Q = Q("ext_ivfpqr_purge", purgeIndex(IvfpqrIndex), None)
+  val ivfpqRefresh: Q = Q("ext_ivfpq_refresh", refreshIndex(IvfpqIndex), None)
+  val imipqRefresh: Q = Q("ext_imipq_refresh", refreshIndex(ImipqIndex), None)
+  val ivfpqrRefresh: Q = Q("ext_ivfpqr_refresh", refreshIndex(IvfpqrIndex), None)
+  val lshRefresh: Q = Q("ext_lsh_refresh", refreshIndex(LshIndex), None)
 
   // =====================================================================
   // E76e (round 14): SHARD-STORE REFRESH — the diff-driven verb the
@@ -8739,50 +8504,6 @@ object Extensions {
     bm25Search.oracle)
 
   // =====================================================================
-  // Incremental LSH index maintenance — the same contract for the
-  // vector index: the standing corpus's capped bucket table is stored
-  // (one hash scan at build), a new batch is hashed in one O(batch)
-  // scan (uncapped — the cap is an INDEX-side discipline; batch rows
-  // are never dropped, mirroring ext_dedup_incremental), and the
-  // search probes the union. Bucket rows are per-vector, so at driver
-  // SFs (cap never binding — headroom asserted in ExtensionsSpec) the
-  // merged table is row-identical to the monolithic index and the
-  // query's output EQUALS ext_ann_lsh's — asserted in ExtensionsSpec;
-  // no oracle for the same reason ext_ann_lsh has none.
-  // =====================================================================
-  /** The stored standing-corpus capped bucket table — ONE fixture
-    * shared by the arrival (E36), the compaction (E47), and the
-    * cadence report (E61). */
-  private def lshBucketsFixture(spark: SparkSession, sfDir: String,
-                                corpus: DataFrame): DataFrame = {
-    val corpusBuckets0 = lshBucketRows(corpus, Some(LshBucketCap))
-    parquetFixture(spark, "lsh-buckets",
-      s"$sfDir/embeddings.parquet",
-      s"t${LshTables}_b${LshBits}_c${LshBucketCap}_lshinc90",
-      corpusBuckets0.queryExecution.logical.toString, corpusBuckets0)
-  }
-
-  val lshIncremental: Q = Q("ext_lsh_incremental",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val corpusBuckets = lshBucketsFixture(spark, sfDir, corpus)
-      // ONE O(batch) hash scan for the arrival, appended at read time.
-      // The per-bucket cap is RE-applied to the merged table: the cap
-      // is the search-shuffle skew guard, and a stored-capped ∪
-      // uncapped-batches union would erode it as increments accumulate
-      // — the salted sha order is a pure function of the stored
-      // columns, so the re-cap is deterministic and idempotent (at
-      // driver SFs the cap never binds — ExtensionsSpec asserts the
-      // headroom AND output equality with the monolithic index).
-      val merged = capBuckets(
-        corpusBuckets.unionByName(lshBucketRows(batch, None)), LshBucketCap)
-      annTopK(emb, annQueryIds(emb), buckets0 = Some(merged))
-    },
-    None)
-
-  // =====================================================================
   // E46/E47: compaction for the LEXICAL and LSH indexes — the E45
   // settling verb applied to the other two accumulating arrival
   // contracts, so EVERY stored index family now has the full lifecycle
@@ -8850,23 +8571,6 @@ object Extensions {
       merged.queryExecution.logical.toString +
         "\nscans:" + scanRootPaths(merged).mkString(","), capped)
   }
-
-  /** The post-compaction LSH search: probes served entirely from the
-    * compacted pre-capped bucket table — no union, no per-search
-    * re-cap window, no batch hash scan (PlanSpec gates the scan set).
-    * Output EQUALS ext_ann_lsh at driver SFs (cap headroom — the same
-    * argument as ext_lsh_incremental, asserted in ExtensionsSpec). */
-  val lshCompact: Q = Q("ext_lsh_compact",
-    (spark, sfDir) => {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (corpus, batch) = incrementalSplit(emb)
-      val compacted = lshCompactedBuckets(
-        lshBucketsFixture(spark, sfDir, corpus),
-        lshBucketRows(batch, None), s"$sfDir/embeddings.parquet")
-      annTopK(emb, annQueryIds(emb), buckets0 = Some(compacted))
-    },
-    None)
 
   // =====================================================================
   // E61: compaction-cadence report — the operational gap the lifecycle
@@ -8967,7 +8671,7 @@ object Extensions {
       val rows = vecRows ++ Seq(
         row("bm25-postings", docSrc, bm25PostingsFixture(spark, sfDir, dCorpus),
           memoCount("batch-postings", docSrc)(postingsOf(dBatch))),
-        row("lsh-buckets", src, lshBucketsFixture(spark, sfDir, vCorpus),
+        row("lsh-buckets", src, LshIndex.stored(vCorpus, (), src),
           memoCount("batch-lsh", src)(lshBucketRows(vBatch, None))),
         row("substr-grams", docSrc, substrGramsFixture(spark, sfDir, dCorpus),
           memoCount("batch-grams", docSrc)(substringGramIndex(dBatch))))

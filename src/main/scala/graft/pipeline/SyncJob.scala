@@ -392,24 +392,29 @@ object SyncJob {
     * whole-history view (the audit/backfill shape). */
   def alerts(dlq: DataFrame, threshold: Int,
              firedAt: Option[java.sql.Timestamp] = None): DataFrame = {
-    val over = dlq.groupBy(col("job_type"), col("natural_key"),
-        errorClass(col("error")).as("error"))
-      .agg(coalesce(max(col("attempt")), lit(0L)).as("attempts"))
-      .filter(col("attempts") >= threshold)
+    def over(rows: DataFrame): DataFrame =
+      rows.groupBy(col("job_type"), col("natural_key"),
+          errorClass(col("error")).as("error"))
+        .agg(coalesce(max(col("attempt")), lit(0L)).as("attempts"))
+        .filter(col("attempts") >= threshold)
     firedAt match {
-      case None => over
+      case None => over(dlq)
       case Some(ts) =>
-        // this-run key set is small (rows appended in one run) → the
-        // semi-join broadcasts it; history is never re-shuffled wide
+        // only this run's (job, key, error-class) triples can fire, so
+        // the history is narrowed to them BEFORE the aggregation: the
+        // this-run set is small (rows appended in one run) and the
+        // semi-join broadcasts it, so the groupBy shuffles only the
+        // history of keys that failed again — never the whole DLQ.
+        // Same groups, same maxima as aggregating first.
         val thisRun = dlq.filter(col("ts") === lit(ts))
           .select(col("job_type").as("fjob"), col("natural_key").as("fkey"),
             errorClass(col("error")).as("ferr"))
           .distinct()
-        over.join(broadcast(thisRun),
-          over("job_type") === col("fjob") &&
-            over("natural_key") <=> col("fkey") &&
-            over("error") === col("ferr"),
-          "left_semi")
+        over(dlq.join(broadcast(thisRun),
+          col("job_type") === col("fjob") &&
+            col("natural_key") <=> col("fkey") &&
+            errorClass(col("error")) === col("ferr"),
+          "left_semi"))
     }
   }
 }

@@ -998,6 +998,37 @@ class ExtensionsSpec extends SparkSpec {
       "fixture did not serve: reader fell back to the live frame")
   }
 
+  test("parquetFixture falls back to the live frame with one fixture_fallback event") {
+    // a plain FILE where the family's fixture directory belongs: the
+    // cold build cannot create its staging dir, so the fixture must
+    // serve the live frame — and say so on stderr, in fixture_build's
+    // shape, instead of falling back silently
+    val family = "fx-fallback-test"
+    val blocker = java.nio.file.Paths.get("target", family)
+    org.apache.commons.io.FileUtils.deleteQuietly(blocker.toFile)
+    java.nio.file.Files.createDirectories(blocker.getParent)
+    java.nio.file.Files.writeString(blocker, "not a directory")
+    val src = java.nio.file.Files.createTempFile("fx-src", ".parquet")
+    java.nio.file.Files.writeString(src, "fingerprint-me")
+    val live = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val got = try Extensions.parquetFixture(spark, family, src.toString,
+        "k1", "fixture-fallback-test-plan-v1", live).collect().toSeq
+      finally {
+        System.setErr(saved)
+        java.nio.file.Files.delete(blocker)
+        java.nio.file.Files.delete(src)
+      }
+    val events = err.toString("UTF-8").linesIterator
+      .filter(_.contains("\"event\":\"fixture_fallback\"")).toSeq
+    assert(events.size == 1, err.toString("UTF-8"))
+    assert(events.head.startsWith("{\"event\":\"fixture_fallback\"," +
+      s"\"family\":\"$family\",\"src\":\"$src\",\"error\":\""), events.head)
+    assert(got == live.collect().toSeq, "fallback did not serve the live frame")
+  }
+
   test("pq incremental maintenance: in-distribution batch low drift; shifted batch trips retrain") {
     // corpus with CLUSTER STRUCTURE (32 templates + small noise): the
     // frozen codebook fits it tightly, and an in-distribution batch

@@ -198,7 +198,7 @@ class RefreshSpec extends SparkSpec {
   test("ivfpq refresh: equals the from-scratch snapshot-B build under the same frozen models; no removed vector returned") {
     val sf = sf0001
     try {
-      val got = Extensions.ivfpqRefreshSearch(spark, sf).collect()
+      val got = Extensions.ivfpqRefresh.fn(spark, sf).collect()
         .map(_.toSeq).toSeq
       assert(got.nonEmpty, "refreshed search empty — the verb is unexercised")
       val removed = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -399,9 +399,41 @@ class RefreshSpec extends SparkSpec {
       s"$name: refreshed-index search != from-scratch snapshot-B build")
   }
 
+  test("spark.graft.checkpointDir: reliable delta checkpoints serve the same rows as localCheckpoint") {
+    // the arrival branch of the refresh and incremental verbs is
+    // truncated by deltaCheckpoint — localCheckpoint by default, a
+    // reliable checkpoint under the conf key; both must serve the same
+    // rows, and the reliable path must actually write checkpoint data
+    val key = "spark.graft.checkpointDir"
+    val verbs = Seq(Extensions.ivfpqRefresh, Extensions.ivfpqIncremental)
+    def rows(q: Q): Seq[String] =
+      try q.fn(spark, sf0001).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      finally Extensions.releaseCaches()
+    def rddDirs(): Int = spark.sparkContext.getCheckpointDir.map { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.listStatus(p).count(_.getPath.getName.startsWith("rdd-"))
+      else 0
+    }.getOrElse(0)
+    assert(spark.conf.getOption(key).isEmpty, s"$key must start unset")
+    val local = verbs.map(rows)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val before = rddDirs()
+    spark.conf.set(key, dir.toString)
+    val reliable = try verbs.map(rows) finally spark.conf.unset(key)
+    val after = rddDirs()
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    assert(after > before, "reliable path wrote no checkpoint data")
+    local.zip(verbs).foreach { case (l, q) =>
+      assert(l.nonEmpty, s"${q.name}: empty output — the verb is unexercised")
+    }
+    assert(reliable == local,
+      "reliable-checkpoint outputs differ from the localCheckpoint outputs")
+  }
+
   test("imipq refresh: equals the from-scratch snapshot-B build under the same frozen models; no removed vector returned") {
     try {
-      val got = Extensions.imipqRefreshSearch(spark, sf0001).collect()
+      val got = Extensions.imipqRefresh.fn(spark, sf0001).collect()
         .map(_.toSeq).toSeq
       val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -420,7 +452,7 @@ class RefreshSpec extends SparkSpec {
 
   test("ivfpqr refresh: equals the from-scratch snapshot-B build under the same frozen residual models; no removed vector returned") {
     try {
-      val got = Extensions.ivfpqrRefreshSearch(spark, sf0001).collect()
+      val got = Extensions.ivfpqrRefresh.fn(spark, sf0001).collect()
         .map(_.toSeq).toSeq
       val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -439,7 +471,7 @@ class RefreshSpec extends SparkSpec {
 
   test("lsh refresh: equals the from-scratch snapshot-B build under the same hyperplanes; no removed vector returned") {
     try {
-      val got = Extensions.lshRefreshSearch(spark, sf0001).collect()
+      val got = Extensions.lshRefresh.fn(spark, sf0001).collect()
         .map(_.toSeq).toSeq
       val vecsB = Extensions.snapshotVecsB(spark, sf0001)
       val twin = Extensions.annTopK(vecsB, Extensions.annQueryIds(vecsB),
