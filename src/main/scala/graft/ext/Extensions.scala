@@ -6843,48 +6843,50 @@ object Extensions {
   }
 
   /** Run a lifecycle verb under the family's frozen models over the
-    * full embeddings — the ONE empty-corpus guard. */
+    * full embeddings and their fixed query ids — the ONE empty-corpus
+    * guard. */
   private def underModels[M](ix: CodeIndex[M], spark: SparkSession,
-      sfDir: String)(verb: (DataFrame, String, M) => DataFrame): DataFrame = {
-    val (emb, _) = annInputs(spark, sfDir, None)
+      sfDir: String)(
+      verb: (DataFrame, DataFrame, String, M) => DataFrame): DataFrame = {
+    val (emb, qids) = annInputs(spark, sfDir, None)
     val src = s"$sfDir/embeddings.parquet"
-    ix.models(emb, src).fold(emptyTopK(emb))(verb(emb, src, _))
+    ix.models(emb, src).fold(emptyTopK(emb))(verb(emb, qids, src, _))
   }
 
   private def incrementalIndex[M](ix: CodeIndex[M])(spark: SparkSession,
       sfDir: String): DataFrame =
-    underModels(ix, spark, sfDir) { (emb, src, m) =>
+    underModels(ix, spark, sfDir) { (emb, qids, src, m) =>
       val (corpus, batch) = incrementalSplit(emb)
       val arrivals = ix.arrive(batch, m)
       val merged = ix.stored(corpus, m, src).unionByName(
         if (ix.checkpointBatch) deltaCheckpoint(arrivals) else arrivals)
-      ix.serve(emb, annQueryIds(emb), ix.settle(merged), m, Some(src))
+      ix.serve(emb, qids, ix.settle(merged), m, Some(src))
     }
 
   private def compactIndex[M](ix: CodeIndex[M])(spark: SparkSession,
       sfDir: String): DataFrame =
-    underModels(ix, spark, sfDir) { (emb, src, m) =>
+    underModels(ix, spark, sfDir) { (emb, qids, src, m) =>
       val (corpus, batch) = incrementalSplit(emb)
       // by-name: counted only on a cold compact build; batch rows =
       // batch vectors (an arrival writes one code row per vector)
       val compacted = ix.fold(ix.stored(corpus, m, src),
         ix.arrive(batch, m), src,
         ix.ingestedRows(corpus, m, src).map(_ + batch.count()))
-      ix.serve(emb, annQueryIds(emb), compacted, m, Some(src))
+      ix.serve(emb, qids, compacted, m, Some(src))
     }
 
   private def purgeIndex[M](ix: CodeIndex[M])(spark: SparkSession,
       sfDir: String): DataFrame =
-    underModels(ix, spark, sfDir) { (emb, src, m) =>
+    underModels(ix, spark, sfDir) { (emb, qids, src, m) =>
       val purged = ix.stored(emb, m, src)
         .join(broadcast(purgeVecIds(spark, sfDir)),
           col("corpus_id") === col("vec_id"), "left_anti")
-      ix.serve(emb, annQueryIds(emb), purged, m, Some(src))
+      ix.serve(emb, qids, purged, m, Some(src))
     }
 
   private def refreshIndex[M](ix: CodeIndex[M])(spark: SparkSession,
       sfDir: String): DataFrame =
-    underModels(ix, spark, sfDir) { (_, src, m) =>
+    underModels(ix, spark, sfDir) { (_, _, src, m) =>
       val vecsB = snapshotVecsB(spark, sfDir)
       val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
       val hint = refreshHint(nDelta)
