@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print one registered query's formatted physical plan.
   * Usage: runMain graft.ExplainQ <sfDir> <name>
   */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Dev.local("8", "ERROR")
     println(SparkEntry.queries(args(1))(spark, args(0)).queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode))
     spark.stop()

@@ -10,13 +10,7 @@ import org.apache.spark.sql.functions._
 object LibraryDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = Dev.local("4", "WARN", Dev.Utc)
 
     // 1. custom expressions through the SQL surface
     graft.expr.GraftFunctions.register(spark)

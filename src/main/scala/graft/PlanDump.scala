@@ -57,13 +57,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Dev.local("4", "ERROR", Dev.Utc)
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.PlanDump — do not edit)\n\n")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-14 instrumentation: write `explain("formatted")` of chosen
   * registered queries to individual files — the before/after plan
   * evidence the optimization rounds commit under `plans/rNN/`.
@@ -15,13 +13,7 @@ object PlanSnap {
     val outDir = Paths.get(args(1))
     val suffix = args(2)
     val wanted = args(3).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Dev.local("4", "ERROR", Dev.Utc)
     Files.createDirectories(outDir)
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     wanted.foreach { name =>

@@ -1,85 +1,50 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a subset of registered queries, N repetitions each,
   * on a chosen SF dir — the inner loop for performance work without
   * paying for the whole bench. Usage:
   *   runMain graft.Profile <sfDir> <reps> <q1,q2,...>
+  *
+  * Each rep prints its wall split into frame CONSTRUCTION (the eager
+  * driver-side part: model fixture loads, routing collects) and the
+  * noop-write execution, plus its Spark job count — the iterative and
+  * eager queries are job-count-bound at bench scale (each job is
+  * ~10-100 ms of scheduler and stage overhead against trivial data),
+  * so the job count is the number to shrink.
+  * SPARK_GRAFT_PROFILE_JOBS=1 additionally prints one line per Spark
+  * job (duration, description): WHICH eager step mints the jobs.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dev.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val wanted =
       if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.queries.keys.toSeq
-    // SPARK_GRAFT_PROFILE_SPLIT=1 additionally reports the frame
-    // CONSTRUCTION time (the eager driver-side part: model fixture
-    // loads, routing collects) apart from the noop-write execution —
-    // the split that tells serial fixed costs from data-sized work
-    val split = sys.env.get("SPARK_GRAFT_PROFILE_SPLIT").contains("1")
-    // Spark JOB counter: the iterative/eager queries are job-count-bound
-    // at bench scale (each job is ~10-100 ms of scheduler+stage overhead
-    // against trivial data), so the job count is the number to shrink —
-    // wall alone cannot tell scheduler overhead from data work
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    // SPARK_GRAFT_PROFILE_JOBS=1 additionally prints one line per Spark
-    // job (start-relative ms, duration, description) — the attribution
-    // tool for job-count-bound queries: WHICH eager step mints the jobs
     val traceJobs = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          if (traceJobs) {
-            val desc = Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            jobStart.put(js.jobId, (System.nanoTime(), desc))
-          }
-          ()
-        }
-        override def onJobEnd(
-            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (traceJobs) {
-            Option(jobStart.remove(je.jobId)).foreach { case (t0, desc) =>
-              println(f"JOB ${je.jobId}%5d ${(System.nanoTime() - t0) / 1e6}%8.1f ms  $desc%s")
-            }
-          }
-      })
+    val jobs = Dev.recorder(spark)
     for (name <- wanted; fn = SparkEntry.queries(name); r <- 1 to reps) {
-      val j0 = jobs.get()
+      val j0 = jobs.jobCount
       val t0 = System.nanoTime()
       // full materialization (see Bench): count() would let the
       // optimizer time a smaller query than the one users run
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
-      val jBuild = jobs.get() - j0
+      val jBuild = jobs.jobCount - j0
       df.write.format("noop").mode("overwrite").save()
       spark.sqlContext.clearCache()
       val total = (System.nanoTime() - t0) / 1e9
-      // listener events are async — drain the bus DETERMINISTICALLY
-      // (round-14 ADVICE: a fixed sleep undercounted the rep just
-      // measured on a loaded host, and the count is the whole point)
-      org.apache.spark.graft.ListenerBusAccess.drain(spark.sparkContext)
-      jobStart.clear() // a job with no end event must not leak into the next rep
-      val jTotal = jobs.get() - j0
-      if (split)
-        println(f"PROFILE $name rep$r $total%.3f s (build $tBuild%.3f s, exec ${total - tBuild}%.3f s, jobs $jTotal%d of which build $jBuild%d)")
-      else
-        println(f"PROFILE $name rep$r $total%.3f s (jobs $jTotal%d)")
+      // the count is the whole point, so drain the bus first: a fixed
+      // sleep undercounted the rep just measured on a loaded host
+      val spans = jobs.drain().jobsAfter(j0)
+      if (traceJobs)
+        spans.filter(_.endNs != 0L).foreach { j =>
+          println(f"JOB ${j.id}%5d ${(j.endNs - j.startNs) / 1e6}%8.1f ms  ${j.description}%s")
+        }
+      println(f"PROFILE $name rep$r $total%.3f s (build $tBuild%.3f s, exec ${total - tBuild}%.3f s, jobs ${spans.size}%d of which build $jBuild%d)")
     }
     spark.stop()
   }

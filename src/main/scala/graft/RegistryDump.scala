@@ -2,20 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes QUERIES.md: the registry index (one row per query, schema
   * resolved lazily — no execution). Run: sbt "runMain graft.RegistryDump". */
 object RegistryDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Dev.local("2", "ERROR", Dev.Utc)
     def group(n: String): String = n.split("_")(0) match {
       case "scan" | "project" | "filter" => "scan/project/filter"
       case "join" | "merge" | "setop" => "join/merge/setop"

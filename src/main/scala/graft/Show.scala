@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print a registered query's result rows. Usage:
   *   runMain graft.Show <sfDir> <name> [maxRows]
   */
@@ -10,14 +8,7 @@ object Show {
     val sfDir = args(0)
     val name = args(1)
     val maxRows = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Dev.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "ERROR", Dev.Utc)
     SparkEntry.queries(name)(spark, sfDir).show(maxRows, truncate = false)
     spark.stop()
   }

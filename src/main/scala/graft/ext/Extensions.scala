@@ -3870,14 +3870,14 @@ object Extensions {
     * corpus × queries), and re-running it on every recall evaluation
     * is exactly the cost the metric's consumers shouldn't pay at
     * scale. The fixture key includes the source file's length+mtime,
-    * so regenerated testdata can never serve a stale baseline; set
-    * SPARK_GRAFT_ANN_BASELINE=live to force the in-session recompute.
+    * so regenerated testdata can never serve a stale baseline;
+    * SPARK_GRAFT_FIXTURES=live forces the in-session recompute (as it
+    * does for every fixture).
     * The write is tmp + atomic-move, so a concurrent reader sees
     * either nothing (and computes live into its own tmp) or a
     * complete fixture. */
   def annExactBaseline(spark: SparkSession, sfDir: String): DataFrame = {
     val live = topkCosine.fn(spark, sfDir).select(col("query_id"), col("corpus_id"))
-    if (sys.env.get("SPARK_GRAFT_ANN_BASELINE").contains("live")) return live
     // the key fingerprints the DATA (length+mtime) and the CODE: a
     // normalized hash of the exact query's logical plan (expression
     // ids stripped — they vary per session, the structure doesn't).
@@ -4037,6 +4037,27 @@ object Extensions {
     * (round-13 advice). */
   private[graft] def evictModelMemo(key: Option[String]): Unit =
     key.foreach(modelMemo.remove(_))
+
+  /** [[memoizedModel]] for a value holding a frame of `spark` (`frameOf`
+    * picks it out). The keys carry the session's identity hash, which
+    * can collide across a stopped-and-collected session's address
+    * reuse, and a frame served into the wrong session fails
+    * confusingly downstream. So a hit whose frame belongs to another
+    * session is EVICTED (else the dead frame stays referenced and every
+    * later call re-pays the derivation — round-13 advice) and
+    * re-memoized for the live session; a second foreign hit (a
+    * pathological re-race) degrades to a derivation without the memo. */
+  private[graft] def sessionMemo[A <: AnyRef](spark: SparkSession,
+      key: Option[String], frameOf: A => DataFrame)(derive: () => A): A = {
+    def live(a: A): Boolean = frameOf(a).sparkSession eq spark
+    val hit = memoizedModel(key)(derive())
+    if (live(hit)) hit
+    else {
+      evictModelMemo(key)
+      val again = memoizedModel(key)(derive())
+      if (live(again)) again else derive()
+    }
+  }
 
   /** CompletableFuture.get wraps the loader's exception — rethrow the
     * cause so waiters see the same failure type the loader threw. */
@@ -6339,27 +6360,8 @@ object Extensions {
       (st, java.lang.Long.valueOf(
         st.filter(col("status") =!= "unchanged").count()))
     }
-    val (df, n) = memoizedModel(key)(derive())
-    // identity-hash keys can collide across a stopped-and-collected
-    // session's address reuse; a frame served into the wrong session
-    // fails confusingly downstream, so validate, EVICT the poisoned
-    // entry (else the dead frame stays referenced and every later
-    // call re-pays the diff — round-13 advice), and re-memoize for
-    // the live session. A second foreign hit (a pathological re-race)
-    // degrades to an uncached live derivation.
-    if (df.sparkSession ne spark) {
-      evictModelMemo(key)
-      val (df2, n2) = memoizedModel(key)(derive())
-      if (df2.sparkSession ne spark) {
-        val st = cacheTracked(snapshotStatuses(snapshotDocsA(spark, sfDir),
-          snapshotDocsB(spark, sfDir)))
-        return (st, st.filter(col("status") =!= "unchanged").count())
-      }
-      cacheTracked(df2)
-      return (df2, n2.longValue())
-    }
-    cacheTracked(df)
-    (df, n.longValue())
+    val (df, n) = sessionMemo(spark, key, (v: (DataFrame, java.lang.Long)) => v._1)(derive)
+    (cacheTracked(df), n.longValue())
   }
 
   /** The adaptive delta-id hint every refresh verb shares: a
@@ -6637,22 +6639,8 @@ object Extensions {
       (st, java.lang.Long.valueOf(
         st.filter(col("status") =!= "unchanged").count()))
     }
-    val (df, n) = memoizedModel(key)(derive())
-    // same foreign-session evict-and-rememoize as cachedSnapshotStatuses
-    if (df.sparkSession ne spark) {
-      evictModelMemo(key)
-      val (df2, n2) = memoizedModel(key)(derive())
-      if (df2.sparkSession ne spark) {
-        val st = cacheTracked(snapshotStatuses(
-          asDocs(snapshotVecsA(spark, sfDir)),
-          asDocs(snapshotVecsB(spark, sfDir))))
-        return (st, st.filter(col("status") =!= "unchanged").count())
-      }
-      cacheTracked(df2)
-      return (df2, n2.longValue())
-    }
-    cacheTracked(df)
-    (df, n.longValue())
+    val (df, n) = sessionMemo(spark, key, (v: (DataFrame, java.lang.Long)) => v._1)(derive)
+    (cacheTracked(df), n.longValue())
   }
 
   // =====================================================================
@@ -10851,8 +10839,8 @@ object Extensions {
     // lazy (every consumer re-executes it); only the construction is
     // served from the memo. Missing fingerprints (regenerating data)
     // disable the memo for the call, and a foreign-session hit (the
-    // identity-hash collision case) evicts and re-derives — the
-    // cachedSnapshotStatuses contract.
+    // identity-hash collision case) evicts and re-derives
+    // ([[sessionMemo]]).
     val memoKey = for {
       dfp <- dataFingerprintOpt(s"$sfDir/documents.parquet")
       efp <- dataFingerprintOpt(s"$sfDir/embeddings.parquet")
@@ -10941,12 +10929,7 @@ object Extensions {
         col("overlap_at_10"),
         (col("overlap_at_10") >= floor).as("pass"))
     }
-    val df = memoizedModel(memoKey)(deriveOverlapFrame())
-    if (df.sparkSession ne spark) {
-      evictModelMemo(memoKey)
-      val df2 = memoizedModel(memoKey)(deriveOverlapFrame())
-      if (df2.sparkSession ne spark) deriveOverlapFrame() else df2
-    } else df
+    sessionMemo(spark, memoKey, identity[DataFrame])(deriveOverlapFrame)
   }
 
   val hybridSearchPq: Q = Q("ext_hybrid_search_pq",

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sink.{TransportStatus, UpsertRecord, UpsertTransport}
 
 /** Staging transport: accepts every batch, synthesizes deterministic ids
@@ -19,13 +17,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val ctl = java.nio.file.Files.createTempDirectory("graft-demo-").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Dev.local("4", "WARN", graft.Dev.Utc)
 
     val t = new DryRunTransport
     val run1 = SyncJob.run(spark, Pipelines.patientsSource(spark, sfDir),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Extensions
 
@@ -2402,5 +2403,26 @@ class ExtensionsSpec extends SparkSpec {
           s"driverOnly=${(driver.toSet -- dist.toSet).take(3)} " +
           s"distOnly=${(dist.toSet -- driver.toSet).take(3)}")
     }
+  }
+
+  test("sessionMemo: a foreign-session memo entry is evicted and re-derived for the live session") {
+    // memo keys carry the session's identity hash, which a stopped
+    // session's address reuse can collide with; a sibling session's
+    // frame under the key stands in for that collision
+    val key = Some(s"session-memo-spec:${System.nanoTime()}")
+    val foreign = spark.newSession().range(3).toDF()
+    assert(Extensions.memoizedModel(key)(foreign) eq foreign)
+    var derived = 0
+    val got = Extensions.sessionMemo(spark, key, identity[DataFrame]) { () =>
+      derived += 1
+      spark.range(3).toDF()
+    }
+    try {
+      assert(got.sparkSession eq spark)
+      assert(derived == 1)
+      // the foreign entry is gone: the memo now holds the live frame
+      assert(Extensions.memoizedModel[DataFrame](key)(fail("memo entry missing")) eq got)
+      assert(got.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
+    } finally Extensions.evictModelMemo(key)
   }
 }
