@@ -10,7 +10,9 @@ package graft
   * noop-write execution, plus its Spark job count — the iterative and
   * eager queries are job-count-bound at bench scale (each job is
   * ~10-100 ms of scheduler and stage overhead against trivial data),
-  * so the job count is the number to shrink.
+  * so the job count is the number to shrink. `codegen N` counts the
+  * rep's Janino compiles: a class missing from Spark's codegen cache
+  * (100 entries) is compiled again, at ~20 ms each.
   * SPARK_GRAFT_PROFILE_JOBS=1 additionally prints one line per Spark
   * job (duration, description): WHICH eager step mints the jobs.
   */
@@ -26,8 +28,11 @@ object Profile {
       else SparkEntry.queries.keys.toSeq
     val traceJobs = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
     val jobs = Dev.recorder(spark)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     for (name <- wanted; fn = SparkEntry.queries(name); r <- 1 to reps) {
       val j0 = jobs.jobCount
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       // full materialization (see Bench): count() would let the
       // optimizer time a smaller query than the one users run
@@ -44,7 +49,7 @@ object Profile {
         spans.filter(_.endNs != 0L).foreach { j =>
           println(f"JOB ${j.id}%5d ${(j.endNs - j.startNs) / 1e6}%8.1f ms  ${j.description}%s")
         }
-      println(f"PROFILE $name rep$r $total%.3f s (build $tBuild%.3f s, exec ${total - tBuild}%.3f s, jobs ${spans.size}%d of which build $jBuild%d)")
+      println(f"PROFILE $name rep$r $total%.3f s (build $tBuild%.3f s, exec ${total - tBuild}%.3f s, jobs ${spans.size}%d of which build $jBuild%d, codegen ${compiles.getCount - c0}%d)")
     }
     spark.stop()
   }

@@ -544,8 +544,10 @@ object ScaleProbe {
     * arrive→compact cycles through the REAL `recapCellCodes`, deriving
     * each cycle's cap from the true uncapped ingested-row count the
     * shipped compaction queries supply. Asserts per cycle that the
-    * hot-cell survivor count equals the cap the monolithic build would
-    * resolve at that ingested volume (a ratcheting cap — the round-10
+    * hot-cell survivor count equals min(hot rows ingested, the cap the
+    * monolithic build would resolve at that ingested volume) — below
+    * the cap's 4096-row floor the hot cell holds fewer rows than the
+    * cap, which then does not bind (a ratcheting cap — the round-10
     * bug class, where caps derive from already-capped counts — fails
     * this on cycle 2), that the final cycle's cap equals the
     * monolithic build's over the same rows, and that re-compacting
@@ -555,8 +557,8 @@ object ScaleProbe {
     val cycles = if (args.length > 2) args(2).toInt else 4
     val nCells = 64
     // even ids → hot cell 0 (50% share); odd ids → uniform over the
-    // other 63 cells. cap = 8·ingested/64 = ingested/8, so the hot
-    // cell (ingested/2 rows) binds from the first cycle on
+    // other 63 cells. cap = max(4096, 8·ingested/64 = ingested/8), so
+    // the hot cell (ingested/2 rows) binds once ingested passes 8192
     def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
       when(pmod(col("id"), lit(2)) === 0, lit(0))
         .otherwise(pmod(hash(col("id")), lit(nCells - 1)) + 1)
@@ -575,8 +577,10 @@ object ScaleProbe {
         Some(ingested)).localCheckpoint())
       state = next
       val cap = math.max(4096L, f * ingested / nCells)
+      // the even ids of [0, ingested) land in the hot cell
+      val expected = math.min((ingested + 1) / 2, cap)
       val hot = state.filter(col("cell") === 0).count()
-      val cycleOk = hot == cap
+      val cycleOk = hot == expected
       ok &= cycleOk
       println(f"CAPCYCLE cycle=${k + 1}%d ingested=$ingested%d cap=$cap%d " +
         f"hot_survivors=$hot%d ok=$cycleOk%b wall=$wall%.1fs")

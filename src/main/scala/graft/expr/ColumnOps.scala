@@ -20,6 +20,8 @@ object ColumnOps {
     wrap(Sha60(exprOf(c)))
   def shingleSha60(c: Column, n: Int): Column =
     wrap(ShingleSha60(exprOf(c), n))
+  def shingleMinHash(c: Column, n: Int, perms: Int, mix: Long): Column =
+    wrap(ShingleMinHash(exprOf(c), n, perms, mix))
   def wordGramSha60(c: Column, n: Int): Column =
     wrap(WordGramSha60(exprOf(c), n))
   def polyKgramHash(c: Column): Column =

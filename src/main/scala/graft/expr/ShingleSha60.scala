@@ -27,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Jaccard ground truth) keep the composed form. */
 object ShingleSha60Util {
 
-  def hashes(s: UTF8String, n: Int): ArrayData = {
+  /** Calls `f` with the hash of every n-gram window of `s`, in order. */
+  private def foreachShingle(s: UTF8String, n: Int)(f: Long => Unit): Unit = {
     val bytes = s.getBytes
     val len = bytes.length
     // code-point start offsets (offsets(cnt) = len sentinel)
@@ -41,15 +42,38 @@ object ShingleSha60Util {
     }
     offsets(cnt) = len
     val numShingles = math.max(cnt - (n - 1), 1)
-    val out = new Array[Long](numShingles)
     var k = 0
     while (k < numShingles) {
       val from = offsets(k)
       val until = offsets(math.min(k + n, cnt))
       val d = Sha60Util.threadDigest
       d.update(bytes, from, until - from)
-      out(k) = Sha60Util.fold60(d.digest())
+      f(Sha60Util.fold60(d.digest()))
       k += 1
+    }
+  }
+
+  def hashes(s: UTF8String, n: Int): ArrayData = {
+    // one window per code point past the first n-1, so the byte count
+    // bounds the array; only multi-byte text needs the trim
+    val out = new Array[Long](math.max(s.numBytes - (n - 1), 1))
+    var k = 0
+    foreachShingle(s, n) { h => out(k) = h; k += 1 }
+    new GenericArrayData(if (k == out.length) out else java.util.Arrays.copyOf(out, k))
+  }
+
+  /** The MinHash signature of `s`: for each permutation i < `perms`,
+    * the minimum over its shingle hashes h of `h ^ (i * mix)` — one
+    * pass, no hash array. */
+  def minima(s: UTF8String, n: Int, perms: Int, mix: Long): ArrayData = {
+    val out = Array.fill(perms)(Long.MaxValue)
+    foreachShingle(s, n) { h =>
+      var i = 0
+      while (i < perms) {
+        val x = h ^ (i * mix)
+        if (x < out(i)) out(i) = x
+        i += 1
+      }
     }
     new GenericArrayData(out)
   }
@@ -73,5 +97,35 @@ case class ShingleSha60(child: Expression, n: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.expr.ShingleSha60Util.hashes($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): ShingleSha60 =
+    copy(child = newChild)
+}
+
+/** `shingle_minhash(text)` → ARRAY<BIGINT> of `perms` MinHash minima:
+  * element i is `array_min(transform(shingle_sha60(text, n), h -> h ^ (i * mix)))`,
+  * bit for bit, and the whole array is null for null text. One pass
+  * over the shingles folds every permutation's minimum; the
+  * higher-order-function form it replaces is CodegenFallback, which
+  * kept the signature projection out of whole-stage codegen and built
+  * one hash array per permutation. */
+case class ShingleMinHash(child: Expression, n: Int, perms: Int, mix: Long)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType if n >= 1 && perms >= 1 => TypeCheckResult.TypeCheckSuccess
+    case _: StringType =>
+      TypeCheckResult.TypeCheckFailure(s"shingle width and perms must be >= 1, got $n, $perms")
+    case dt => TypeCheckResult.TypeCheckFailure(s"shingle_minhash expects STRING, got ${dt.sql}")
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "shingle_minhash"
+
+  override protected def nullSafeEval(input: Any): Any =
+    ShingleSha60Util.minima(input.asInstanceOf[UTF8String], n, perms, mix)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expr.ShingleSha60Util.minima($c, $n, $perms, ${mix}L)")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleMinHash =
     copy(child = newChild)
 }

@@ -150,10 +150,14 @@ object Extensions {
     * standalone registered runs derive it live. */
   private def annInputs(spark: SparkSession, sfDir: String,
       qids0: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val emb = annCorpus(spark, sfDir)
     (emb, qids0.getOrElse(annQueryIds(emb)))
   }
+
+  /** The (vec_id, v) search corpus every registered search reads. */
+  private def annCorpus(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** The `n` rows with the smallest (hash60(id), id) — one TakeOrdered
     * pass (O(corpus · log n), executor-side top-n merge, no driver
@@ -207,29 +211,25 @@ object Extensions {
     * Stays under 2^61 so both engines' signed bigints never overflow. */
   private val MixC = 53919893334301279L
 
-  /** MinHash signature columns h0..h15 per doc_id over its shingles.
+  /** MinHash signature columns h0..h15 per doc_id over its shingles:
+    * h_i = min over the shingle hashes h of `h ^ (i·MixC)`.
     *
-    * Computed entirely with array higher-order functions: hash the
-    * distinct-shingle array ONCE per row, then take 16 xor-mixed
-    * `array_min`s. A signature is a per-document reduction, so the
-    * explode + groupBy form this replaces paid a full shuffle of every
-    * (doc, shingle) pair — at 100 TB that shuffle dwarfs the hashing —
-    * while this form is map-only and stays in whole-stage codegen.
-    * (Hashing stays inline per shingle: measured against a
+    * One codegen kernel ([[graft.expr.ShingleMinHash]]) hashes every
+    * n-gram window in one pass over the utf8 bytes and folds all 16
+    * minima as it goes; the 16 columns are extractions of its array, so
+    * the signature projection stays in whole-stage codegen. A signature
+    * is a per-document reduction, so the explode + groupBy form this
+    * replaces paid a full shuffle of every (doc, shingle) pair — at
+    * 100 TB that shuffle dwarfs the hashing — while this form is
+    * map-only. The distinct step is dropped, not emulated: only minima
+    * are consumed, and min over the multiset == min over the distinct
+    * set. (Hashing stays inline per shingle: measured against a
     * distinct-shingle dictionary + broadcast join, inline wins — the
     * join's string probes cost more than the codegen'd digests.) */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    // ShingleSha60 hashes every n-gram window in ONE pass over the utf8
-    // bytes (the composed substr form re-walks the string per position —
-    // quadratic per doc, measured as ~95% of this query's time). The
-    // distinct step is dropped, not emulated: only minima are consumed,
-    // and min over the multiset == min over the distinct set.
-    val hashed = docs.select(col("doc_id"),
-      graft.expr.ColumnOps.shingleSha60(col("text"), N).as("bh"))
-    val sigCols = (0 until Perms).map(i =>
-      array_min(transform(col("bh"), h => h.bitwiseXOR(lit(i * MixC)))).as(s"h$i"))
-    hashed.select(col("doc_id") +: sigCols: _*)
-  }
+  def minhashSignatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        graft.expr.ColumnOps.shingleMinHash(col("text"), N, Perms, MixC).as("mh"))
+      .select(col("doc_id") +: (0 until Perms).map(i => col("mh")(i).as(s"h$i")): _*)
 
   /** Max members a single band bucket may feed into the full m²
     * candidate self-join. On duplicate-heavy corpora (boilerplate,
@@ -266,8 +266,10 @@ object Extensions {
     * sever every star edge and fragment the whole family, and min-id
     * anchoring correlates that risk with whatever makes low ids special
     * — two independent pseudo-random anchors make a full severance
-    * require both to be outliers. Bucket sizing + anchor ranking share
-    * one window shuffle; the anchor join reuses its partitioning.
+    * require both to be outliers. Bucket sizing and both anchors are
+    * one select over one window spec, so they plan as ONE Window over
+    * one shuffle + sort (three chained withColumns planned three
+    * Window + Sort pairs).
     * Caching: the sized frame is cache-tracked ([[releaseCaches]]) —
     * three consumers (two self-join sides + the star branch) would
     * otherwise each re-run the explode + window shuffle. */
@@ -279,10 +281,10 @@ object Extensions {
     val anchorOrder = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(xxhash64(keyCols.map(col) :+ col("doc_id"): _*), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val sized = cacheTracked(banded
-      .withColumn("bsz", count(lit(1)).over(anchorOrder))
-      .withColumn("a1", first(col("doc_id")).over(anchorOrder))
-      .withColumn("a2", nth_value(col("doc_id"), 2).over(anchorOrder)))
+    val sized = cacheTracked(banded.select(col("*"),
+      count(lit(1)).over(anchorOrder).as("bsz"),
+      first(col("doc_id")).over(anchorOrder).as("a1"),
+      nth_value(col("doc_id"), 2).over(anchorOrder).as("a2")))
     val small = sized.filter(col("bsz") <= cap)
     val full = small.select(keyCols.map(col) :+ col("doc_id").as("id_a"): _*)
       .join(small.select(keyCols.map(col) :+ col("doc_id").as("id_b"): _*),
@@ -1839,18 +1841,54 @@ object Extensions {
       .take(nProbe).map(_._1)
   }
 
-  /** Bounded collect of a prepared query-side frame: Some(rows) within
+  /** The routed query batch on the driver: `prepare` applied to the
+    * rows of `emb ⋈ queryIds` (by vec_id), Some within
     * [[DriverRouteMaxQueries]], None past it (the caller falls back to
-    * the distributed routing; the one bounded job is the price of the
-    * check). Values are computed by the same Spark expressions the
-    * distributed routing would evaluate — the collect changes WHERE
-    * the ranking runs, never what feeds it. */
-  private def collectQueryBatch(q: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    * the distributed routing).
+    *
+    * One Spark job. When `queryIds` is [[annQueryIds]] of `emb` — every
+    * registered search — that job is the TakeOrdered which picks the
+    * ids, carrying the vectors: the n + 1 smallest (hash60(vec_id),
+    * vec_id) rows of `emb`. Rows of one id sort together, so when the
+    * first n ids are non-null and distinct and row n + 1 has another
+    * id, the first n rows ARE the join's rows; otherwise, and for any
+    * other id frame, the join itself is collected, bounded. `prepare`
+    * then runs over the fetched rows as a local relation, which the
+    * optimizer evaluates on the driver (ConvertToLocalRelation) with
+    * the same expressions the distributed routing evaluates — the
+    * collect changes WHERE the ranking runs, never what feeds it. */
+  private[graft] def collectQueryBatch(emb: DataFrame, queryIds: DataFrame)(
+      prepare: DataFrame => DataFrame)
+      : Option[(org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])] = {
     val bound = driverRouteBound
     if (bound <= 0) return None // seam-forced fallback: skip even the probe job
-    val rows = q.limit(bound + 1).collect()
-    if (rows.length > bound) None else Some(rows)
+    val n = AnnQueryCount
+    val sampled = n <= bound && queryIds.queryExecution.analyzed
+      .sameResult(annQueryIds(emb).queryExecution.analyzed)
+    val taken = if (!sampled) None else {
+      val top = emb.orderBy(Scalars.hash60(col("vec_id").cast("string")), col("vec_id"))
+        .limit(n + 1).collect()
+      val head = top.take(n)
+      val ids = head.map(_.getAs[Any]("vec_id"))
+      val exact = !ids.contains(null) && ids.distinct.length == ids.length &&
+        (top.length <= n || top(n).getAs[Any]("vec_id") != ids.last)
+      if (exact) Some((emb.schema, head)) else None
+    }
+    val (schema, rows) = taken.getOrElse {
+      val joined = queryRows(emb, queryIds)
+      (joined.schema, joined.limit(bound + 1).collect())
+    }
+    if (rows.length > bound) None
+    else {
+      val prepared = prepare(localFrame(emb.sparkSession, schema.fields.toSeq, rows.toSeq))
+      Some((prepared.schema, prepared.collect()))
+    }
   }
+
+  /** The query side's corpus rows: `emb` ⋈ `queryIds` by vec_id, the
+    * id set broadcast (O(1)-sized by contract — see [[annTopK]]). */
+  private[graft] def queryRows(emb: DataFrame, queryIds: DataFrame): DataFrame =
+    emb.join(broadcast(queryIds.select("vec_id")), Seq("vec_id"))
 
   /** A LocalRelation frame from driver rows (the routed query batch). */
   private def localFrame(spark: SparkSession,
@@ -2033,7 +2071,6 @@ object Extensions {
               trainPerCell: Int = 100,
               centroidSrc: Option[String] = None): DataFrame = {
     // O(1)-sized by contract (see annTopK) — broadcast per-cell below
-    val qids = broadcast(queryIds.select("vec_id"))
     // unit-normalize once: cosine over normalized vectors = dot product
     val e = pqNormalize(emb)
 
@@ -2056,17 +2093,17 @@ object Extensions {
     // the fallback is the model-table routing join, plan size constant
     // in nCells, qv carried through the routing window so the query
     // side stays one pass)
-    val prepared = e.join(qids, Seq("vec_id"))
+    def prepare(q: DataFrame) = pqNormalize(q)
       .select(col("vec_id").as("query_id"), col("nv").as("qv"))
-    val queries = collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    val queries = collectQueryBatch(emb, queryIds)(prepare) match {
+      case Some((schema, rows)) =>
         localFrame(emb.sparkSession,
-          prepared.schema.fields.toSeq :+ cellField,
+          schema.fields.toSeq :+ cellField,
           rows.toSeq.flatMap { r =>
             probeLocal(r.getSeq[Double](1), centroids, nProbe).map {
               case (cell, _) =>
                 org.apache.spark.sql.Row(r.get(0), r.get(1), cell) } })
-      case None => routeCells(prepared,
+      case None => routeCells(prepare(queryRows(emb, queryIds)),
         "query_id", "qv", centroids, nProbe, payload = Seq("qv"))
     }
     val w = Window.partitionBy(col("query_id"))
@@ -2154,6 +2191,16 @@ object Extensions {
       .reduce((a: Column, b: Column) => a + b)
   private def pqSubDot(sub: Column, cwd: Array[Double]): Column =
     dotD(sub, array(cwd.map(lit).toSeq: _*))
+  /** The query side's M×K ADC LUT over `sub_0..sub_{M-1}`, flattened
+    * row-major — built once per codebook model. Spark captures a
+    * call-site stack for every Column, and the ~2,600 columns of one
+    * LUT cost ~70–80 ms of driver time per search. Keyed weakly by
+    * the model array's identity (a memoized model is one instance). */
+  private val lutMemo = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[Array[Array[Array[Double]]], Column]())
+  private def pqLut(cbs: Array[Array[Array[Double]]]): Column =
+    lutMemo.computeIfAbsent(cbs, _ => array(cbs.indices.flatMap(mi =>
+      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*))
   /** argmax-dot cell id of `vec` against a codeword/centroid table —
     * FIRST index achieving the max (deterministic tie-break). The one
     * assignment expression shared by PQ training/encode/search AND the
@@ -2390,11 +2437,9 @@ object Extensions {
 
     // corpus ENCODE scan: codes only — stored table, see [[pqCodeTable]]
     val codes = pqCodeTable(emb, cbs, codebookSrc, iters, trainPerCell)
-    // query side: the M×K LUT of sub-dot-products, flattened row-major
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
+    // query side: the M×K LUT of sub-dot-products (see [[pqLut]])
     val queries = pqWithSubs(e.join(qids, Seq("vec_id")), m, ds)
-      .select(col("vec_id").as("query_id"), col("nv").as("qv"), lut.as("lut"))
+      .select(col("vec_id").as("query_id"), col("nv").as("qv"), pqLut(cbs).as("lut"))
     // ADC: the shared unrolled sum — see [[adcSum]]
     val adc = adcSum(m, kw)
     val wAdc = Window.partitionBy(col("query_id"))
@@ -2563,7 +2608,6 @@ object Extensions {
                 codes0: Option[DataFrame] = None,
                 cbs0: Option[Array[Array[Array[Double]]]] = None,
                 cs0: Option[Array[Array[Double]]] = None): DataFrame = {
-    val qids = broadcast(queryIds.select("vec_id"))
     val e = pqNormalize(emb)
     // models: caller-supplied when the caller already loaded them
     // (ivfpqIncremental needs both to encode the batch — re-reading
@@ -2579,31 +2623,29 @@ object Extensions {
       ivfpqCellCodes(emb, cbs, cs, src, cellCap, nCells))
     // query side: nProbe nearest cells AND the M×K ADC LUT, one row
     // per (query, probed cell). Routed ON THE DRIVER when the batch is
-    // within [[DriverRouteMaxQueries]] (see the probeLocal block): one
-    // bounded collect replaces the cached routing pipeline + the
-    // probed-cell re-collect, and the LUT values ride in the
-    // LocalRelation instead of a ~M×K×ds-literal tree in the plan.
+    // within [[DriverRouteMaxQueries]] (see the probeLocal block): the
+    // one-job [[collectQueryBatch]] replaces the cached routing
+    // pipeline + the probed-cell re-collect, and the LUT values ride in
+    // the LocalRelation instead of a ~M×K×ds-literal tree in the plan.
     // Past the bound: the distributed [[routeCells]], CACHED (tracked)
     // because the frame feeds BOTH the probed-cell collect and the
     // scoring join.
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
-    val prepared = pqWithSubs(e.join(qids, Seq("vec_id")), m, ds)
-      .select(col("vec_id").as("query_id"), col("nv").as("qv"), lut.as("lut"))
-    collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    def prepare(q: DataFrame) = pqWithSubs(pqNormalize(q), m, ds)
+      .select(col("vec_id").as("query_id"), col("nv").as("qv"), pqLut(cbs).as("lut"))
+    collectQueryBatch(emb, queryIds)(prepare) match {
+      case Some((schema, rows)) =>
         val routed = rows.toSeq.flatMap { r =>
           probeLocal(r.getSeq[Double](1), cs, nProbe).map { case (cell, _) =>
             org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), cell) }
         }
         val queries = localFrame(emb.sparkSession,
-          prepared.schema.fields.toSeq :+ cellField, routed)
+          schema.fields.toSeq :+ cellField, routed)
         val probeRows = routed.map(r => org.apache.spark.sql.Row(r.get(3)))
           .distinct
         adcCellSearch(emb, queries, cellCodes, m, kw, rerank, k, src,
           probeRows0 = Some(probeRows))
       case None =>
-        val queries = cacheTracked(routeCells(prepared,
+        val queries = cacheTracked(routeCells(prepare(queryRows(emb, queryIds)),
           "query_id", "qv", cs, nProbe, payload = Seq("qv", "lut")))
         adcCellSearch(emb, queries, cellCodes, m, kw, rerank, k, src)
     }
@@ -2788,7 +2830,7 @@ object Extensions {
     val spark = embL.sparkSession
     val src = Some(srcPath)
     val emb = embL.select("vec_id", "v")
-    val qids = broadcast(qids0.getOrElse(annQueryIds(emb)))
+    val qids = qids0.getOrElse(annQueryIds(embL))
     val cbs = pqCodebooks(emb, codebookSrc = src)
     val cs = ivfCentroids(emb, nCells = nCells, centroidSrc = src)
     if (cbs.isEmpty || cs.isEmpty) return emptyTopK(pqNormalize(emb))
@@ -2798,29 +2840,26 @@ object Extensions {
     val codesAttr = ivfpqAttrCodes(embL, srcPath, nCells, cbs, cs)
     // query side: ivfpqTopK's routing + LUT, with the query's own
     // label carried through the shared normalization as a kept column
-    val eL = pqNormalize(embL, keep = Seq("label"))
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
-    val prepared = pqWithSubs(eL.join(qids, Seq("vec_id")), m, ds)
+    def prepare(q: DataFrame) = pqWithSubs(pqNormalize(q, keep = Seq("label")), m, ds)
       .select(col("vec_id").as("query_id"), col("nv").as("qv"),
-        lut.as("lut"), col("label"))
+        pqLut(cbs).as("lut"), col("label"))
     // driver routing within the bound (probeLocal block) — the label
     // rides as payload exactly as through the distributed window
-    collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    collectQueryBatch(embL, qids)(prepare) match {
+      case Some((schema, rows)) =>
         val routed = rows.toSeq.flatMap { r =>
           probeLocal(r.getSeq[Double](1), cs, nProbe).map { case (cell, _) =>
             org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), r.get(3),
               cell) }
         }
         val queries = localFrame(embL.sparkSession,
-          prepared.schema.fields.toSeq :+ cellField, routed)
+          schema.fields.toSeq :+ cellField, routed)
         val probeRows = routed
           .map(r => org.apache.spark.sql.Row(r.get(4), r.get(3))).distinct
         adcCellSearch(emb, queries, codesAttr, m, kw, PqRerank, AnnK, src,
           filterCols = Seq("label"), probeRows0 = Some(probeRows))
       case None =>
-        val queries = cacheTracked(routeCells(prepared,
+        val queries = cacheTracked(routeCells(prepare(queryRows(embL, qids)),
           "query_id", "qv", cs, nProbe,
           payload = Seq("qv", "lut", "label")))
         adcCellSearch(emb, queries, codesAttr, m, kw, PqRerank, AnnK, src,
@@ -2904,7 +2943,7 @@ object Extensions {
     val spark = embL.sparkSession
     val src = Some(srcPath)
     val emb = embL.select("vec_id", "v")
-    val qids = broadcast(qids0.getOrElse(annQueryIds(emb)))
+    val qids = qids0.getOrElse(annQueryIds(embL))
     val cbs = pqCodebooks(emb, codebookSrc = src)
     val cs = ivfCentroids(emb, nCells = nCells, centroidSrc = src)
     if (cbs.isEmpty || cs.isEmpty) return emptyTopK(pqNormalize(emb))
@@ -2914,12 +2953,9 @@ object Extensions {
     // the SAME stored attributed table the filtered search serves from
     // (one artifact, two consumers — see [[ivfpqAttrCodes]])
     val codesAttr = ivfpqAttrCodes(embL, srcPath, nCells, cbs, cs)
-    val eL = pqNormalize(embL, keep = Seq("label"))
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
-    val prepared = pqWithSubs(eL.join(qids, Seq("vec_id")), m, ds)
+    def prepare(q: DataFrame) = pqWithSubs(pqNormalize(q, keep = Seq("label")), m, ds)
       .select(col("vec_id").as("query_id"), col("nv").as("qv"),
-        lut.as("lut"), col("label").as("qlabel"))
+        pqLut(cbs).as("lut"), col("label").as("qlabel"))
     // the inequality becomes equalities: one routed row per NON-query
     // label, against the ≤nLabels-row STORED vocabulary (built once
     // beside the attributed table — never a per-search index or
@@ -2928,8 +2964,8 @@ object Extensions {
     // null-drops mirrored); past it, the ≤nLabels-row broadcast
     // nested-loop is the right plan for a theta-join this small.
     val labelsDf = ivfpqAttrLabels(codesAttr, srcPath, nCells)
-    collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    collectQueryBatch(embL, qids)(prepare) match {
+      case Some((schema, rows)) =>
         val vocab = labelsDf.collect().map(_.get(0)).filter(_ != null)
         val routed: Seq[org.apache.spark.sql.Row] = rows.toSeq.flatMap { r =>
           val qlabel = r.get(3)
@@ -2939,7 +2975,7 @@ object Extensions {
                 org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2),
                   cell, l) }.toSeq }
         }
-        val pf = prepared.schema.fields
+        val pf = schema.fields
         val queries = localFrame(embL.sparkSession,
           pf.take(3).toSeq :+ cellField :+ pf(3).copy(name = "label"), routed)
         val probeRows = routed
@@ -2947,7 +2983,7 @@ object Extensions {
         adcCellSearch(emb, queries, codesAttr, m, kw, PqRerank, AnnK, src,
           filterCols = Seq("label"), probeRows0 = Some(probeRows))
       case None =>
-        val queries = cacheTracked(routeCells(prepared,
+        val queries = cacheTracked(routeCells(prepare(queryRows(embL, qids)),
           "query_id", "qv", cs, nProbe,
           payload = Seq("qv", "lut", "qlabel")))
         val labels = broadcast(labelsDf.select(col("label").as("neg_label")))
@@ -3286,7 +3322,6 @@ object Extensions {
                  cbs0: Option[Array[Array[Array[Double]]]] = None,
                  cs0: Option[Array[Array[Double]]] = None,
                  ms0: Option[Array[Array[Double]]] = None): DataFrame = {
-    val qids = broadcast(queryIds.select("vec_id"))
     val e = pqNormalize(emb)
     val cs = cs0.getOrElse(ivfCentroids(emb, nCells = nCells, centroidSrc = src))
     if (cs.isEmpty) return emptyTopK(e)
@@ -3298,15 +3333,13 @@ object Extensions {
     val kw = cbs(0).length
     val cellCodes = codes0.getOrElse(
       ivfpqrCellCodes(emb, cbs, cs, ms, src, cellCap, nCells))
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
-    val prepared = pqWithSubs(e.join(qids, Seq("vec_id")), m, ds)
-      .select(col("vec_id").as("query_id"), col("nv").as("qv"), lut.as("lut"))
+    def prepare(q: DataFrame) = pqWithSubs(pqNormalize(q), m, ds)
+      .select(col("vec_id").as("query_id"), col("nv").as("qv"), pqLut(cbs).as("lut"))
     // driver routing within the bound (probeLocal block); the per-cell
     // mean dot (cdot) is the same strict left-to-right dot the
     // broadcast meanFrame join computed
-    collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    collectQueryBatch(emb, queryIds)(prepare) match {
+      case Some((schema, rows)) =>
         val routed: Seq[org.apache.spark.sql.Row] = rows.toSeq.flatMap { r =>
           val qv = r.getSeq[Double](1)
           probeLocal(qv, cs, nProbe).map { case (cell, _) =>
@@ -3314,7 +3347,7 @@ object Extensions {
               localDot(qv, ms(cell))) }
         }
         val queries = localFrame(emb.sparkSession,
-          prepared.schema.fields.toSeq :+ cellField :+
+          schema.fields.toSeq :+ cellField :+
             org.apache.spark.sql.types.StructField("cdot",
               org.apache.spark.sql.types.DoubleType, nullable = false),
           routed)
@@ -3323,7 +3356,7 @@ object Extensions {
         adcCellSearch(emb, queries, cellCodes, m, kw, rerank, k, src,
           adcExtra = col("cdot"), probeRows0 = Some(probeRows))
       case None =>
-        val queries = cacheTracked(routeCells(prepared,
+        val queries = cacheTracked(routeCells(prepare(queryRows(emb, queryIds)),
           "query_id", "qv", cs, nProbe, payload = Seq("qv", "lut"))
           .join(broadcast(meanFrame(emb.sparkSession, ms)), Seq("cell"))
           .withColumn("cdot", dotD(col("qv"), col("mv"))).drop("mv"))
@@ -3451,29 +3484,28 @@ object Extensions {
               kPerHalf: Int = ImiK, nProbe: Int = ImiNProbe,
               probeA: Int = ImiProbeA,
               src: Option[String] = None): DataFrame = {
-    val qids = broadcast(queryIds.select("vec_id"))
     val e = pqNormalize(emb)
     val cs0 = imiCentroids(emb, 0, kPerHalf, src)
     val cs1 = imiCentroids(emb, 1, kPerHalf, src)
     if (cs0.isEmpty || cs1.isEmpty) return emptyTopK(e)
     val corpus = imiCellTable(emb, cs0, cs1, src)
-    val prepared = imiHalves(emb).join(qids, Seq("vec_id"))
+    def prepare(q: DataFrame) = imiHalves(q)
       .select(col("vec_id").as("query_id"), col("nv").as("qv"),
         col("h0"), col("h1"))
     // driver product routing within the bound (probeLocalImi); the
     // fallback keeps the prepared frame cached — the two per-half
     // routings inside imiRouteCells would otherwise each re-run the
     // corpus-sized query fetch (see imipqTopK's twin comment)
-    val queries = collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    val queries = collectQueryBatch(emb, queryIds)(prepare) match {
+      case Some((schema, rows)) =>
         localFrame(emb.sparkSession,
-          prepared.schema.fields.take(2).toSeq :+ cellField,
+          schema.fields.take(2).toSeq :+ cellField,
           rows.toSeq.flatMap { r =>
             probeLocalImi(r.getSeq[Double](2), r.getSeq[Double](3),
               cs0, cs1, nProbe, probeA).map(cell =>
               org.apache.spark.sql.Row(r.get(0), r.get(1), cell)) })
       case None =>
-        imiRouteCells(cacheTracked(prepared), "query_id", cs0, cs1,
+        imiRouteCells(cacheTracked(prepare(queryRows(emb, queryIds))), "query_id", cs0, cs1,
           nProbe, probeA, payload = Seq("qv"))
     }
     val w = Window.partitionBy(col("query_id"))
@@ -3561,7 +3593,6 @@ object Extensions {
                 cbs0: Option[Array[Array[Array[Double]]]] = None,
                 csH0: Option[Array[Array[Double]]] = None,
                 csH1: Option[Array[Array[Double]]] = None): DataFrame = {
-    val qids = broadcast(queryIds.select("vec_id"))
     val e = pqNormalize(emb)
     val cbs = cbs0.getOrElse(pqCodebooks(emb, codebookSrc = src))
     val cs0 = csH0.getOrElse(imiCentroids(emb, 0, kPerHalf, src))
@@ -3575,39 +3606,34 @@ object Extensions {
     // query side: the M×K ADC LUT + both halves, routed to nProbe
     // product cells; CACHED (tracked) for the same two-consumer reason
     // as ivfpqTopK (the probed-cell collect + the scoring join)
-    val lut = array((0 until m).flatMap(mi =>
-      cbs(mi).map(cwd => pqSubDot(col(s"sub_$mi"), cwd))): _*)
     val hd = (size(col("nv")) / 2).cast("int")
-    // cached BEFORE the routing: imiRouteCells consumes q TWICE (one
-    // routeCells per half) — uncached, each routing would re-run the
-    // corpus-sized raw fetch + the query-id TakeOrdered (the same
-    // double-scan class the round-9 ADVICE flagged on ivfpqTopK);
-    // cached, the query side is ONE pass (PlanSpec counts the scans)
-    val prepared = pqWithSubs(e.join(qids, Seq("vec_id")), m, ds)
+    def prepare(q: DataFrame) = pqWithSubs(pqNormalize(q), m, ds)
       .select(col("vec_id").as("query_id"), col("nv").as("qv"),
-        lut.as("lut"),
+        pqLut(cbs).as("lut"),
         slice(col("nv"), lit(1), hd).as("h0"),
         // remaining length, not hd — odd dims (see [[imiHalves]])
         slice(col("nv"), hd + 1, size(col("nv")) - hd).as("h1"))
     // driver product routing within the bound (probeLocalImi block);
-    // the fallback caches the prepared frame (consumed once per half
-    // routing) and the routed frame (probed-cell collect + scoring
-    // join) exactly as before
-    collectQueryBatch(prepared) match {
-      case Some(rows) =>
+    // the fallback caches the prepared frame BEFORE the routing:
+    // imiRouteCells consumes it TWICE (one routeCells per half), and
+    // uncached each routing would re-run the corpus-sized raw fetch +
+    // the query-id TakeOrdered (PlanSpec counts the scans); the routed
+    // frame is cached too (probed-cell collect + scoring join)
+    collectQueryBatch(emb, queryIds)(prepare) match {
+      case Some((schema, rows)) =>
         val routed: Seq[org.apache.spark.sql.Row] = rows.toSeq.flatMap { r =>
           probeLocalImi(r.getSeq[Double](3), r.getSeq[Double](4),
             cs0, cs1, nProbe, probeA).map(cell =>
             org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), cell))
         }
         val queries = localFrame(emb.sparkSession,
-          prepared.schema.fields.take(3).toSeq :+ cellField, routed)
+          schema.fields.take(3).toSeq :+ cellField, routed)
         val probeRows = routed.map(r => org.apache.spark.sql.Row(r.get(3)))
           .distinct
         adcCellSearch(emb, queries, cellCodes, m, kw, rerank, k, src,
           probeRows0 = Some(probeRows))
       case None =>
-        val q = cacheTracked(prepared)
+        val q = cacheTracked(prepare(queryRows(emb, queryIds)))
         val queries = cacheTracked(imiRouteCells(q, "query_id", cs0, cs1,
           nProbe, probeA, payload = Seq("qv", "lut")))
         adcCellSearch(emb, queries, cellCodes, m, kw, rerank, k, src)
@@ -4121,7 +4147,7 @@ object Extensions {
             org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
         }
       }
-      spark.read.parquet(dir.toString)
+      Tables.parquet(spark, dir.toString)
     } catch {
       // the fixture is an optimization, never a point of failure: on a
       // read-only cwd, disk-full, unsupported atomic move, or any
@@ -4173,17 +4199,6 @@ object Extensions {
           col("recall_at_10"),
           (col("recall_at_10") >= threshold).as("pass"))
     }
-    // ONE cached query-id frame across every path: the 16-row set is
-    // identical per path, and each path's own derivation pays a
-    // corpus TakeOrdered — wasted scans this metric doesn't need
-    // (the paths' search semantics are untouched; qids is the same
-    // frame they would derive)
-    val qidsDf = cacheTracked(annQueryIds(
-      Tables.embeddings(spark, sfDir).select(col("vec_id"))))
-    // materialized BEFORE the parallel section: every path's eager
-    // routing collect forces this cache — racing threads would each
-    // recompute the TakeOrdered into it
-    qidsDf.count()
     // ONE cached base-embeddings frame across every path (round 15):
     // each path's driver-routing collect otherwise re-scans the raw
     // corpus to fetch the identical 16 query vectors — 7 scans per
@@ -4193,9 +4208,17 @@ object Extensions {
     // top of it) automatically; search semantics untouched. Cache is
     // session-tracked and cleared by the bench between reps — nothing
     // persists across runs.
-    val embBase = cacheTracked(Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
+    val embBase = cacheTracked(annCorpus(spark, sfDir))
     embBase.count()
+    // ONE cached query-id frame across every path: the 16-row set is
+    // identical per path, and the paths that join it (lsh, pq) would
+    // each pay a corpus TakeOrdered. It is [[annQueryIds]] of the
+    // corpus frame each path derives, so the driver-routed paths still
+    // fetch their batch in the one-job TakeOrdered of
+    // [[collectQueryBatch]]. Materialized BEFORE the parallel section:
+    // racing threads would each recompute the TakeOrdered into it
+    val qidsDf = cacheTracked(annQueryIds(embBase))
+    qidsDf.count()
     val qids = Some(qidsDf)
     // CONCURRENT path construction: each search path's construction
     // runs eager driver-side jobs (model fixture loads, probed-cell

@@ -2405,6 +2405,27 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("query batch: the one-job TakeOrdered fetch returns exactly the emb ⋈ qids rows") {
+    import spark.implicits._
+    // ids 0..39 with distinct vectors; the hash order decides the cut
+    val base = (0L until 40L).map(i => (Option(i), Seq(i.toDouble, 1.0))).toDF("vec_id", "v")
+    val order = Extensions.hashOrderedSample(base, "vec_id", 17).collect().map(_.getLong(0))
+    def row(id: Option[Long]) = Seq((id, Seq(-1.0, 2.0))).toDF("vec_id", "v")
+    val corpora = Seq(
+      "unique ids" -> base,
+      "duplicate at the cut" -> base.unionByName(row(Some(order(15)))),
+      "duplicate inside the batch" -> base.unionByName(row(Some(order(0)))),
+      "duplicate just past the cut" -> base.unionByName(row(Some(order(16)))),
+      "null id" -> base.unionByName(row(None)),
+      "fewer rows than the batch" -> base.filter(col("vec_id") < 5))
+    for ((name, emb) <- corpora) {
+      val qids = Extensions.annQueryIds(emb)
+      val (_, got) = Extensions.collectQueryBatch(emb, qids)(identity).get
+      val want = Extensions.queryRows(emb, qids).collect()
+      assert(got.map(_.toString).sorted.toSeq == want.map(_.toString).sorted.toSeq, name)
+    }
+  }
+
   test("sessionMemo: a foreign-session memo entry is evicted and re-derived for the live session") {
     // memo keys carry the session's identity hash, which a stopped
     // session's address reuse can collide with; a sibling session's

@@ -96,6 +96,57 @@ class PlanSpec extends SparkSpec {
     assert(joins <= 3, s"expected ≤3 equi-joins (1 banded candidate join):\n$plan")
   }
 
+  /** Every physical node of `p`, descending into AQE query stages and
+    * into the plans of cached relations. */
+  private def nodesDeep(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p.collect { case n => n }.flatMap {
+      case a: AdaptiveSparkPlanExec => nodesDeep(a.executedPlan)
+      case s: QueryStageExec => s +: nodesDeep(s.plan)
+      case i: InMemoryTableScanExec => i +: nodesDeep(i.relation.cachedPlan)
+      case n => Seq(n)
+    }
+  }
+
+  test("minhash signature: one codegen kernel, no transform lambda in the projection") {
+    val sig = ext.Extensions.minhashSignatures(model.Tables.documents(spark, sf0001))
+    val plan = finalPlan(sig)
+    assert(!plan.contains("lambdafunction") && !plan.contains("transform("),
+      s"higher-order functions back in the signature projection:\n$plan")
+    assert(plan.linesIterator.exists(l => l.contains("shingle_minhash") && l.contains("*(")),
+      s"shingle_minhash outside whole-stage codegen:\n$plan")
+  }
+
+  test("minhash band stage: bucket size and both anchors plan as ONE Window and ONE Sort") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    try {
+      val sig = ext.Extensions.minhashSignatures(model.Tables.documents(spark, sf0001))
+      val cand = ext.Extensions.bandCandidates(ext.Extensions.minhashBanded(sig), Seq("band", "bk"))
+      cand.collect()
+      val sized = nodesDeep(cand.queryExecution.executedPlan).collect {
+        case i: InMemoryTableScanExec if i.relation.output.exists(_.name == "bsz") =>
+          nodesDeep(i.relation.cachedPlan)
+      }
+      assert(sized.nonEmpty, "the cached band-sizing frame is missing from the plan")
+      val windows = sized.head.count(_.isInstanceOf[WindowExec])
+      val sorts = sized.head.count(_.isInstanceOf[SortExec])
+      assert(windows == 1 && sorts == 1,
+        s"band stage plans $windows Window and $sorts Sort nodes:\n${sized.head.mkString("\n")}")
+    } finally ext.Extensions.releaseCaches()
+  }
+
+  test("warm ext_topk_ivfpq construction runs at most one Spark job (the query batch)") {
+    try {
+      ext.Extensions.topkIvfpq.fn(spark, sf0001).collect() // stored models, fixtures, memos
+      val jobs = jobsIn(ext.Extensions.topkIvfpq.fn(spark, sf0001))
+      assert(jobs <= 1, s"warm ivfpq construction ran $jobs Spark jobs")
+    } finally ext.Extensions.releaseCaches()
+  }
+
   test("simhash candidate generation is banded equi-join, not all-pairs") {
     val plan = physical(ext.Extensions.dedupSimhash.fn(spark, sf0001))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),

@@ -208,6 +208,40 @@ class PropertySpec extends SparkSpec {
     }, minSuccessful(6))
   }
 
+  test("ShingleMinHash equals the array_min(transform(shingle_sha60)) form, codegen and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val perms = 16
+    val text = Gen.oneOf(
+      Gen.alphaNumStr,
+      Gen.listOf(Gen.oneOf('a', 'Z', ' ', 'é', 'ß', '日', '本', '\u0000')).map(_.mkString),
+      Gen.listOf(Gen.oneOf("😀", "x", "語")).map(_.mkString),
+      Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.alphaChar)).map(_.mkString),
+      Gen.const(""), Gen.const(null: String))
+    val case_ = for {
+      texts <- Gen.listOfN(40, text)
+      n <- Gen.choose(1, 7)
+      mix <- Gen.oneOf(Gen.const(53919893334301279L), Gen.choose(Long.MinValue, Long.MaxValue))
+    } yield (texts, n, mix)
+    check(Prop.forAll(case_) { case (texts, n, mix) =>
+      val schema = StructType(Seq(StructField("text", StringType)))
+      val rows = texts.map(Row(_))
+      // a local relation folds the projection on the driver
+      // (interpreted); an RDD-backed frame runs it in whole-stage codegen
+      val frames = Seq(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+      val kernel = graft.expr.ColumnOps.shingleMinHash(col("text"), n, perms, mix)
+      val hashed = graft.expr.ColumnOps.shingleSha60(col("text"), n)
+      frames.forall { df =>
+        val bad = (0 until perms).map { i =>
+          not(kernel(i) <=> array_min(transform(hashed, h => h.bitwiseXOR(lit(i * mix)))))
+        }.reduce(_ || _)
+        df.filter(bad || (col("text").isNull =!= kernel.isNull)).count() == 0
+      }
+    }, minSuccessful(5))
+  }
+
   private def minSuccessful(n: Int) =
     org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(n)
 

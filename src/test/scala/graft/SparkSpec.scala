@@ -22,6 +22,18 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `f` runs, counted by the one src/main
+    * listener after a bus drain. */
+  def jobsIn(f: => Unit): Int = {
+    val rec = Dev.recorder(spark)
+    try {
+      rec.drain()
+      val j0 = rec.jobCount
+      f
+      rec.drain().jobCount - j0
+    } finally spark.sparkContext.removeSparkListener(rec)
+  }
+
   /** SHA-256-prefix 60-bit hash — the ONE in-test twin of
     * graft.expr.Sha60 (previously copied per suite; a drifting copy
     * would silently weaken every twin that hashes). */
