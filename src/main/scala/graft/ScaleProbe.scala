@@ -1124,8 +1124,8 @@ object ScaleProbe {
       .select("cluster_id").distinct().count()
     val nClusters = labels.select("cluster_id").distinct().count()
     val (nOut, tPurge) = timed(
-      ext.Extensions.semanticClustersPurgeFrom(labels, corpus, purged)
-        .count())
+      ext.Extensions.purgeClusterLabels(labels, "vec_id", purged,
+        ext.Extensions.semanticSurvivorGraph(corpus)).count())
     println(f"SEMLIFEPROBE purge n=$nVecs%d purged=$nPurged%d " +
       f"affected=$nAffected%d/$nClusters%d clusters out=$nOut%d " +
       f"purge_wall=$tPurge%.1fs recluster_wall=$tCluster%.1fs " +
@@ -1455,7 +1455,8 @@ object ScaleProbe {
       .select("doc_id", "hh", "n_chars", "shard").cache()
     val nAffected = purgeRows.select("shard").distinct().count()
     val (receipt, tReceipt) = timed(
-      ext.Extensions.shardPurgeManifestFrom(stored, sIdx, purgeRows)
+      ext.Extensions.shardManifestFold(stored, sIdx,
+          broadcast(purgeRows.select("doc_id")), purgeRows, purgeRows.limit(0))
         .collect().map(_.toSeq).toSeq)
     val (full, tFull) = timed(
       ext.Extensions.manifestAggOf(
@@ -1512,10 +1513,10 @@ object ScaleProbe {
     val postings = storedOnce(spark, s"target/tmp-refresh/v3-postings-$nDocs.parquet")(
       ext.Extensions.postingsOf(snapA))
     val statuses = ext.Extensions.snapshotStatuses(snapA, snapB).cache()
-    val stale = statuses
-      .filter(col("status").isin("removed", "changed")).select("doc_id")
-    val fresh = statuses
-      .filter(col("status").isin("added", "changed")).select("doc_id")
+    val stale = statuses.filter(ext.Extensions.SnapshotDiff.isStale)
+      .select("doc_id")
+    val fresh = statuses.filter(ext.Extensions.SnapshotDiff.isFresh)
+      .select("doc_id")
     // diff wall: populate the cache + count the delta (the operator's
     // adaptive-hint sizing action)
     val ((nStale, nFresh), tDiff) = timed((stale.count(), fresh.count()))
@@ -1557,57 +1558,23 @@ object ScaleProbe {
     // index alone; the next compaction re-derives it). The probe
     // asserts the split exactly: counts identical to the rebuild,
     // non-tombstoned canonicals identical to the rebuild, tombstones
-    // only where the snapshot-A canonical was stale. Each half is the
-    // library's own fold (substringGramIndex / the E71b subtract) —
-    // the composition arithmetic is the only new content, which is
-    // why this is a probe and not a registered twin of the
-    // oracle-paired halves.
+    // only where the snapshot-A canonical was stale, at a scale the
+    // registered ext_substr_refresh never reaches.
     val storedG = storedOnce(spark, s"target/tmp-refresh/v3-substrgrams-$nDocs.parquet")(
       ext.Extensions.substringGramIndex(snapA))
     val isStale: Column => Column =
       d => (d < nDocs) && pmod(d, lit(100)).isin(0, 1)
-    // JOIN-SHAPED fold: subtract the stale docs' gram counts from the
-    // stored index (delta-sized right side — AQE broadcasts it, the
-    // index never shuffles for the purge half), tombstone surviving
-    // grams whose stored witness died, then full-outer the fresh
-    // docs' grams in (counts add, canonicals min-fold; a gram whose
-    // stored occurrences ALL died takes the fresh min with NO
-    // tombstone — the fresh witness is the true canonical). A
+    // the production JOIN-SHAPED fold (substrRefreshFold): subtract
+    // the stale docs' gram counts from the stored index, tombstone
+    // surviving grams whose stored witness died, then full-outer the
+    // fresh docs' grams in (counts add, canonicals min-fold). A
     // one-shuffle union+groupBy(g) variant — the E57 compaction shape
     // — was measured and REJECTED: min(struct) is not
     // hash-aggregatable, so the union fold sort-aggregates the whole
     // stored+delta frame (37.7 s vs this fold's 10.3 s at 2M docs).
-    val staleG = ext.Extensions.substringGramIndex(
-        snapA.filter(isStale(col("doc_id"))))
-      .select(col("g"), col("cnt").as("pcnt"))
-    val afterPurge = storedG.join(staleG, Seq("g"), "left")
-      .select(col("g"),
-        (col("cnt") - coalesce(col("pcnt"), lit(0L))).as("cnt"),
-        col("cdoc"), col("cpos"), isStale(col("cdoc")).as("tomb"))
-      .filter(col("cnt") >= 1)
-    val freshG = ext.Extensions.substringGramIndex(
-        snapB.join(fresh, Seq("doc_id")))
-      .select(col("g"), col("cnt").as("fcnt"),
-        col("cdoc").as("fdoc"), col("cpos").as("fpos"))
-    val refreshed = afterPurge.join(freshG, Seq("g"), "full_outer")
-      .select(col("g"),
-        (coalesce(col("cnt"), lit(0L)) + coalesce(col("fcnt"), lit(0L)))
-          .as("cnt"),
-        coalesce(col("tomb"), lit(false)).as("tomb"),
-        // merged canonical: min of the surviving stored witness and
-        // the fresh one — undefined (null) under a tombstone. Each
-        // side wraps in when(isNotNull, struct): least() skips null
-        // ARGUMENTS, but a struct(null, null) would sort BELOW a
-        // real witness and corrupt the min
-        when(coalesce(col("tomb"), lit(false)), lit(null))
-          .otherwise(least(
-            when(col("cdoc").isNotNull,
-              struct(col("cdoc").as("d"), col("cpos").as("p"))),
-            when(col("fdoc").isNotNull,
-              struct(col("fdoc").as("d"), col("fpos").as("p")))))
-          .as("mc"))
-      .select(col("g"), col("cnt"), col("tomb"),
-        col("mc.d").as("cdoc"), col("mc.p").as("cpos"))
+    val refreshed = ext.Extensions.substrRefreshFold(storedG,
+      snapA.filter(isStale(col("doc_id"))), snapB.join(fresh, Seq("doc_id")),
+      isStale)
     // walls time ONLY the fold / rebuild materializations (one sig agg
     // each); the exactness assertions run AFTER, untimed — a first
     // draft timed the exceptAll comparison jobs inside the refresh
@@ -1620,17 +1587,17 @@ object ScaleProbe {
       .exceptAll(rebuilt.select("g", "cnt")).count() == 0 &&
       rebuilt.select("g", "cnt")
         .exceptAll(refr.select("g", "cnt")).count() == 0
-    val canonOk = refr.filter(!col("tomb"))
+    val canonOk = refr.filter(!col("tombstoned"))
       .select(col("g"), col("cdoc"), col("cpos"))
       .exceptAll(rebuilt.select(col("g"), col("cdoc"), col("cpos")))
       .count() == 0
     // every tombstone's stored witness was stale — asserted against
     // the ORIGINAL index (the fold's own column is not the evidence)
-    val tombOk = refr.filter(col("tomb")).select("g")
+    val tombOk = refr.filter(col("tombstoned")).select("g")
       .join(storedG.filter(!isStale(col("cdoc"))).select("g"),
         Seq("g"), "left_semi").count() == 0
     val nG = refr.count()
-    val nTomb = refr.filter(col("tomb")).count()
+    val nTomb = refr.filter(col("tombstoned")).count()
     refr.unpersist(); rebuilt.unpersist()
     println(f"REFRESHPROBE substr grams=$nG%d tombstoned=$nTomb%d " +
       f"counts_exact=$cntsOk%b canon_exact_nontomb=$canonOk%b " +
@@ -1790,28 +1757,11 @@ object ScaleProbe {
             .unionByName(docsB.select("doc_id")
               .join(docsA.select("doc_id"), Seq("doc_id"), "left_anti")),
           Seq("doc_id"))
-      val freshSigs = ext.Extensions.minhashSignatures(freshDocs).cache()
-      val refreshedSigs = sigsA.join(stale, Seq("doc_id"), "left_anti")
-        .unionByName(freshSigs).cache()
-      val bandF = ext.Extensions.minhashBanded(freshSigs)
-        .select(col("band"), col("bk"), col("doc_id").as("fid"))
-      val bandR = ext.Extensions.minhashBanded(refreshedSigs)
-        .select(col("band"), col("bk"), col("doc_id").as("oid"))
-      val cand = bandF.join(bandR, Seq("band", "bk"))
-        .filter(col("fid") =!= col("oid"))
-        .select(least(col("fid"), col("oid")).as("id_a"),
-          greatest(col("fid"), col("oid")).as("id_b"))
-        .distinct()
-      val fPairs = ext.Extensions
-        .sigConfirm(cand, "id_a", "id_b", refreshedSigs, refreshedSigs)
-        .select("id_a", "id_b").cache()
-      if (sys.env.contains("LR_DEBUG"))
-        fPairs.write.mode("overwrite").parquet(s"$dir/fpairs.parquet")
+      val (freshSigs, fPairs) =
+        ext.Extensions.mhFreshPairs(sigsA, stale, freshDocs)
       val out = ext.Extensions.refreshClusterLabels(labelsA, "doc_id",
         stale, freshSigs.select("doc_id"), fPairs,
-        survivors => pairsA
-          .join(survivors.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
-          .join(survivors.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi"))
+        ext.Extensions.storedSurvivorGraph(pairsA, "doc_id"))
         .localCheckpoint()
       val nOut = out.count()
       assert(nOut == nB, s"refreshed label count $nOut != |B| $nB")
@@ -1836,38 +1786,6 @@ object ScaleProbe {
     }
     val mismatch = refreshed.exceptAll(rebuilt).count() +
       rebuilt.exceptAll(refreshed).count()
-    if (mismatch > 0 && sys.env.contains("LR_DEBUG")) {
-      val bad = refreshed.exceptAll(rebuilt)
-        .select(col("doc_id"), col("cluster_id").as("ref_cl"))
-        .join(rebuilt.select(col("doc_id"), col("cluster_id").as("reb_cl")),
-          Seq("doc_id"), "left")
-      bad.withColumn("family", col("doc_id") % nFamilies)
-        .withColumn("removed_m", col("doc_id") % 199 === 0)
-        .withColumn("revised_m", col("doc_id") % 211 === 0)
-        .orderBy("family", "doc_id")
-        .show(60, false)
-      // per-family view of one bad family: all members in both labelings
-      val f0 = bad.select((col("doc_id") % nFamilies).as("f")).limit(1)
-        .head().getLong(0)
-      println(s"family $f0 members:")
-      val fp = spark.read.parquet(s"$dir/fpairs.parquet")
-      println(s"fpairs incident to family $f0:")
-      fp.filter(col("id_a") % nFamilies === f0 || col("id_b") % nFamilies === f0)
-        .show(40, false)
-      val badCl = refreshed.filter(col("doc_id") % nFamilies === f0)
-        .select("cluster_id").head().getLong(0)
-      println(s"fpairs incident to wrong-cluster family $badCl:")
-      fp.filter(col("id_a") % nFamilies === badCl || col("id_b") % nFamilies === badCl)
-        .show(40, false)
-      refreshed.filter(col("doc_id") % nFamilies === f0)
-        .select(col("doc_id"), col("cluster_id").as("ref_cl"))
-        .join(rebuilt.filter(col("doc_id") % nFamilies === f0)
-          .select(col("doc_id"), col("cluster_id").as("reb_cl")),
-          Seq("doc_id"), "full_outer")
-        .withColumn("removed_m", col("doc_id") % 199 === 0)
-        .withColumn("revised_m", col("doc_id") % 211 === 0)
-        .orderBy("doc_id").show(40, false)
-    }
     println(f"LABELREFRESHPROBE n=$nDocs%d nB=$nB%d " +
       f"affected=$nAffected%d/$nClusters%d clusters " +
       f"refresh_wall=$tRefresh%.1fs rebuild_wall=$tRebuild%.1fs " +

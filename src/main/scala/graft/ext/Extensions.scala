@@ -5567,6 +5567,10 @@ object Extensions {
   // arrives as the takedown request list; both engines state the same
   // predicate, so every purge query with SQL-expressible semantics is
   // hash-matched end to end.
+  //
+  // The shard, substr and cluster-label purges below have no fold of
+  // their own: each runs its artifact's refresh fold (E76) with nothing
+  // arriving — a takedown is a snapshot diff whose fresh side is empty.
   // =====================================================================
   final val PurgeBucketFrom = 97
 
@@ -5612,33 +5616,6 @@ object Extensions {
       live.queryExecution.logical.toString, live)
   }
 
-  /** Post-purge manifest from (stored receipt, stored shard index,
-    * purge rows = (doc_id, hh, n_chars, shard)): affected shards —
-    * named by the purge rows' own content hashes — are recomputed
-    * from the partition-pruned index minus the purged ids; untouched
-    * shards pass through. Exposed package-private so the spec can
-    * drive it at a shard count where the pass-through path actually
-    * carries rows (at ShardCount=8 a spread purge touches every
-    * shard). */
-  private[graft] def shardPurgeManifestFrom(stored: DataFrame,
-      idx: DataFrame, purge: DataFrame): DataFrame = {
-    // purge-sized collect (deployment: the takedown request list) —
-    // the literal below partition-prunes the stored index to the
-    // affected shard directories at plan time
-    val affected = purge.select("shard").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (affected.isEmpty) return stored.orderBy("shard")
-    val untouched = stored
-      .filter(!col("shard").isin(affected.map(Int.box): _*))
-      .select("shard", "n_docs", "total_chars", "min_hash", "max_hash",
-        "checksum")
-    val recomputed = manifestAggOf(
-      idx.filter(col("shard").isin(affected.map(Int.box): _*))
-        .join(broadcast(purge.select("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("shard"), col("hh"), col("n_chars")))
-    untouched.unionByName(recomputed).orderBy("shard")
-  }
-
   val shardPurge: Q = Q("ext_shard_purge",
     (spark, sfDir) => {
       // CACHED (tracked): the purge frame feeds the affected-shard
@@ -5650,8 +5627,10 @@ object Extensions {
           .filter(col("bucket") >= PurgeBucketFrom)
           .select(col("doc_id"), h.as("hh"), col("n_chars"),
             pmod(h, lit(ShardCount.toLong)).cast("int").as("shard")))
-      shardPurgeManifestFrom(shardManifestFullFixture(spark, sfDir),
-        shardIndexFixture(spark, sfDir), purge)
+      // nothing arrives: the refresh fold with an empty arrival side
+      shardManifestFold(shardManifestFullFixture(spark, sfDir),
+        shardIndexFixture(spark, sfDir), broadcast(purge.select("doc_id")),
+        purge, purge.limit(0))
     },
     // the monolithic manifest SQL over the filtered corpus: purged
     // receipts must equal rebuilt-from-scratch receipts — the same
@@ -5748,23 +5727,6 @@ object Extensions {
       live.queryExecution.logical.toString, live)
   }
 
-  /** The purge fold over any stored (g, cnt, cdoc, cpos) index:
-    * subtract the purge rows' own gram counts (their gram pass is the
-    * O(purge) cost), tombstone canonicals owned by a purged doc.
-    * `isPurged` states purged-ness of a doc_id column — the Q uses
-    * the content-bucket predicate; the spec plants explicit ids. */
-  private[graft] def substrPurgeFrom(stored: DataFrame, purged: DataFrame,
-      isPurged: Column => Column): DataFrame = {
-    val pg = substringGramIndex(purged)
-      .select(col("g"), col("cnt").as("pcnt"))
-    stored.join(broadcast(pg), Seq("g"), "left")
-      .select(col("g"),
-        (col("cnt") - coalesce(col("pcnt"), lit(0L))).as("cnt"),
-        isPurged(col("cdoc")).as("tombstoned"))
-      .filter(col("cnt") >= 1)
-      .orderBy("g")
-  }
-
   val substrPurge: Q = Q("ext_substr_purge",
     (spark, sfDir) => {
       val stored = substrGramsFullFixture(spark, sfDir)
@@ -5773,9 +5735,11 @@ object Extensions {
       val purged = bucketedDocs(spark, sfDir)
         .filter(col("bucket") >= PurgeBucketFrom)
         .select(col("doc_id"), col("text"))
-      substrPurgeFrom(stored, purged,
+      // nothing arrives: the purge half of the refresh fold, served
+      substrPurgeHalf(stored, purged,
         d => pmod(Scalars.hash60(d.cast("string")), lit(100L)) >=
           PurgeBucketFrom)
+        .select("g", "cnt", "tombstoned").orderBy("g")
     },
     Some(s"""WITH d AS (
             |  SELECT doc_id, regexp_split_to_array(
@@ -5816,7 +5780,8 @@ object Extensions {
   // it); under a BINDING hot-bucket star cap the re-derived survivor
   // pairs may differ from a full rebuild's star topology — the same
   // caveat every banded arrival carries, settled by the next full
-  // dedup run.
+  // dedup run. The verb is the E76f refresh fold with nothing arriving
+  // ([[purgeClusterLabels]]).
   // =====================================================================
   /** The stored FULL-corpus signature table — the dedup family's
     * index artifact the purge re-derives survivor pairs from (the
@@ -5829,46 +5794,24 @@ object Extensions {
       live.queryExecution.logical.toString, live)
   }
 
-  /** The purge fold over stored (labels, signatures): re-cluster the
-    * affected components' survivors, pass everything else through.
-    * Exposed package-private so the spec can drive the planted
-    * bridge-split chain. */
-  private[graft] def clustersPurgeFrom(labels: DataFrame, sigs: DataFrame,
-      purged: DataFrame): DataFrame = {
-    // purge-sized collect: the affected component ids
-    val affected = labels.join(broadcast(purged), Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct().collect().map(_.getLong(0))
-    val untouched = labels
-      .filter(!col("cluster_id").isin(affected.map(Long.box): _*))
-    val relabeled =
-      if (affected.isEmpty) untouched
-      else {
-        val survivors = labels
-          .filter(col("cluster_id").isin(affected.map(Long.box): _*))
-          .join(broadcast(purged), Seq("doc_id"), "left_anti")
-          .select("doc_id")
-        // CACHED (tracked): the survivor signatures feed the banding,
-        // both confirm sides, and the CC node set
-        val sigA = cacheTracked(
-          sigs.join(broadcast(survivors), Seq("doc_id"), "left_semi"))
-        val pairs = sigConfirm(
-          bandCandidates(minhashBanded(sigA), Seq("band", "bk")),
-          "id_a", "id_b", sigA, sigA).select("id_a", "id_b")
-        val recomputed = graft.ops.Graph.connectedComponents(pairs,
-            sigA.select(col("doc_id").as("id")))
-          .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-        untouched.unionByName(recomputed)
-      }
-    relabeled.select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).as("keep"))
-      .orderBy("doc_id")
+  /** The survivor subgraph re-derived from the stored signature table
+    * `sigs`: band + confirm over the survivors' signatures only, nodes
+    * = the survivors the index holds — the `survivorGraphOf` the
+    * minhash takedown hands [[refreshClusterLabels]]. */
+  private[graft] def mhSurvivorGraph(sigs: DataFrame)(
+      survivors: DataFrame): (DataFrame, DataFrame) = {
+    // CACHED (tracked): the survivor signatures feed the banding, both
+    // confirm sides, and the CC node set
+    val sigA = cacheTracked(
+      sigs.join(broadcast(survivors), Seq("doc_id"), "left_semi"))
+    (sigConfirm(bandCandidates(minhashBanded(sigA), Seq("band", "bk")),
+      "id_a", "id_b", sigA, sigA).select("id_a", "id_b"), sigA.select("doc_id"))
   }
 
   val clustersPurge: Q = Q("ext_clusters_purge",
-    (spark, sfDir) => clustersPurgeFrom(
-      minhashComponentLabels(spark, sfDir),
-      mhFullSigsFixture(spark, sfDir),
-      purgeDocIds(spark, sfDir)),
+    (spark, sfDir) => purgeClusterLabels(minhashComponentLabels(spark, sfDir),
+      "doc_id", purgeDocIds(spark, sfDir),
+      mhSurvivorGraph(mhFullSigsFixture(spark, sfDir))),
     // the monolithic recursive-CTE closure over the FILTERED corpus:
     // purged labels must equal rebuilt-from-scratch labels — min-id
     // representatives, splits and all
@@ -6350,51 +6293,69 @@ object Extensions {
     * falls back to the shuffled join that degrades safely. */
   final val RefreshBroadcastMaxIds = 4L << 20
 
-  /** ONE cached diff + delta count per (session, documents
-    * fingerprint): every refresh verb (postings E76, substr E76b) AND
-    * the receipt (E81) consume the same statuses frame, and the delta
-    * COUNT that picks the adaptive join hint is a pure function of
-    * (data, snapshot constants) — so both are memoized through
-    * [[memoizedModel]] instead of re-running the two-corpus-hash-scan
-    * diff job on every fn() call (each bench rep, PlanDump, the plan
-    * audits paid it eagerly before round 13; a composed refresh+report
-    * session also stored the diff twice under two registry entries —
-    * both round-12 ADVICE items). The memo key carries the data
-    * fingerprint, so regenerated data mints a fresh entry; a
-    * missing/regenerating table (fingerprint None) disables the memo
-    * for the call, same contract as the fixtures. The frame re-enters
-    * the tracked-cache registry on every access — cache() on an
-    * already-cached plan is a no-op, and after releaseCaches() it
-    * re-arms the storage (the memoized COUNT stays valid either way:
-    * it is a function of the data, not of cache state). */
-  private[graft] def cachedSnapshotStatuses(spark: SparkSession,
-      sfDir: String): (DataFrame, Long) = {
-    val key = dataFingerprintOpt(s"$sfDir/documents.parquet")
-      .map(fp => s"snapstat:${System.identityHashCode(spark)}:$sfDir:$fp")
-    def derive(): (DataFrame, java.lang.Long) = {
-      // A side from the stored hash metadata (round 14): the refill a
-      // bench rep / fresh session pays drops yesterday's text scan+hash
-      val st = snapshotStatusesFromHashes(snapAHashesFixture(spark, sfDir),
-        snapshotDocsB(spark, sfDir))
+  /** One snapshot diff: the cached (doc_id, status) frame, its delta
+    * size, and the id frames both halves of every refresh consume —
+    * `stale` (removed ∪ changed: leaves the stored artifact) and
+    * `fresh` (added ∪ changed: arrives), named `idCol` and
+    * broadcast-hinted up to [[RefreshBroadcastMaxIds]]. A takedown
+    * (E71) is a diff whose fresh side is empty. */
+  private[graft] final case class SnapshotDiff(statuses: DataFrame,
+      nDelta: Long, idCol: String) {
+    private def ids(status: Column): DataFrame = {
+      val df = statuses.filter(status).select(col("doc_id").as(idCol))
+      if (nDelta <= RefreshBroadcastMaxIds) broadcast(df) else df
+    }
+    def stale: DataFrame = ids(SnapshotDiff.isStale)
+    def fresh: DataFrame = ids(SnapshotDiff.isFresh)
+  }
+
+  private[graft] object SnapshotDiff {
+    val isStale: Column = col("status").isin("removed", "changed")
+    val isFresh: Column = col("status").isin("added", "changed")
+  }
+
+  /** ONE cached diff + delta count per (session, data fingerprint):
+    * every refresh verb AND the receipt (E81) consume the same statuses
+    * frame, and the delta COUNT that picks the adaptive join hint is a
+    * pure function of (data, snapshot constants) — so both are
+    * memoized through [[memoizedModel]] instead of re-running the
+    * two-corpus-hash-scan diff job on every fn() call (each bench rep,
+    * PlanDump, the plan audits paid it eagerly before round 13; a
+    * composed refresh+report session also stored the diff twice under
+    * two registry entries). The memo key carries the data fingerprint,
+    * so regenerated data mints a fresh entry; a missing/regenerating
+    * table (fingerprint None) disables the memo for the call, same
+    * contract as the fixtures. The frame re-enters the tracked-cache
+    * registry on every access — cache() on an already-cached plan is a
+    * no-op, and after releaseCaches() it re-arms the storage (the
+    * memoized COUNT stays valid either way: it is a function of the
+    * data, not of cache state). */
+  private def cachedDiff(spark: SparkSession, sfDir: String, table: String,
+      tag: String, idCol: String)(statuses: => DataFrame): SnapshotDiff = {
+    val key = dataFingerprintOpt(s"$sfDir/$table.parquet")
+      .map(fp => s"$tag:${System.identityHashCode(spark)}:$sfDir:$fp")
+    def derive(): SnapshotDiff = {
+      val st = statuses
       st.cache()
       // one cache-resident action sizes the delta; the count is what
       // picks the join strategy, so it must NOT be an optimizer
       // estimate
-      (st, java.lang.Long.valueOf(
-        st.filter(col("status") =!= "unchanged").count()))
+      SnapshotDiff(st, st.filter(col("status") =!= "unchanged").count(), idCol)
     }
-    val (df, n) = sessionMemo(spark, key, (v: (DataFrame, java.lang.Long)) => v._1)(derive)
-    (cacheTracked(df), n.longValue())
+    val diff = sessionMemo(spark, key, (d: SnapshotDiff) => d.statuses)(derive)
+    cacheTracked(diff.statuses)
+    diff
   }
 
-  /** The adaptive delta-id hint every refresh verb shares: a
-    * batch-sized delta broadcasts (REFRESHPROBE measured the unhinted
-    * SMJ paying the stored index's shuffle map-write, 3.2×); an
-    * oversized one (a near-full re-crawl, where a forced broadcast
-    * would OOM) falls back to the shuffled join that degrades
-    * safely. */
-  private def refreshHint(nDelta: Long): DataFrame => DataFrame =
-    if (nDelta <= RefreshBroadcastMaxIds) broadcast else identity
+  /** The document diff (postings E76, substr E76b, shards E76e,
+    * clusters E76f, the E81 receipt). The A side reads the stored hash
+    * metadata (round 14): the refill a bench rep / fresh session pays
+    * drops yesterday's text scan+hash. */
+  private[graft] def cachedSnapshotStatuses(spark: SparkSession,
+      sfDir: String): SnapshotDiff =
+    cachedDiff(spark, sfDir, "documents", "snapstat", "doc_id")(
+      snapshotStatusesFromHashes(snapAHashesFixture(spark, sfDir),
+        snapshotDocsB(spark, sfDir)))
 
   /** The refreshed snapshot index: stored snapshot-A postings with the
     * diff's stale docs purged and the fresh delta's postings arrived —
@@ -6404,18 +6365,13 @@ object Extensions {
   private[graft] def refreshedSnapshotPostings(spark: SparkSession,
                                                sfDir: String): DataFrame = {
     val b = snapshotDocsB(spark, sfDir)
-    val (statuses, nDelta) = cachedSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed")).select("doc_id"))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed")).select("doc_id"))
+    val diff = cachedSnapshotStatuses(spark, sfDir)
     // purge half: drop every stale doc's postings from the stored
     // index; arrival half: ONE tokenize pass restricted to the
     // fresh delta (the explode runs post-join, delta rows only)
     snapshotAPostingsFixture(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(postingsOf(b.join(fresh, Seq("doc_id"))))
+      .join(diff.stale, Seq("doc_id"), "left_anti")
+      .unionByName(postingsOf(b.join(diff.fresh, Seq("doc_id"))))
   }
 
   lazy val crawlRefresh: Q = Q("ext_crawl_refresh",
@@ -6472,24 +6428,34 @@ object Extensions {
     b < SnapBFrom || pmod(b, lit(SnapRevMod.toLong)) === 0
   }
 
+  /** The purge half of the gram-index fold over any stored (g, cnt,
+    * cdoc, cpos) index — the takedown verb (E71b) on its own, and the
+    * first step of [[substrRefreshFold]]: subtract the stale docs' own
+    * gram counts (the O(delta) gram pass) and tombstone the canonicals
+    * whose witness `isStale`. Output (g, cnt, tombstoned, cdoc, cpos).
+    * No forced broadcast: AQE broadcasts a routine delta at runtime,
+    * and a near-full re-crawl delta, which a broadcast would OOM,
+    * stays a shuffled join. */
+  private[graft] def substrPurgeHalf(stored: DataFrame,
+      staleDocs: DataFrame, isStale: Column => Column): DataFrame = {
+    val staleG = substringGramIndex(staleDocs)
+      .select(col("g"), col("cnt").as("pcnt"))
+    stored.join(staleG, Seq("g"), "left")
+      .select(col("g"),
+        (col("cnt") - coalesce(col("pcnt"), lit(0L))).as("cnt"),
+        isStale(col("cdoc")).as("tombstoned"), col("cdoc"), col("cpos"))
+      .filter(col("cnt") >= 1)
+  }
+
   /** The refresh fold over any stored (g, cnt, cdoc, cpos) index —
-    * purge half (subtract the stale docs' own gram counts, tombstone
-    * canonicals whose witness died) full-outer-joined with the fresh
-    * docs' gram pass (counts add, canonicals min-fold). Exposed
-    * package-private so RefreshSpec can drive planted tombstone /
-    * all-died / fresh-only gram cases at any scale. */
+    * [[substrPurgeHalf]] full-outer-joined with the fresh docs' gram
+    * pass (counts add, canonicals min-fold). Exposed package-private
+    * so RefreshSpec can drive planted tombstone / all-died /
+    * fresh-only gram cases at any scale. */
   private[graft] def substrRefreshFold(stored: DataFrame,
       staleDocs: DataFrame, freshDocs: DataFrame,
       isStale: Column => Column): DataFrame = {
-    val staleG = substringGramIndex(staleDocs)
-      .select(col("g"), col("cnt").as("pcnt"))
-    // delta-sized right side — AQE broadcasts it; the stored index
-    // never shuffles for the purge half
-    val afterPurge = stored.join(staleG, Seq("g"), "left")
-      .select(col("g"),
-        (col("cnt") - coalesce(col("pcnt"), lit(0L))).as("cnt"),
-        col("cdoc"), col("cpos"), isStale(col("cdoc")).as("tomb"))
-      .filter(col("cnt") >= 1)
+    val afterPurge = substrPurgeHalf(stored, staleDocs, isStale)
     val freshG = substringGramIndex(freshDocs)
       .select(col("g"), col("cnt").as("fcnt"),
         col("cdoc").as("fdoc"), col("cpos").as("fpos"))
@@ -6497,13 +6463,13 @@ object Extensions {
       .select(col("g"),
         (coalesce(col("cnt"), lit(0L)) + coalesce(col("fcnt"), lit(0L)))
           .as("cnt"),
-        coalesce(col("tomb"), lit(false)).as("tombstoned"),
+        coalesce(col("tombstoned"), lit(false)).as("tombstoned"),
         // merged canonical: min of the surviving stored witness and
         // the fresh one — undefined (null) under a tombstone. Each
         // side wraps in when(isNotNull, struct): least() skips null
         // ARGUMENTS, but a struct(null, null) would sort BELOW a
         // real witness and corrupt the min
-        when(coalesce(col("tomb"), lit(false)), lit(null))
+        when(coalesce(col("tombstoned"), lit(false)), lit(null))
           .otherwise(least(
             when(col("cdoc").isNotNull,
               struct(col("cdoc").as("d"), col("cpos").as("p"))),
@@ -6521,15 +6487,10 @@ object Extensions {
     * was stale). */
   private[graft] def refreshedSnapshotGrams(spark: SparkSession,
                                             sfDir: String): DataFrame = {
-    val (statuses, nDelta) = cachedSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed")).select("doc_id"))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed")).select("doc_id"))
+    val diff = cachedSnapshotStatuses(spark, sfDir)
     substrRefreshFold(snapshotAGramsFixture(spark, sfDir),
-      snapshotDocsA(spark, sfDir).join(stale, Seq("doc_id")),
-      snapshotDocsB(spark, sfDir).join(fresh, Seq("doc_id")),
+      snapshotDocsA(spark, sfDir).join(diff.stale, Seq("doc_id")),
+      snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id")),
       snapshotStaleCol)
   }
 
@@ -6635,14 +6596,12 @@ object Extensions {
           transform(col("v"), x => -x)).otherwise(col("v")).as("v"))
   }
 
-  /** ONE cached vector diff + delta count per (session, embeddings
-    * fingerprint) — [[cachedSnapshotStatuses]]'s contract for the
-    * vector family (the content hash is over the serialized embedding,
-    * reusing [[snapshotStatuses]] verbatim). */
+  /** The vector diff (E76c-g) — [[cachedSnapshotStatuses]]'s contract
+    * for the vector family: the content hash is over the serialized
+    * embedding (reusing [[snapshotStatusesFromHashes]] verbatim), and
+    * the id frames are named `vec_id`. */
   private[graft] def cachedVecSnapshotStatuses(spark: SparkSession,
-      sfDir: String): (DataFrame, Long) = {
-    val key = dataFingerprintOpt(s"$sfDir/embeddings.parquet")
-      .map(fp => s"snapvec:${System.identityHashCode(spark)}:$sfDir:$fp")
+      sfDir: String): SnapshotDiff = {
     def asDocs(df: DataFrame): DataFrame =
       df.select(col("vec_id").as("doc_id"), to_json(struct(col("v"))).as("text"))
     // stored vec-content hashes of snapshot A (round 14) — the
@@ -6655,15 +6614,8 @@ object Extensions {
       parquetFixture(spark, "snapa-vec-hashes", s"$sfDir/embeddings.parquet",
         s"h60_snapa$SnapABelow", live.queryExecution.logical.toString, live)
     }
-    def derive(): (DataFrame, java.lang.Long) = {
-      val st = snapshotStatusesFromHashes(aHashes(),
-        asDocs(snapshotVecsB(spark, sfDir)))
-      st.cache()
-      (st, java.lang.Long.valueOf(
-        st.filter(col("status") =!= "unchanged").count()))
-    }
-    val (df, n) = sessionMemo(spark, key, (v: (DataFrame, java.lang.Long)) => v._1)(derive)
-    (cacheTracked(df), n.longValue())
+    cachedDiff(spark, sfDir, "embeddings", "snapvec", "vec_id")(
+      snapshotStatusesFromHashes(aHashes(), asDocs(snapshotVecsB(spark, sfDir))))
   }
 
   // =====================================================================
@@ -6899,18 +6851,13 @@ object Extensions {
       sfDir: String): DataFrame =
     underModels(ix, spark, sfDir) { (_, _, src, m) =>
       val vecsB = snapshotVecsB(spark, sfDir)
-      val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-      val hint = refreshHint(nDelta)
-      def ids(status: String*): DataFrame = hint(statuses
-        .filter(col("status").isin(status: _*))
-        .select(col("doc_id").as("vec_id")))
+      val diff = cachedVecSnapshotStatuses(spark, sfDir)
       // a changed vector rides both halves: its stale row anti-joins
       // out, its fresh embedding arrives
       val refreshed = ix.stored(snapshotVecsA(spark, sfDir), m, src)
-        .join(ids("removed", "changed"),
-          col("corpus_id") === col("vec_id"), "left_anti")
+        .join(diff.stale, col("corpus_id") === col("vec_id"), "left_anti")
         .unionByName(deltaCheckpoint(ix.arrive(
-          vecsB.join(ids("added", "changed"), Seq("vec_id")), m)))
+          vecsB.join(diff.fresh, Seq("vec_id")), m)))
       ix.serve(vecsB, annQueryIds(vecsB), ix.settle(refreshed), m, None)
     }
 
@@ -6984,19 +6931,21 @@ object Extensions {
       live.queryExecution.logical.toString, live)
   }
 
-  /** Refreshed-manifest fold from (stored snapshot-A receipt, stored
-    * snapshot-A shard index, stale ids, arrival receipt rows) —
-    * package-private so RefreshSpec can drive it at a shard count
-    * where the pass-through path actually carries rows (at
-    * ShardCount=8 a spread diff touches every shard). */
-  private[graft] def shardRefreshManifestFrom(stored: DataFrame,
-      idxA: DataFrame, staleIds: DataFrame,
+  /** The one affected-shard recompute behind both receipt verbs,
+    * purge (E71) and refresh (E76e): `removedIds` leave the store, the
+    * `arrived` receipt rows (shard, hh, n_chars) enter it. Affected
+    * shards = `removedShards` ∪ the arrivals' shards, ONE diff-sized
+    * collect whose literal partition-prunes the stored index; they are
+    * recomputed from it, every other shard passes through from the
+    * stored receipt. A purge names its shards from the takedown rows'
+    * own content hash and arrives nothing; a refresh names them from
+    * the stale docs' stored index rows. Package-private so the specs
+    * can drive it at a shard count where the pass-through path carries
+    * rows (at ShardCount=8 a spread delta touches every shard). */
+  private[graft] def shardManifestFold(stored: DataFrame, idx: DataFrame,
+      removedIds: DataFrame, removedShards: DataFrame,
       arrived: DataFrame): DataFrame = {
-    // affected-shard collect is diff-sized (stale docs' stored rows +
-    // arrivals' own content hashes — deployment: the re-crawl delta);
-    // the literal partition-prunes the stored index at plan time
-    val affected = idxA.join(staleIds, Seq("doc_id"), "left_semi")
-      .select("shard")
+    val affected = removedShards.select("shard")
       .unionByName(arrived.select("shard"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (affected.isEmpty) return stored.orderBy("shard")
@@ -7005,8 +6954,8 @@ object Extensions {
       .select("shard", "n_docs", "total_chars", "min_hash", "max_hash",
         "checksum")
     val recomputed = manifestAggOf(
-      idxA.filter(col("shard").isin(lits: _*))
-        .join(staleIds, Seq("doc_id"), "left_anti")
+      idx.filter(col("shard").isin(lits: _*))
+        .join(removedIds, Seq("doc_id"), "left_anti")
         .select("shard", "hh", "n_chars")
         .unionByName(arrived.select("shard", "hh", "n_chars")))
     untouched.unionByName(recomputed).orderBy("shard")
@@ -7014,19 +6963,16 @@ object Extensions {
 
   lazy val shardRefresh: Q = Q("ext_shard_refresh",
     (spark, sfDir) => {
-      val (statuses, nDelta) = cachedSnapshotStatuses(spark, sfDir)
-      val hint = refreshHint(nDelta)
-      val stale = hint(statuses
-        .filter(col("status").isin("removed", "changed")).select("doc_id"))
-      val fresh = hint(statuses
-        .filter(col("status").isin("added", "changed")).select("doc_id"))
+      val diff = cachedSnapshotStatuses(spark, sfDir)
+      val stale = diff.stale
       // arrival receipt: ONE O(delta) content-arithmetic projection
       // over the fresh snapshot-B docs. CACHED (tracked): it feeds the
       // affected-shard collect AND the recompute union.
-      val arrived = cacheTracked(
-        shardReceiptRows(snapshotDocsB(spark, sfDir).join(fresh, Seq("doc_id"))))
-      shardRefreshManifestFrom(shardManifestAFixture(spark, sfDir),
-        shardIndexAFixture(spark, sfDir), stale, arrived)
+      val arrived = cacheTracked(shardReceiptRows(
+        snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id"))))
+      val idxA = shardIndexAFixture(spark, sfDir)
+      shardManifestFold(shardManifestAFixture(spark, sfDir), idxA, stale,
+        idxA.join(stale, Seq("doc_id"), "left_semi"), arrived)
     },
     // the MONOLITHIC manifest SQL over the snapshot-B derivation
     // verbatim: refreshed receipts must equal rebuilt-from-scratch
@@ -7094,23 +7040,23 @@ object Extensions {
   lazy val refreshReport: Q = Q("ext_refresh_report",
     (spark, sfDir) => {
       val b = snapshotDocsB(spark, sfDir)
-      val (statuses, _) = cachedSnapshotStatuses(spark, sfDir)
-      val stale = statuses
-        .filter(col("status").isin("removed", "changed")).select("doc_id")
-      val fresh = statuses
-        .filter(col("status").isin("added", "changed")).select("doc_id")
+      val diff = cachedSnapshotStatuses(spark, sfDir)
+      // unhinted id frames: the receipt's five delta joins stay AQE's
+      // choice (the hinted pair adds two broadcast jobs per run)
+      val stale = diff.statuses.filter(SnapshotDiff.isStale).select("doc_id")
+      val fresh = diff.statuses.filter(SnapshotDiff.isFresh).select("doc_id")
       // one (status, units_a, units_b)-aggregation per family over the
       // shared cached diff
       def familyRows(family: String, ua: DataFrame,
                      ub: DataFrame): DataFrame =
-        statuses.join(ua, Seq("doc_id"), "left")
+        diff.statuses.join(ua, Seq("doc_id"), "left")
           .join(ub, Seq("doc_id"), "left")
           .groupBy("status")
           .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("status").isin("removed", "changed"),
+            sum(when(SnapshotDiff.isStale,
               coalesce(col("rows_a"), lit(0L))).otherwise(0L))
               .as("rows_purged"),
-            sum(when(col("status").isin("added", "changed"),
+            sum(when(SnapshotDiff.isFresh,
               coalesce(col("rows_b"), lit(0L))).otherwise(0L))
               .as("rows_arrived"))
           .select(lit(family).as("family"), col("status"), col("n_docs"),
@@ -7147,7 +7093,6 @@ object Extensions {
       // shared by two docs, a label move by a whole component), so
       // they stay spec-asserted against the live fold,
       // ext_compact_report's reason class.
-      val (vecStatuses, _) = cachedVecSnapshotStatuses(spark, sfDir)
       def constUnitFamilyRows(st: DataFrame,
                               fams: Seq[(String, Int)]): DataFrame = {
         val famArr = array(fams.map { case (f, u) =>
@@ -7155,18 +7100,19 @@ object Extensions {
         st.groupBy("status").agg(count(lit(1)).as("n_docs"))
           .select(col("status"), col("n_docs"), explode(famArr).as("f"))
           .select(col("f.family").as("family"), col("status"), col("n_docs"),
-            when(col("status").isin("removed", "changed"),
+            when(SnapshotDiff.isStale,
               col("n_docs") * col("f.units")).otherwise(0L)
               .cast("long").as("rows_purged"),
-            when(col("status").isin("added", "changed"),
+            when(SnapshotDiff.isFresh,
               col("n_docs") * col("f.units")).otherwise(0L)
               .cast("long").as("rows_arrived"))
       }
       familyRows("postings", aRows, bRows)
         .unionByName(familyRows("substr", gA, gB))
         .unionByName(familyRows("shard", cA, cB))
-        .unionByName(constUnitFamilyRows(statuses, Seq("mh_sigs" -> 1)))
-        .unionByName(constUnitFamilyRows(vecStatuses, Seq(
+        .unionByName(constUnitFamilyRows(diff.statuses, Seq("mh_sigs" -> 1)))
+        .unionByName(constUnitFamilyRows(
+          cachedVecSnapshotStatuses(spark, sfDir).statuses, Seq(
           "ivfpq_codes" -> 1, "imipq_codes" -> 1, "ivfpqr_codes" -> 1,
           "lsh_buckets" -> LshTables, "sem_buckets" -> SemanticTables)))
         .orderBy("family", "status")
@@ -8012,46 +7958,24 @@ object Extensions {
             |WHERE vb.vbucket >= 90
             |ORDER BY e.vec_id""".stripMargin))
 
-  /** The purge fold over stored (labels, raw vectors): re-cluster the
-    * affected components' survivors through the family's own blocking,
-    * pass everything else through — [[clustersPurgeFrom]]'s semantics
-    * on the vector graph. Exposed package-private for PurgeSpec's
-    * planted bridge case. */
-  private[graft] def semanticClustersPurgeFrom(labels: DataFrame,
-      emb: DataFrame, purged: DataFrame): DataFrame = {
-    // purge-sized collect: the affected component ids
-    val affected = labels.join(broadcast(purged), Seq("vec_id"), "left_semi")
-      .select("cluster_id").distinct().collect().map(_.getLong(0))
-    val untouched = labels
-      .filter(!col("cluster_id").isin(affected.map(Long.box): _*))
-    val relabeled =
-      if (affected.isEmpty) untouched
-      else {
-        val survivors = labels
-          .filter(col("cluster_id").isin(affected.map(Long.box): _*))
-          .join(broadcast(purged), Seq("vec_id"), "left_anti")
-          .select("vec_id")
-        // CACHED (tracked): the survivor vectors feed the blocking,
-        // both confirm sides, and the CC node set
-        val embA = cacheTracked(
-          emb.join(broadcast(survivors), Seq("vec_id"), "left_semi"))
-        val pairs = semanticPairsFrom(embA).select("id_a", "id_b")
-        val recomputed = graft.ops.Graph.connectedComponents(pairs,
-            embA.select(col("vec_id").as("id")))
-          .select(col("id").as("vec_id"), col("component").as("cluster_id"))
-        untouched.unionByName(recomputed)
-      }
-    relabeled.select(col("vec_id"), col("cluster_id"),
-        (col("vec_id") === col("cluster_id")).as("keep"))
-      .orderBy("vec_id")
+  /** The survivor subgraph re-derived through the semantic family's
+    * own blocking over the survivors' raw vectors — the
+    * `survivorGraphOf` the vector takedown hands
+    * [[refreshClusterLabels]]. */
+  private[graft] def semanticSurvivorGraph(emb: DataFrame)(
+      survivors: DataFrame): (DataFrame, DataFrame) = {
+    // CACHED (tracked): the survivor vectors feed the blocking, both
+    // confirm sides, and the CC node set
+    val embA = cacheTracked(
+      emb.join(broadcast(survivors), Seq("vec_id"), "left_semi"))
+    (semanticPairsFrom(embA).select("id_a", "id_b"), embA.select("vec_id"))
   }
 
   val semanticPurge: Q = Q("ext_semantic_purge",
-    (spark, sfDir) => semanticClustersPurgeFrom(
-      semanticComponentLabels(spark, sfDir),
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      purgeVecIds(spark, sfDir)),
+    (spark, sfDir) => purgeClusterLabels(semanticComponentLabels(spark, sfDir),
+      "vec_id", purgeVecIds(spark, sfDir),
+      semanticSurvivorGraph(Tables.embeddings(spark, sfDir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))),
     // the monolithic recursive closure over the FILTERED embeddings:
     // purged labels must equal rebuilt-from-scratch labels
     Some(s"""WITH RECURSIVE ${semanticComponentsSqlCtes(
@@ -8065,9 +7989,10 @@ object Extensions {
   // and the semantic cc-cache + bucket blocks) whose daily re-crawl
   // still meant running purge and arrival as separate manual verbs.
   // refresh = ONE fused deletion+insertion fold over the E72 diff
-  // (a first draft composed the purge fold with a separate arrival
-  // merge — two full CC runs per call; the fused form was measured at
-  // ~2x less wall for identical labels):
+  // (a first draft composed a separate purge fold with a separate
+  // arrival merge — two full CC runs per call; the fused form was
+  // measured at ~2x less wall for identical labels). The takedown
+  // verbs (E71c/E71d) are this same fold with nothing arriving:
   //  * AFFECTED: one collect of the snapshot-A components that either
   //    CONTAIN a stale member (the purge trigger) or GAIN a confirmed
   //    fresh edge (the arrival trigger). Sound on A-labels for the
@@ -8084,7 +8009,7 @@ object Extensions {
   //    untouched component's labels pass through verbatim. No edge can
   //    cross the untouched boundary: a survivor-survivor pair implies
   //    same A-component, and a fresh edge into a component is what
-  //    makes it affected — the purge fold's maximality argument run
+  //    makes it affected — the takedown's maximality argument run
   //    in both directions.
   // Both verbs are ORACLE-PAIRED (unlike the code-table refreshes,
   // whose cells are engine-specific): the refreshed labels must equal
@@ -8097,13 +8022,15 @@ object Extensions {
   // =====================================================================
   /** The fused re-label shared by both cluster-label refreshes.
     * `freshPairs` must be confirmed pairs with >=1 fresh endpoint
-    * (normalized id_a<id_b, no stale endpoints); `survivorPairsOf`
-    * re-derives the family's pair set over a given survivor-id frame
-    * (from the STORED index, never raw text). The affected collect is
-    * diff-sized — the purge-sized-collect contract of the family. */
+    * (normalized id_a<id_b, no stale endpoints); `survivorGraphOf`
+    * re-derives the family's (pairs, node ids) over a given survivor-id
+    * frame (from the STORED index, never raw text). The affected collect is
+    * diff-sized — the purge-sized-collect contract of the family. With
+    * no affected component and nothing arriving (an empty takedown)
+    * the stored labels are the answer: no CC runs. */
   private[graft] def refreshClusterLabels(labelsA: DataFrame, idCol: String,
       stale: DataFrame, freshIds: DataFrame, freshPairs: DataFrame,
-      survivorPairsOf: DataFrame => DataFrame): DataFrame = {
+      survivorGraphOf: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     // no distinct: the left-semi probe tolerates duplicates, and the
     // dedup would cost a shuffle of its own before the broadcast
     val touchers = stale.select(col(stale.columns.head).as(idCol))
@@ -8111,6 +8038,7 @@ object Extensions {
       .unionByName(freshPairs.select(col("id_b").as(idCol)))
     val affected = labelsA.join(broadcast(touchers), Seq(idCol), "left_semi")
       .select("cluster_id").distinct().collect().map(_.getLong(0))
+    if (affected.isEmpty && freshIds.isEmpty) return labelsA
     val untouched = labelsA
       .filter(!col("cluster_id").isin(affected.map(Long.box): _*))
     val survivors = labelsA
@@ -8118,14 +8046,35 @@ object Extensions {
       .join(broadcast(stale.select(col(stale.columns.head).as(idCol))),
         Seq(idCol), "left_anti")
       .select(idCol)
-    val edges = survivorPairsOf(survivors)
-      .unionByName(freshPairs.select("id_a", "id_b"))
-    val nodes = survivors.select(col(idCol).as("id"))
+    val (survivorPairs, survivorIds) = survivorGraphOf(survivors)
+    val edges = survivorPairs.unionByName(freshPairs.select("id_a", "id_b"))
+    val nodes = survivorIds.select(col(idCol).as("id"))
       .unionByName(freshIds.select(col(freshIds.columns.head).as("id")))
     val relabeled = graft.ops.Graph.connectedComponents(edges, nodes)
       .select(col("id").as(idCol), col("component").as("cluster_id"))
     untouched.unionByName(relabeled)
   }
+
+  /** A takedown on a cluster-label family (E71c/E71d):
+    * [[refreshClusterLabels]] with nothing arriving — only components
+    * containing a purged id re-cluster, over `survivorGraphOf`'s
+    * subgraph; every untouched component passes through. Sound because
+    * components are maximal: removing nodes never creates edges. */
+  private[graft] def purgeClusterLabels(labels: DataFrame, idCol: String,
+      purged: DataFrame,
+      survivorGraphOf: DataFrame => (DataFrame, DataFrame)): DataFrame = {
+    val none = purged.select(col(purged.columns.head).as("id_a"),
+      col(purged.columns.head).as("id_b")).limit(0)
+    keepLabels(refreshClusterLabels(labels, idCol, purged,
+      none.select("id_a"), none, survivorGraphOf), idCol)
+  }
+
+  /** Cluster labels in their served form: (id, cluster_id, keep —
+    * the min-id representative), ordered by id. */
+  private def keepLabels(labels: DataFrame, idCol: String): DataFrame =
+    labels.select(col(idCol), col("cluster_id"),
+        (col(idCol) === col("cluster_id")).as("keep"))
+      .orderBy(idCol)
 
   /** The stored snapshot-A minhash signature index — the previous
     * crawl's artifact the cluster refresh maintains. */
@@ -8167,24 +8116,28 @@ object Extensions {
         .select(col("id").as("doc_id"), col("component").as("cluster_id")))
   }
 
-  /** The refreshed snapshot-B cluster labels — factored so RefreshSpec
-    * can assert them row-identical to a from-scratch snapshot-B
-    * rebuild. */
-  private[graft] def clustersRefreshLabels(spark: SparkSession,
-                                           sfDir: String): DataFrame = {
-    val docsB = snapshotDocsB(spark, sfDir)
-    val (statuses, nDelta) = cachedSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed")).select("doc_id"))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed")).select("doc_id"))
-    val sigsA = mhSnapASigsFixture(spark, sfDir)
+  /** The survivor subgraph of a refresh: the STORED snapshot-A pair
+    * table `pairsA` with both endpoints surviving — a filter of the
+    * previous run's own output, no re-banding/re-blocking (see
+    * [[mhSnapAPairsFixture]]) — over the survivors themselves. */
+  private[graft] def storedSurvivorGraph(pairsA: DataFrame, idCol: String)(
+      survivors: DataFrame): (DataFrame, DataFrame) =
+    (pairsA
+      .join(survivors.select(col(idCol).as("id_a")), Seq("id_a"), "left_semi")
+      .join(survivors.select(col(idCol).as("id_b")), Seq("id_b"), "left_semi")
+      .select("id_a", "id_b"), survivors)
+
+  /** The minhash refresh's arrival half over the stored signatures
+    * `sigsA`: (fresh signatures, confirmed pairs with >=1 fresh
+    * endpoint) — the fresh docs band against the refreshed index
+    * (stored minus `stale` plus fresh). Package-private so the
+    * labelrefresh probe runs the production derivation. */
+  private[graft] def mhFreshPairs(sigsA: DataFrame, stale: DataFrame,
+      freshDocs: DataFrame): (DataFrame, DataFrame) = {
     // O(delta) text work: only the fresh docs re-shingle. CACHED
     // (tracked): the fresh signatures feed their own banding, the
     // refreshed-index union, and the re-label's node set
-    val freshSigs = cacheTracked(
-      minhashSignatures(docsB.join(fresh, Seq("doc_id"))))
+    val freshSigs = cacheTracked(minhashSignatures(freshDocs))
     // the refreshed signature index (stored minus stale plus fresh) —
     // the corpus side of the arrival banding AND the artifact the
     // next refresh serves. CACHED: banding + both confirm sides
@@ -8201,25 +8154,27 @@ object Extensions {
       .distinct()
     // CACHED: the confirmed fresh pairs feed the affected collect AND
     // the re-label's edge set
-    val pairs = cacheTracked(
+    (freshSigs, cacheTracked(
       sigConfirm(cand, "id_a", "id_b", refreshedSigs, refreshedSigs)
-        .select("id_a", "id_b"))
+        .select("id_a", "id_b")))
+  }
+
+  /** The refreshed snapshot-B cluster labels — factored so RefreshSpec
+    * can assert them row-identical to a from-scratch snapshot-B
+    * rebuild. */
+  private[graft] def clustersRefreshLabels(spark: SparkSession,
+                                           sfDir: String): DataFrame = {
+    val diff = cachedSnapshotStatuses(spark, sfDir)
+    val stale = diff.stale
+    val (freshSigs, pairs) = mhFreshPairs(mhSnapASigsFixture(spark, sfDir),
+      stale, snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id")))
     refreshClusterLabels(mhSnapALabelsFixture(spark, sfDir), "doc_id",
       stale, freshSigs.select("doc_id"), pairs,
-      // survivor pairs = the STORED snapshot-A pair table with both
-      // endpoints surviving — a filter of the dedup run's own output,
-      // no re-banding (see mhSnapAPairsFixture)
-      survivors => mhSnapAPairsFixture(spark, sfDir)
-        .join(survivors.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
-        .join(survivors.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
-        .select("id_a", "id_b"))
+      storedSurvivorGraph(mhSnapAPairsFixture(spark, sfDir), "doc_id"))
   }
 
   lazy val clustersRefresh: Q = Q("ext_clusters_refresh",
-    (spark, sfDir) => clustersRefreshLabels(spark, sfDir)
-      .select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).as("keep"))
-      .orderBy("doc_id"),
+    (spark, sfDir) => keepLabels(clustersRefreshLabels(spark, sfDir), "doc_id"),
     // the monolithic recursive closure over TODAY'S crawl: refreshed
     // labels must equal rebuilt-from-scratch labels
     Some(s"""WITH RECURSIVE ${componentsSqlCtes(docsFrom = duckSnapshotBRel)}
@@ -8265,14 +8220,8 @@ object Extensions {
   private[graft] def semanticRefreshLabels(spark: SparkSession,
                                            sfDir: String): DataFrame = {
     val vecsB = snapshotVecsB(spark, sfDir)
-    val (statuses, nDelta) = cachedVecSnapshotStatuses(spark, sfDir)
-    val hint = refreshHint(nDelta)
-    val stale = hint(statuses
-      .filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id").as("vec_id")))
-    val fresh = hint(statuses
-      .filter(col("status").isin("added", "changed"))
-      .select(col("doc_id").as("vec_id")))
+    val diff = cachedVecSnapshotStatuses(spark, sfDir)
+    val (stale, fresh) = (diff.stale, diff.fresh)
     // O(delta) vector work: only the fresh vectors re-bucket. CACHED
     // (tracked): the fresh vectors feed the bucket pass and the
     // re-label's node set
@@ -8304,19 +8253,11 @@ object Extensions {
       .select("id_a", "id_b"))
     refreshClusterLabels(semanticSnapALabelsFixture(spark, sfDir), "vec_id",
       stale, freshVecs.select("vec_id"), pairs,
-      // survivor pairs = the STORED snapshot-A pair table with both
-      // endpoints surviving — no re-blocking (semanticSnapAPairsFixture)
-      survivors => semanticSnapAPairsFixture(spark, sfDir)
-        .join(survivors.select(col("vec_id").as("id_a")), Seq("id_a"), "left_semi")
-        .join(survivors.select(col("vec_id").as("id_b")), Seq("id_b"), "left_semi")
-        .select("id_a", "id_b"))
+      storedSurvivorGraph(semanticSnapAPairsFixture(spark, sfDir), "vec_id"))
   }
 
   lazy val semanticRefresh: Q = Q("ext_semantic_refresh",
-    (spark, sfDir) => semanticRefreshLabels(spark, sfDir)
-      .select(col("vec_id"), col("cluster_id"),
-        (col("vec_id") === col("cluster_id")).as("keep"))
-      .orderBy("vec_id"),
+    (spark, sfDir) => keepLabels(semanticRefreshLabels(spark, sfDir), "vec_id"),
     // the monolithic recursive closure over today's vectors, changed
     // vectors negated in the ORACLE too (vexpr) — both engines close
     // over the same refreshed geometry

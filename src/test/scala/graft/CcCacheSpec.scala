@@ -19,22 +19,24 @@ class CcCacheSpec extends SparkSpec {
 
     val fixture = Extensions.minhashComponentLabels(spark, sf0001)
     assert(fixture.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == live)
+    // ONE key per input: the fingerprint must be stable across calls —
+    // session-global counters in the plan string (expr ids, lambda
+    // variable names) once minted a fresh key per call, so every
+    // consumer silently re-ran CC into a new fixture dir. Compared as
+    // the dir set before and after the repeat call, so an older key
+    // left in target/ by a previous plan version cannot fail it
+    // (.tmp_ dirs are a crashed build's leftovers, never served)
+    def mhDirs(): Set[String] = new java.io.File("target/cc-cache").listFiles()
+      .map(_.getName).filter(n => n.contains("sf0.001_documents") &&
+        n.contains("_mh_") && !n.startsWith(".tmp_")).toSet
+    val before = mhDirs()
     // second call must be served from the persisted fixture: the
     // executed plan is a parquet scan of target/cc-cache, no CC loop
     val plan = Extensions.minhashComponentLabels(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(plan.contains("cc-cache"), s"expected a cc-cache scan, got:\n$plan")
-    // ONE key per input: the fingerprint must be stable across calls —
-    // session-global counters in the plan string (expr ids, lambda
-    // variable names) once minted a fresh key per call, so every
-    // consumer silently re-ran CC into a new fixture dir
-    // exclude .tmp_ dirs: an orphaned tmp from a crashed prior run also
-    // contains "_mh_" and would make this count exceed 1 spuriously
-    val mhDirs = new java.io.File("target/cc-cache").listFiles()
-      .filter(f => f.getName.contains("sf0.001_documents") && f.getName.contains("_mh_")
-        && !f.getName.startsWith(".tmp_"))
-    assert(mhDirs.length == 1,
-      s"unstable fixture key: ${mhDirs.map(_.getName).mkString(", ")}")
+    assert(mhDirs() == before,
+      s"unstable fixture key: ${mhDirs().diff(before).mkString(", ")}")
     Extensions.releaseCaches()
   }
 
@@ -58,22 +60,25 @@ class CcCacheSpec extends SparkSpec {
   }
 
   test("unigram/bigram LM queries read the persisted model (lm-cache)") {
+    def lmDirs(): Set[String] = new java.io.File("target/lm-cache").listFiles()
+      .map(_.getName)
+      .filter(n => n.contains("sf0.001") && !n.startsWith(".tmp_")).toSet
     for (q <- Seq(Extensions.unigramLogprob, Extensions.bigramLogprob)) {
       q.fn(spark, sf0001).count() // ensure the model fixture is built
+      val before = lmDirs()
       val plan = q.fn(spark, sf0001).queryExecution.executedPlan.toString
       assert(plan.contains("lm-cache"), s"${q.name} does not read the persisted LM")
+      // ONE key per (input, model order): the repeat call adds no dir
+      assert(lmDirs() == before,
+        s"${q.name}: unstable fixture key: ${lmDirs().diff(before).mkString(", ")}")
       Extensions.releaseCaches()
     }
-    // ONE key per (input, model order) across repeated calls
-    val dirs = new java.io.File("target/lm-cache").listFiles()
-      .filter(f => f.getName.contains("sf0.001") && !f.getName.startsWith(".tmp_"))
-    assert(dirs.map(_.getName).count(_.contains("_uni_")) == 1)
-    assert(dirs.map(_.getName).count(_.contains("_bi_")) == 1)
   }
 
   test("data change orphans the fixture: a different source file builds a new key") {
     import spark.implicits._
     val dir = "target/tmp-cc-key"
+    dropFixturesOf(s"$dir/")
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
         .withColumn("source", lit("t")).withColumn("n_chars", length(col("text")).cast("long"))
@@ -94,5 +99,14 @@ class CcCacheSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(second == Set((1L, 1L), (2L, 2L), (3L, 3L)))
     Extensions.releaseCaches()
+    // each rewrite keyed its own labels; the spec deletes what it keyed
+    // on its planted source, so no run leaves a set behind
+    val labelDirs = fixtureDirsOf(s"$dir/")
+      .filter(_.getParentFile.getName == "cc-cache")
+    assert(labelDirs.length == 2,
+      s"want one label key per source version: ${labelDirs.map(_.getName).mkString(", ")}")
+    dropFixturesOf(s"$dir/")
+    assert(fixtureDirsOf(s"$dir/").isEmpty,
+      s"fixture dirs keyed on $dir remain: ${fixtureDirsOf(s"$dir/").mkString(", ")}")
   }
 }

@@ -990,13 +990,19 @@ class ExtensionsSpec extends SparkSpec {
     val first = Seq((1L, "a")).toDF("id", "v")
     val second = Seq((2L, "b")).toDF("id", "v")
     val plan = "fixture-serve-test-plan-v1"
-    val got1 = Extensions.parquetFixture(spark, "fx-serve-test",
-      src.toString, "k1", plan, first)
-    assert(got1.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    val got2 = Extensions.parquetFixture(spark, "fx-serve-test",
-      src.toString, "k1", plan, second)
-    assert(got2.collect().map(_.getLong(0)).toSeq == Seq(1L),
-      "fixture did not serve: reader fell back to the live frame")
+    try {
+      val got1 = Extensions.parquetFixture(spark, "fx-serve-test",
+        src.toString, "k1", plan, first)
+      assert(got1.collect().map(_.getLong(0)).toSeq == Seq(1L))
+      val got2 = Extensions.parquetFixture(spark, "fx-serve-test",
+        src.toString, "k1", plan, second)
+      assert(got2.collect().map(_.getLong(0)).toSeq == Seq(1L),
+        "fixture did not serve: reader fell back to the live frame")
+    } finally {
+      // the temp source is new on every run: drop what it keyed
+      dropFixturesOf(src.toString)
+      java.nio.file.Files.deleteIfExists(src)
+    }
   }
 
   test("parquetFixture falls back to the live frame with one fixture_fallback event") {

@@ -970,7 +970,8 @@ class PlanSpec extends SparkSpec {
   test("substr purge: stored gram index folded, corpus never re-tokenized") {
     // counts subtract from the purge rows' OWN gram pass: ONE raw
     // documents scan (the takedown rows), the index from the stored
-    // full-corpus fixture, the fold a broadcast left join
+    // full-corpus fixture, the fold the refresh's purge half (a left
+    // join on AQE's join choice)
     val df = ext.Extensions.substrPurge.fn(spark, sf0001)
     try {
       val paths = scanNodePaths(df)

@@ -234,7 +234,8 @@ class PurgeSpec extends SparkSpec {
     val affected = purge.select("shard").distinct().collect()
       .map(_.getInt(0)).toSet
     assert(affected.nonEmpty && affected.size <= 2)
-    val out = Extensions.shardPurgeManifestFrom(stored, idx, purge)
+    val out = Extensions.shardManifestFold(stored, idx,
+        purge.select("doc_id"), purge, purge.limit(0))
       .collect()
     // equality to the monolithic receipt over the filtered rows —
     // min/max included, the columns subtraction cannot maintain
@@ -349,7 +350,7 @@ class PurgeSpec extends SparkSpec {
     val docs = Seq((1L, shared), (2L, shared), (3L, unique))
       .toDF("doc_id", "text")
     val stored = Extensions.substringGramIndex(docs)
-    val out = Extensions.substrPurgeFrom(stored,
+    val out = Extensions.substrPurgeHalf(stored,
         docs.filter(col("doc_id") === 1L), d => d === 1L)
       .collect().map(r => (r.getLong(1), r.getBoolean(2)))
     assert(out.toSet == Set((1L, true), (1L, false)),
@@ -382,12 +383,49 @@ class PurgeSpec extends SparkSpec {
       assert(pre == Map(10L -> 10L, 20L -> 10L, 30L -> 10L,
         40L -> 40L, 41L -> 40L),
         s"planted chain did not cluster as designed: $pre")
-      val out = Extensions.clustersPurgeFrom(labels, sigs,
-          Seq(20L).toDF("doc_id"))
+      val out = Extensions.purgeClusterLabels(labels, "doc_id",
+          Seq(20L).toDF("doc_id"), Extensions.mhSurvivorGraph(sigs))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       assert(out.toSet == Set((10L, 10L, true), (30L, 30L, true),
         (40L, 40L, true), (41L, 40L, false)),
         s"expected the {10,20,30} component to split and {40,41} to pass through: ${out.toSeq}")
+    } finally Extensions.releaseCaches()
+  }
+
+  test("empty takedown: stored cluster labels (both families) and the stored shard receipt come back verbatim, no re-cluster") {
+    import spark.implicits._
+    // the refresh folds' no-affected guard: nothing leaves, nothing
+    // arrives — the stored artifact IS the answer, and a survivor-pair
+    // derivation (the re-cluster's input) must never be asked for
+    val noRecluster: org.apache.spark.sql.DataFrame =>
+        (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+      _ => fail("survivor subgraph derived for an empty takedown")
+    try {
+      for ((labels, idCol) <- Seq(
+          (Extensions.minhashComponentLabels(spark, sf0001), "doc_id"),
+          (Extensions.semanticComponentLabels(spark, sf0001), "vec_id"))) {
+        val out = Extensions.purgeClusterLabels(labels, idCol,
+            Seq.empty[Long].toDF(idCol), noRecluster)
+          .collect().map(_.toSeq).toSeq
+        val stored = labels.select(col(idCol), col("cluster_id"),
+            (col(idCol) === col("cluster_id")).as("keep"))
+          .orderBy(idCol).collect().map(_.toSeq).toSeq
+        assert(out.nonEmpty && out == stored,
+          s"$idCol: empty takedown changed the stored labels")
+      }
+      val docs = (1L to 50L).map(i => (i, s"empty takedown doc $i"))
+        .toDF("doc_id", "text")
+      val h = graft.expr.Scalars.hash60(col("text"))
+      val idx = docs.select(col("doc_id"), h.as("hh"),
+        length(col("text")).cast("long").as("n_chars"),
+        pmod(h, lit(16L)).cast("int").as("shard"))
+      val stored = Extensions.manifestAggOf(
+        idx.select("shard", "hh", "n_chars")).orderBy("shard")
+      val none = idx.limit(0)
+      val out = Extensions.shardManifestFold(stored, idx,
+        none.select("doc_id"), none, none).collect().map(_.toSeq).toSeq
+      assert(out.nonEmpty && out == stored.collect().map(_.toSeq).toSeq,
+        "empty takedown changed the stored shard receipt")
     } finally Extensions.releaseCaches()
   }
 

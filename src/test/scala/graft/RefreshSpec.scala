@@ -487,7 +487,7 @@ class RefreshSpec extends SparkSpec {
     // registered query never exercises the pass-through branch — drive
     // the fold directly with a planted 4-shard store where shard 3 is
     // untouched, shard 0 loses one doc, shard 1 empties entirely, and
-    // shard 2 gains an arrival (the shardPurgeManifestFrom discipline)
+    // shard 2 gains an arrival (the fold the shard purge shares)
     import spark.implicits._
     try {
       val idxA = Seq(
@@ -501,8 +501,8 @@ class RefreshSpec extends SparkSpec {
       val stale = Seq(11L, 12L).toDF("doc_id")
       val arrived = Seq((20L, 2, 310L, 6L))
         .toDF("doc_id", "shard", "hh", "n_chars")
-      val got = Extensions.shardRefreshManifestFrom(
-          stored, idxA, stale, arrived).collect()
+      val got = Extensions.shardManifestFold(stored, idxA, stale,
+          idxA.join(stale, Seq("doc_id"), "left_semi"), arrived).collect()
         .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))).toMap
       // monolithic twin over the post-refresh rows

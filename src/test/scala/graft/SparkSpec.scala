@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (sbt runs them in one JVM). */
@@ -18,9 +19,30 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Fixture dirs (`target/<family>/fx<source path>_<key>`) keyed on a
+    * source whose path starts with `srcPrefix`. */
+  def fixtureDirsOf(srcPrefix: String): Seq[java.io.File] = {
+    val prefix = "fx" + srcPrefix.replaceAll("[^A-Za-z0-9._-]", "_")
+    Option(new java.io.File("target").listFiles()).toSeq.flatten
+      .flatMap(family => Option(family.listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith(prefix))
+  }
+
+  /** Delete the fixture dirs keyed on a source under `srcPrefix`. */
+  def dropFixturesOf(srcPrefix: String): Unit =
+    fixtureDirsOf(srcPrefix)
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+
+  /** Specs write their planted sources under `target/tmp-*`; every
+    * rewrite mints a new data-fingerprint key, so each suite deletes
+    * the fixture dirs keyed on those sources when it ends instead of
+    * leaving one more set per run. */
+  override def afterAll(): Unit =
+    try dropFixturesOf("target/tmp-") finally super.afterAll()
 
   /** Spark jobs started while `f` runs, counted by the one src/main
     * listener after a bus drain. */
