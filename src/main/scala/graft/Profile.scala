@@ -1,18 +1,26 @@
 package graft
 
-/** Dev tool: time a subset of registered queries, N repetitions each,
-  * on a chosen SF dir — the inner loop for performance work without
-  * paying for the whole bench. Usage:
+/** Dev tool: time a subset of registered queries over N passes on a
+  * chosen SF dir — the inner loop for performance work without paying
+  * for the whole bench. Usage:
   *   runMain graft.Profile <sfDir> <reps> <q1,q2,...>
   *
-  * Each rep prints its wall split into frame CONSTRUCTION (the eager
-  * driver-side part: model fixture loads, routing collects) and the
-  * noop-write execution, plus its Spark job count — the iterative and
-  * eager queries are job-count-bound at bench scale (each job is
-  * ~10-100 ms of scheduler and stage overhead against trivial data),
-  * so the job count is the number to shrink. `codegen N` counts the
-  * rep's Janino compiles: a class missing from Spark's codegen cache
-  * (100 entries) is compiled again, at ~20 ms each.
+  * A pass runs every listed query once, in order (rep-major), the way
+  * a daily batch runs its queries: rep ≥ 2 sees what the previous
+  * pass left in the session's caches. Each query's rep prints its wall
+  * split into frame CONSTRUCTION (the eager driver-side part: model
+  * fixture loads, routing collects) and the noop-write execution, plus
+  * its Spark job count — the iterative and eager queries are
+  * job-count-bound at bench scale (each job is ~10-100 ms of scheduler
+  * and stage overhead against trivial data), so the job count is the
+  * number to shrink. `codegen N` counts the
+  * rep's Janino compiles: a class missing from Spark's codegen cache is
+  * compiled again, at ~14 ms each. The cache holds 100 entries and
+  * evicts like 4 LRU segments of 25; its key includes the thread's
+  * context classloader, so a whole-stage class compiled on the driver
+  * and again in a task takes two entries. A pass whose classes need
+  * more keys than the cache holds misses on nearly every lookup at
+  * rep ≥ 2 (DESIGN.md "The codegen budget").
   * SPARK_GRAFT_PROFILE_JOBS=1 additionally prints one line per Spark
   * job (duration, description): WHICH eager step mints the jobs.
   */
@@ -30,7 +38,7 @@ object Profile {
     val jobs = Dev.recorder(spark)
     val compiles = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME
-    for (name <- wanted; fn = SparkEntry.queries(name); r <- 1 to reps) {
+    for (r <- 1 to reps; name <- wanted; fn = SparkEntry.queries(name)) {
       val j0 = jobs.jobCount
       val c0 = compiles.getCount
       val t0 = System.nanoTime()

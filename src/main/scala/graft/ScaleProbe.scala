@@ -1123,14 +1123,26 @@ object ScaleProbe {
     val nAffected = labels.join(broadcast(purged), Seq("vec_id"), "left_semi")
       .select("cluster_id").distinct().count()
     val nClusters = labels.select("cluster_id").distinct().count()
-    val (nOut, tPurge) = timed(
-      ext.Extensions.purgeClusterLabels(labels, "vec_id", purged,
-        ext.Extensions.semanticSurvivorGraph(corpus)).count())
+    // the survivors re-derive their pairs under the blocking the labels
+    // were built with, not the fold's defaults
+    val out = ext.Extensions.purgeClusterLabels(labels, "vec_id", purged,
+      ext.Extensions.semanticSurvivorGraph(corpus, bits, confirmCos))
+    val (nOut, tPurge) = timed(out.count())
+    // exactness: the fold's labels equal a full re-cluster of the survivors
+    val survivors = corpus.join(broadcast(purged), Seq("vec_id"), "left_anti")
+    val full = ops.Graph.connectedComponents(
+        ext.Extensions.semanticPairsFrom(survivors, bits = bits, threshold = confirmCos)
+          .select("id_a", "id_b"),
+        survivors.select(col("vec_id").as("id")))
+      .select(col("id").as("vec_id"), col("component").as("cluster_id"))
+    val folded = out.select("vec_id", "cluster_id")
+    val mismatch = folded.exceptAll(full).count() + full.exceptAll(folded).count()
     println(f"SEMLIFEPROBE purge n=$nVecs%d purged=$nPurged%d " +
-      f"affected=$nAffected%d/$nClusters%d clusters out=$nOut%d " +
+      f"affected=$nAffected%d/$nClusters%d clusters out=$nOut%d mismatch=$mismatch%d " +
       f"purge_wall=$tPurge%.1fs recluster_wall=$tCluster%.1fs " +
       f"speedup=${tCluster / math.max(tPurge, 0.001)}%.1fx")
     assert(nOut == nVecs - nPurged, "purged label count drifted")
+    assert(mismatch == 0, s"purged labels differ from a full re-cluster of the survivors in $mismatch rows")
   }
 
   /** `lexinc` mode: incremental lexical-index maintenance at
@@ -1730,11 +1742,7 @@ object ScaleProbe {
         ext.Extensions.minhashSignatures(docsA)
           .write.mode("overwrite").parquet(s"$dir/sigs.parquet")
         val sigsA0 = spark.read.parquet(s"$dir/sigs.parquet")
-        ext.Extensions.sigConfirm(
-            ext.Extensions.bandCandidates(
-              ext.Extensions.minhashBanded(sigsA0), Seq("band", "bk")),
-            "id_a", "id_b", sigsA0, sigsA0)
-          .select("id_a", "id_b")
+        ext.Extensions.sigPairs(sigsA0).select("id_a", "id_b")
           .write.mode("overwrite").parquet(s"$dir/pairs.parquet")
         ops.Graph.connectedComponents(
             spark.read.parquet(s"$dir/pairs.parquet"),

@@ -16,6 +16,10 @@ object ColumnOps {
     wrap(NextBirthday(exprOf(dob), exprOf(today)))
   def sortedIntersectCount(a: Column, b: Column): Column =
     wrap(SortedIntersectCount(exprOf(a), exprOf(b)))
+  def equalCount(a: Column, b: Column): Column =
+    wrap(EqualCount(exprOf(a), exprOf(b)))
+  def dequantizeUnit(codes: Column, mins: Column, scales: Column): Column =
+    wrap(DequantizeUnit(exprOf(codes), exprOf(mins), exprOf(scales)))
   def sha60(c: Column): Column =
     wrap(Sha60(exprOf(c)))
   def shingleSha60(c: Column, n: Int): Column =

@@ -161,10 +161,12 @@ object Extensions {
 
   /** The `n` rows with the smallest (hash60(id), id) — one TakeOrdered
     * pass (O(corpus · log n), executor-side top-n merge, no driver
-    * collect), deterministic for any id distribution. */
+    * collect), deterministic for any id distribution. The hash is an
+    * ordering expression, not a projected column, so a sample of the
+    * search corpus plans the same TakeOrdered as
+    * [[collectQueryBatch]]'s and shares its generated classes. */
   def hashOrderedSample(df: DataFrame, idCol: String, n: Int): DataFrame =
-    df.withColumn("__hk", Scalars.hash60(col(idCol).cast("string")))
-      .orderBy(col("__hk"), col(idCol)).limit(n).drop("__hk")
+    df.orderBy(Scalars.hash60(col(idCol).cast("string")), col(idCol)).limit(n)
 
   /** Per-group variant: the ≤ `n` smallest (hash60(id), id) rows of
     * every `labelCol` group — one window shuffle, linear. */
@@ -211,25 +213,27 @@ object Extensions {
     * Stays under 2^61 so both engines' signed bigints never overflow. */
   private val MixC = 53919893334301279L
 
-  /** MinHash signature columns h0..h15 per doc_id over its shingles:
-    * h_i = min over the shingle hashes h of `h ^ (i·MixC)`.
+  /** MinHash signature (doc_id, mh) per document: `mh` is the
+    * array<bigint> of the 16 minima, mh[i] = min over the shingle hashes
+    * h of `h ^ (i·MixC)`.
     *
     * One codegen kernel ([[graft.expr.ShingleMinHash]]) hashes every
     * n-gram window in one pass over the utf8 bytes and folds all 16
-    * minima as it goes; the 16 columns are extractions of its array, so
-    * the signature projection stays in whole-stage codegen. A signature
-    * is a per-document reduction, so the explode + groupBy form this
-    * replaces paid a full shuffle of every (doc, shingle) pair — at
-    * 100 TB that shuffle dwarfs the hashing — while this form is
-    * map-only. The distinct step is dropped, not emulated: only minima
-    * are consumed, and min over the multiset == min over the distinct
-    * set. (Hashing stays inline per shingle: measured against a
-    * distinct-shingle dictionary + broadcast join, inline wins — the
-    * join's string probes cost more than the codegen'd digests.) */
+    * minima as it goes. The signature stays that one array through the
+    * stored tables, the band explode and the confirm kernel, so no plan
+    * carries 16 per-permutation columns (DESIGN.md "The codegen
+    * budget"). A signature is a per-document reduction, so the explode
+    * + groupBy form this replaces paid a full shuffle of every (doc,
+    * shingle) pair — at 100 TB that shuffle dwarfs the hashing — while
+    * this form is map-only. The distinct step is dropped, not emulated:
+    * only minima are consumed, and min over the multiset == min over
+    * the distinct set. (Hashing stays inline per shingle: measured
+    * against a distinct-shingle dictionary + broadcast join, inline
+    * wins — the join's string probes cost more than the codegen'd
+    * digests.) */
   def minhashSignatures(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        graft.expr.ColumnOps.shingleMinHash(col("text"), N, Perms, MixC).as("mh"))
-      .select(col("doc_id") +: (0 until Perms).map(i => col("mh")(i).as(s"h$i")): _*)
+      graft.expr.ColumnOps.shingleMinHash(col("text"), N, Perms, MixC).as("mh"))
 
   /** Max members a single band bucket may feed into the full m²
     * candidate self-join. On duplicate-heavy corpora (boilerplate,
@@ -252,96 +256,131 @@ object Extensions {
   final val SimhashBucketCap = 800
 
   /** Candidate pairs (id_a < id_b, distinct) from a banded frame of
-    * (keyCols…, doc_id). Buckets of ≤ `cap` members get the exact m²
-    * self-join; buckets above it are STAR-LINKED — every member pairs
-    * with TWO anchors (≈2m pairs, linear). A hot bucket means its
+    * (keyCols…, doc_id) — [[bandPartners]]' pairs. */
+  def bandCandidates(banded: DataFrame, keyCols: Seq[String],
+                     cap: Int = BandBucketCap): DataFrame =
+    bandPartners(banded, keyCols, cap)
+      .select(least(col("doc_id"), col("partner.doc_id")).as("id_a"),
+        greatest(col("doc_id"), col("partner.doc_id")).as("id_b"))
+      .distinct()
+
+  /** Every banded row (keyCols…, doc_id, payload…) with one `partner`
+    * struct (doc_id, payload…) per candidate pair it takes part in,
+    * from ONE window over the band key — no self-join, no cache.
+    * Unordered, not distinct (a pair repeats once per shared bucket).
+    *
+    * Members of a bucket are ordered by their SALTED hash (xxhash64 over
+    * band key + doc_id), then doc_id. A bucket of ≤ `cap` members pairs
+    * each member with every LATER member — the frame of the next `cap`
+    * rows, which holds all of them — so each unordered pair appears once
+    * per bucket: the exact m² self-join. A bucket above `cap` is
+    * STAR-LINKED — every member pairs with TWO anchors, the bucket's
+    * first two members (≈2m pairs, linear). A hot bucket means its
     * members near-certainly belong to one near-dup family, so the star
     * preserves the connectivity the downstream clustering needs while
     * dropping the redundant intra-family pairs; the recall trade is
     * only on pairs whose sole collision was a hot bucket AND whose
     * similarity check would have passed — documented, and standard LSH
-    * practice. Anchors are the 2 members with the smallest SALTED hash
-    * (xxhash64 over band key + doc_id), not the min doc_id: a single
-    * anchor that happens to fail the downstream similarity check would
-    * sever every star edge and fragment the whole family, and min-id
-    * anchoring correlates that risk with whatever makes low ids special
-    * — two independent pseudo-random anchors make a full severance
-    * require both to be outliers. Bucket sizing and both anchors are
-    * one select over one window spec, so they plan as ONE Window over
-    * one shuffle + sort (three chained withColumns planned three
-    * Window + Sort pairs).
-    * Caching: the sized frame is cache-tracked ([[releaseCaches]]) —
-    * three consumers (two self-join sides + the star branch) would
-    * otherwise each re-run the explode + window shuffle. */
-  def bandCandidates(banded: DataFrame, keyCols: Seq[String],
-                     cap: Int = BandBucketCap): DataFrame = {
-    // ONE window (one shuffle+sort) carries bucket size AND both
-    // anchors as full-frame aggregates — an anchors self-join would
-    // cost an extra exchange for the (rare) hot branch
-    val anchorOrder = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(xxhash64(keyCols.map(col) :+ col("doc_id"): _*), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val sized = cacheTracked(banded.select(col("*"),
-      count(lit(1)).over(anchorOrder).as("bsz"),
-      first(col("doc_id")).over(anchorOrder).as("a1"),
-      nth_value(col("doc_id"), 2).over(anchorOrder).as("a2")))
-    val small = sized.filter(col("bsz") <= cap)
-    val full = small.select(keyCols.map(col) :+ col("doc_id").as("id_a"): _*)
-      .join(small.select(keyCols.map(col) :+ col("doc_id").as("id_b"): _*),
-        keyCols)
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val hot = sized.filter(col("bsz") > cap)
-    def starTo(anchor: Column): DataFrame = hot
-      .filter(col("doc_id") =!= anchor && anchor.isNotNull)
-      .select(least(anchor, col("doc_id")).as("id_a"),
-        greatest(anchor, col("doc_id")).as("id_b"))
-    full.unionByName(starTo(col("a1"))).unionByName(starTo(col("a2")))
-      .distinct()
+    * practice. Anchors are the 2 members with the smallest salted hash,
+    * not the min doc_id: a single anchor that happens to fail the
+    * downstream similarity check would sever every star edge and
+    * fragment the whole family, and min-id anchoring correlates that
+    * risk with whatever makes low ids special — two independent
+    * pseudo-random anchors make a full severance require both to be
+    * outliers.
+    *
+    * Bucket size, both anchors and the following members are one
+    * select over one window spec, so they plan as ONE Window over one
+    * shuffle + sort. The sliding frame is evaluated for hot buckets
+    * too, where the star ignores it: O(m·cap) in-memory copying per
+    * hot bucket, no shuffle. The payload rides along so a caller
+    * confirms a pair from the two rows it already holds
+    * ([[sigPairs]]) instead of joining back to its signature table
+    * twice. */
+  private[graft] def bandPartners(banded: DataFrame, keyCols: Seq[String],
+      cap: Int, payload: Seq[String] = Nil): DataFrame = {
+    val keys = keyCols.map(col)
+    val fields = "doc_id" +: payload
+    // the member struct is the one copy of doc_id and the payload that
+    // crosses the band shuffle
+    val member = col("__m")
+    val id = col("__m.doc_id")
+    val order = Window.partitionBy(keys: _*).orderBy(xxhash64(keys :+ id: _*), id)
+    // a RANGE frame: Spark evaluates nth_value over it as an aggregate,
+    // so the three share one frame (a ROWS frame gives each offset its
+    // own frame and its own generated projections)
+    val whole = order.rangeBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // the bucket is hot iff it has a (cap+1)-th member, and the anchors
+    // are members 1 and 2
+    banded.select(keys :+ struct(fields.map(col): _*).as("__m"): _*)
+      .select(col("*"),
+        nth_value(member, cap + 1).over(whole).isNotNull.as("__hot"),
+        nth_value(member, 1).over(whole).as("__a1"),
+        nth_value(member, 2).over(whole).as("__a2"),
+        collect_list(member).over(order.rowsBetween(1, cap)).as("__next"))
+      .select(keys ++ fields.map(f => col(s"__m.$f").as(f)) :+
+        explode(when(col("__hot"), array(col("__a1"), col("__a2")))
+          .otherwise(col("__next"))).as("partner"): _*)
+      .filter(col("partner").isNotNull && col("partner.doc_id") =!= col("doc_id"))
   }
 
   /** (band, bk, doc_id) band rows: un-pivot each signature to one row
-    * per band — ONE self-equi-join on (band, bk) replaces 4 separate
-    * 17-column self-joins + union (which 4×-read the signature table
-    * and shuffled 4×; at 100 TB that was the dominant cost). The key
-    * is the struct of the band's raw minhash values, not a re-hash,
-    * so no collision can admit a candidate the oracle wouldn't. */
-  def minhashBanded(sig: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { bi =>
-      struct(lit(bi).as("band"),
-        struct((0 until RowsPerBand)
-          .map(r => col(s"h${bi * RowsPerBand + r}").as(s"r$r")): _*).as("bk"))
-    }
-    sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("b.band").as("band"), col("b.bk").as("bk"), col("doc_id"))
-  }
+    * per band, so candidates come from ONE pass keyed on (band, bk) —
+    * never one join per band, which would read the signatures and
+    * shuffle once per band. The key is the band's slice of the raw
+    * minhash values, not a re-hash, so no collision can admit a
+    * candidate the oracle wouldn't. */
+  def minhashBanded(sig: DataFrame): DataFrame =
+    bandedSigs(sig).select("band", "bk", "doc_id")
+
+  /** [[minhashBanded]]'s rows keeping their document's whole signature
+    * `mh`, for [[sigPairs]]. */
+  private def bandedSigs(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"), col("mh"), posexplode(array((0 until Bands).map(bi =>
+      slice(col("mh"), bi * RowsPerBand + 1, RowsPerBand)): _*)).as(Seq("band", "bk")))
+
+  /** Confirmed near-dup pairs (id_a < id_b, est_jaccard ≥ 0.5, distinct)
+    * of a signature frame (doc_id, mh): banded candidates
+    * ([[bandPartners]]), each confirmed on the two full signatures its
+    * band rows carry. The one Spark definition of the self-join pair
+    * set; its SQL twin is [[minhashPairsSqlCtes]]. Unordered. */
+  def sigPairs(sig: DataFrame, cap: Int = BandBucketCap): DataFrame =
+    confirmedPartners(sig, cap).distinct()
+
+  /** [[sigPairs]] before its distinct: a pair repeats once per bucket
+    * its two documents share. */
+  private def confirmedPartners(sig: DataFrame, cap: Int): DataFrame =
+    bandPartners(bandedSigs(sig), Seq("band", "bk"), cap, Seq("mh"))
+      .select(least(col("doc_id"), col("partner.doc_id")).as("id_a"),
+        greatest(col("doc_id"), col("partner.doc_id")).as("id_b"),
+        estJaccard(col("mh"), col("partner.mh")))
+      .filter(col("est_jaccard") >= 0.5)
+
+  /** est_jaccard: the fraction of agreeing permutations, rounded like
+    * the oracle. */
+  private def estJaccard(a: Column, b: Column): Column =
+    round(graft.expr.ColumnOps.equalCount(a, b) / lit(Perms.toDouble), 4)
+      .as("est_jaccard")
 
   /** Near-dup pairs (id_a < id_b, est_jaccard ≥ 0.5) over any
     * (doc_id, text) frame — the shared core of ext_dedup_minhash and
     * ext_dedup_clusters. Unordered. */
-  def minhashPairsFrom(docs: DataFrame, cap: Int = BandBucketCap): DataFrame = {
-      val sig = cacheTracked(minhashSignatures(docs))
-      val cand = bandCandidates(minhashBanded(sig), Seq("band", "bk"), cap)
-      // estimate from full signatures for the surviving candidates only
-      sigConfirm(cand, "id_a", "id_b", sig, sig)
-  }
+  def minhashPairsFrom(docs: DataFrame, cap: Int = BandBucketCap): DataFrame =
+    sigPairs(minhashSignatures(docs), cap)
 
-  /** Confirm banded candidates against the FULL signatures: keep pairs
-    * whose estimated jaccard (fraction of agreeing perms, rounded like
-    * the oracle) clears 0.5 — the one Spark definition of the confirm
-    * step, shared by the self-join dedup and the incremental
-    * batch-vs-corpus probe (its SQL twin is [[minhashMatchSumSql]]). */
+  /** Confirm cross-set candidates (`leftCol` of `sigLeft`, `rightCol`
+    * of `sigRight`) against the FULL signatures: keep pairs whose
+    * [[estJaccard]] clears 0.5 — the confirm step of the arrival probes
+    * (batch vs corpus, fresh vs refreshed index), whose candidates come
+    * from two different band tables (its SQL twin is
+    * [[minhashMatchSumSql]]). */
   private[graft] def sigConfirm(cand: DataFrame, leftCol: String, rightCol: String,
                          sigLeft: DataFrame, sigRight: DataFrame): DataFrame = {
-    val sa = sigLeft.select(sigLeft.columns.map(c => col(c).as(s"a_$c")).toSeq: _*)
-    val sb = sigRight.select(sigRight.columns.map(c => col(c).as(s"b_$c")).toSeq: _*)
-    val matches = (0 until Perms)
-      .map(i => when(col(s"a_h$i") === col(s"b_h$i"), 1).otherwise(0))
-      .reduce((a: Column, b: Column) => a + b)
-    cand.join(sa, col(leftCol) === col("a_doc_id"))
-      .join(sb, col(rightCol) === col("b_doc_id"))
-      .select(col(leftCol), col(rightCol),
-        round(matches / lit(Perms.toDouble), 4).as("est_jaccard"))
+    def side(sig: DataFrame, p: String) =
+      sig.select(col("doc_id").as(s"${p}_doc_id"), col("mh").as(s"${p}_mh"))
+    cand.join(side(sigLeft, "a"), col(leftCol) === col("a_doc_id"))
+      .join(side(sigRight, "b"), col(rightCol) === col("b_doc_id"))
+      .select(col(leftCol), col(rightCol), estJaccard(col("a_mh"), col("b_mh")))
       .filter(col("est_jaccard") >= 0.5)
   }
 
@@ -456,7 +495,14 @@ object Extensions {
        |         FROM reach GROUP BY id)""".stripMargin
 
   val dedupMinhash: Q = Q("ext_dedup_minhash",
-    (spark, sfDir) => minhashPairs(spark, sfDir).orderBy("id_a", "id_b"),
+    // minhashPairs, sorted, over ONE shuffle: the range partitioning on
+    // (id_a, id_b) puts every copy of a pair in one partition, so the
+    // distinct needs no hash shuffle, and its partitions are in key
+    // order, so a partition-local sort orders the whole result
+    (spark, sfDir) =>
+      confirmedPartners(minhashSignatures(Tables.documents(spark, sfDir)), BandBucketCap)
+        .repartitionByRange(col("id_a"), col("id_b")).distinct()
+        .sortWithinPartitions("id_a", "id_b"),
     Some(s"""WITH ${minhashPairsSqlCtes()}
             |SELECT id_a, id_b, est_jaccard FROM est
             |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin))
@@ -1234,20 +1280,20 @@ object Extensions {
   // =====================================================================
   val topkCosine: Q = Q("ext_topk_cosine",
     (spark, sfDir) => {
-      val e = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", sqrt(dotD(col("v"), col("v"))))
+      val e = annCorpus(spark, sfDir)
+      def nrm = sqrt(dotD(col("v"), col("v")))
+      // the sample is drawn from the (vec_id, v) corpus frame, norms
+      // after: the TakeOrdered is the query batch's own plan
       val q = hashOrderedSample(e, "vec_id", AnnQueryCount)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val c = e.select(col("vec_id").as("corpus_id"), col("v").as("cv"), col("nrm").as("cn"))
+        .select(col("vec_id").as("query_id"), col("v").as("qv"), nrm.as("qn"))
+      val c = e.select(col("vec_id").as("corpus_id"), col("v").as("cv"), nrm.as("cn"))
       val cos = round(dotD(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("corpus_id").asc)
-      c.join(broadcast(q), col("query_id") =!= col("corpus_id"))
-        .select(col("query_id"), col("corpus_id"), cos.as("cos"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= AnnK)
-        .orderBy("query_id", "rank")
+      // coalesce(…, false) keeps exactly the rows `query_id != corpus_id`
+      // keeps, but is null-tolerant, so the optimizer infers no
+      // not-null filter over the 16-row TakeOrdered — a codegen stage
+      // of its own
+      rankTopK(c.join(broadcast(q), coalesce(col("query_id") =!= col("corpus_id"), lit(false)))
+        .select(col("query_id"), col("corpus_id"), cos.as("cos")), AnnK)
     },
     Some(s"""WITH e AS (
            |  SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -1290,17 +1336,12 @@ object Extensions {
     val c = e.select(col("vec_id").as("corpus_id"), col("v").as("cv"),
       col("nrm").as("cn"), col("label"))
     val cos = round(dotD(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
     // label EQUI-join (the filter as a join key — never a cross join
     // plus a post-predicate) with the O(1) query side broadcast
-    c.join(broadcast(q), Seq("label"))
+    rankTopK(c.join(broadcast(q), Seq("label"))
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("label"), col("corpus_id"),
-        cos.as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .orderBy("query_id", "rank")
+        cos.as("cos")), AnnK)
   }
 
   val topkFiltered: Q = Q("ext_topk_filtered",
@@ -1609,14 +1650,9 @@ object Extensions {
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val cv = e.select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
     val cos = round(dotD(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-    val w10 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    cand.join(broadcast(qv), col("query_id") === col("qid"))
+    rankTopK(cand.join(broadcast(qv), col("query_id") === col("qid"))
       .join(cv, col("corpus_id") === col("cid"))
-      .select(col("query_id"), col("corpus_id"), cos.as("cos"))
-      .withColumn("rank", row_number().over(w10))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+      .select(col("query_id"), col("corpus_id"), cos.as("cos")), k)
   }
 
   /** The stored LSH index — the capped (corpus_id, c_bucket) table,
@@ -1866,8 +1902,7 @@ object Extensions {
     val sampled = n <= bound && queryIds.queryExecution.analyzed
       .sameResult(annQueryIds(emb).queryExecution.analyzed)
     val taken = if (!sampled) None else {
-      val top = emb.orderBy(Scalars.hash60(col("vec_id").cast("string")), col("vec_id"))
-        .limit(n + 1).collect()
+      val top = hashOrderedSample(emb, "vec_id", n + 1).collect()
       val head = top.take(n)
       val ids = head.map(_.getAs[Any]("vec_id"))
       val exact = !ids.contains(null) && ids.distinct.length == ids.length &&
@@ -2106,15 +2141,10 @@ object Extensions {
       case None => routeCells(prepare(queryRows(emb, queryIds)),
         "query_id", "qv", centroids, nProbe, payload = Seq("qv"))
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    corpus.join(broadcast(queries), Seq("cell"))
+    rankTopK(corpus.join(broadcast(queries), Seq("cell"))
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
-        round(dotD(col("qv"), col("cv")), 6).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+        round(dotD(col("qv"), col("cv")), 6).as("cos")), k)
   }
 
   private[graft] def ivfSearch(spark: SparkSession, sfDir: String,
@@ -2175,6 +2205,30 @@ object Extensions {
     e.select(col("vec_id").as("query_id"), col("vec_id").as("corpus_id"),
         lit(0.0).as("cos"), lit(0).as("rank"))
       .filter(lit(false))
+  /** The top-k tail the exact and reranked searches share: rank each
+    * query's (query_id, corpus_id, cos) rows by (cos desc, corpus_id
+    * asc), keep the first k, and order the kept rows by (query_id,
+    * rank). They number nQueries × k — constant by the query-batch
+    * contract — so they are ordered in ONE partition: a range
+    * partitioning would run a sampling job and compile its own ordering
+    * classes for a few hundred rows. One definition, so every search
+    * that ends in it reuses the same generated classes (DESIGN.md "The
+    * codegen budget"). */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    cutPerQuery(scored, "cos", k, "rank")
+      .repartition(1).sortWithinPartitions("query_id", "rank")
+
+  /** The first `n` rows of each query by (`score` desc, corpus_id asc),
+    * numbered in `rank` — the cut of [[rankTopK]] and of the ADC
+    * pre-selection. Callers lay the frame out as (query_id, corpus_id,
+    * score, payload…), so both cuts sort and rank through the same
+    * generated orderings. */
+  private def cutPerQuery(scored: DataFrame, score: String, n: Int,
+                          rank: String): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("corpus_id").asc)
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= n)
+  }
   /** ADC score: fixed-order sum over subspaces — Σ_mi lut[mi·K +
     * code[mi]]. M is a plan-time constant, so the sum is UNROLLED
     * into M element_at terms: the aggregate(sequence(0, m-1), ...)
@@ -2408,11 +2462,10 @@ object Extensions {
               .cast("int")).as("qv8"))
         val q8 = parquetFixture(spark, "int8-vecs", s, "i8v1",
           q8live.queryExecution.logical.toString, q8live)
-        val deq = transform(col("qv8"), (x, i) =>
-          x.cast("double") * element_at(scArr, i + 1) + element_at(mnArr, i + 1))
-        q8.select(col("corpus_id"), deq.as("dv"))
-          .select(col("corpus_id"),
-            transform(col("dv"), x => x / sqrt(dotD(col("dv"), col("dv")))).as("cv"))
+        // dequantize + re-normalize in one codegen kernel, inside the
+        // scan's whole-stage class
+        q8.select(col("corpus_id"),
+          graft.expr.ColumnOps.dequantizeUnit(col("qv8"), mnArr, scArr).as("cv"))
     }
   }
 
@@ -2442,27 +2495,18 @@ object Extensions {
       .select(col("vec_id").as("query_id"), col("nv").as("qv"), pqLut(cbs).as("lut"))
     // ADC: the shared unrolled sum — see [[adcSum]]
     val adc = adcSum(m, kw)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("corpus_id").asc)
-    val candidates = codes.crossJoin(broadcast(queries))
+    val candidates = cutPerQuery(codes.crossJoin(broadcast(queries))
       .filter(col("query_id") =!= col("corpus_id"))
-      .select(col("query_id"), col("qv"), col("corpus_id"),
-        round(adc, 6).as("adc"))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= rerank)
+      .select(col("query_id"), col("corpus_id"), round(adc, 6).as("adc"), col("qv")),
+      "adc", rerank, "arank")
     // top-R rerank: fetch vectors for the finalists only — full raw
     // vectors in live mode; the 8×-smaller stored int8 table (an
     // int8-dequantized, NOT bit-exact, rerank — recall-floor-gated)
     // in stored-index mode. See [[rerankVecs]].
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    candidates
+    rankTopK(candidates
       .join(rerankVecs(emb, codebookSrc), Seq("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
-        round(dotD(col("qv"), col("cv")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+        round(dotD(col("qv"), col("cv")), 6).as("cos")), k)
   }
 
   private[graft] def pqSearch(spark: SparkSession, sfDir: String,
@@ -2702,8 +2746,6 @@ object Extensions {
     // discipline; a post-filter over unconstrained top-k would lose
     // results exactly when the filter is selective.
     val adc = adcSum(m, kw)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("corpus_id").asc)
     // ONE query-sized collect serves the probed-cell literal AND every
     // filter column's value set (a second driver job per filter column
     // would double the routing's fixed cost for no information).
@@ -2723,22 +2765,15 @@ object Extensions {
         val vals = probeRows.map(_.get(i + 1)).distinct
         df.filter(col(c).isin(vals.toSeq: _*))
     }
-    val candidates = prefiltered
+    val candidates = cutPerQuery(prefiltered
       .join(broadcast(queries), Seq("cell") ++ filterCols)
       .filter(col("query_id") =!= col("corpus_id"))
-      .select(col("query_id"), col("qv"), col("corpus_id"),
-        round(adc + adcExtra, 6).as("adc"))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= rerank)
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    candidates
+      .select(col("query_id"), col("corpus_id"),
+        round(adc + adcExtra, 6).as("adc"), col("qv")), "adc", rerank, "arank")
+    rankTopK(candidates
       .join(rerankVecs(emb, src), Seq("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
-        round(dotD(col("qv"), col("cv")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+        round(dotD(col("qv"), col("cv")), 6).as("cos")), k)
   }
 
   private[graft] def ivfpqSearch(spark: SparkSession, sfDir: String,
@@ -2900,15 +2935,10 @@ object Extensions {
     val c = e.select(col("vec_id").as("corpus_id"), col("v").as("cv"),
       col("nrm").as("cn"), col("label"))
     val cos = round(dotD(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    c.crossJoin(broadcast(q)) // O(1) query set — the topk_cosine shape
+    rankTopK(c.crossJoin(broadcast(q)) // O(1) query set — the topk_cosine shape
       .filter(col("label") =!= col("qlabel"))
       .select(col("query_id"), col("qlabel"), col("corpus_id"),
-        col("label"), cos.as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= AnnK)
-      .orderBy("query_id", "rank")
+        col("label"), cos.as("cos")), AnnK)
   }
 
   val hardNegatives: Q = Q("ext_hard_negatives",
@@ -3508,15 +3538,10 @@ object Extensions {
         imiRouteCells(cacheTracked(prepare(queryRows(emb, queryIds))), "query_id", cs0, cs1,
           nProbe, probeA, payload = Seq("qv"))
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    corpus.join(broadcast(queries), Seq("cell"))
+    rankTopK(corpus.join(broadcast(queries), Seq("cell"))
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
-        round(dotD(col("qv"), col("cv")), 6).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+        round(dotD(col("qv"), col("cv")), 6).as("cos")), k)
   }
 
   private[graft] def imiSearch(spark: SparkSession, sfDir: String,
@@ -4925,7 +4950,7 @@ object Extensions {
   // 5-word gram with any test document (split = the same content-hash
   // buckets as ext_split_assign, so the check is stable under
   // re-ingestion). Gram generation is a map-only array HOF pass over
-  // hashed grams; the test gram set is distinct-small (5% of corpus) —
+  // hashed grams; the test gram set is small (5% of corpus) —
   // broadcast side of the join — so the train side is ONE scan + one
   // broadcast semi-join, never a shuffle of the corpus. At 100 TB with
   // a larger test split the same plan degrades gracefully to a
@@ -4936,6 +4961,14 @@ object Extensions {
   def contaminationFlags(spark: SparkSession, sfDir: String): DataFrame =
     contaminationFlagsWith(spark, sfDir)((trainG, _) => trainG)
 
+  /** doc_id of every contaminated train-split doc — the `contaminated`
+    * rows of [[contaminationFlags]] without the flag join, for the
+    * funnels that only anti-join them. One row per matched gram, not
+    * distinct: an anti-join needs no distinct, so the funnel plans no
+    * aggregate, no train-split re-scan and no flag join for it. */
+  def contaminatedDocIds(spark: SparkSession, sfDir: String): DataFrame =
+    contaminationHits(spark, sfDir)((trainG, _) => trainG)._2
+
   /** [[contaminationFlags]] with a train-gram prefilter hook —
     * `prefilter(trainG, testG)` returns the train grams to feed the
     * exact semi-join. The Bloom variant lives HERE so its gram
@@ -4943,6 +4976,18 @@ object Extensions {
     * join body, the hook only inserts the probe). */
   private[graft] def contaminationFlagsWith(spark: SparkSession, sfDir: String)(
       prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (train, hitRows) = contaminationHits(spark, sfDir)(prefilter)
+    val hit = hitRows.distinct().withColumn("contaminated", lit(true))
+    train.join(hit, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("contaminated"), lit(false)).as("contaminated"))
+  }
+
+  /** (train-split doc ids, contaminated doc id per matched gram) — the
+    * tokenize/bucket/join body shared by [[contaminationFlagsWith]] and
+    * [[contaminatedDocIds]]. */
+  private def contaminationHits(spark: SparkSession, sfDir: String)(
+      prefilter: (DataFrame, DataFrame) => DataFrame): (DataFrame, DataFrame) = {
       val bucket = pmod(Scalars.hash60(col("text")), lit(100L))
       // WordGramSha60 tokenizes + hashes every 5-word gram in ONE pass
       // (codegen). The composed split/slice/concat_ws form it replaces
@@ -4960,20 +5005,18 @@ object Extensions {
         .select(col("doc_id"), bucket.as("bucket"), grams.as("grams"))
       val trainG = base.filter(col("bucket") < 90)
         .select(col("doc_id"), explode(col("grams")).as("g"))
+      // not distinct: the test grams only feed a semi-join, whose hash
+      // build ignores duplicate keys, so a distinct would add an
+      // aggregate and a shuffle that change no output row
       val testG = base.filter(col("bucket") >= 95)
-        .select(explode(col("grams")).as("g")).distinct()
-      // no broadcast HINT: at this SF AQE broadcasts the distinct test
-      // gram set on its own; at 100 TB the same set is 5% of corpus
-      // grams — forcing it into memory would OOM the executors, while
-      // the unhinted plan degrades to a shuffled semi-join on the
-      // 60-bit gram hash (uniform key, no skew)
-      val hit = prefilter(trainG, testG).join(testG, Seq("g"), "left_semi")
-        .select("doc_id").distinct()
-        .withColumn("contaminated", lit(true))
-      base.filter(col("bucket") < 90).select("doc_id")
-        .join(hit, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("contaminated"), lit(false)).as("contaminated"))
+        .select(explode(col("grams")).as("g"))
+      // no broadcast HINT: at this SF AQE broadcasts the test gram set
+      // on its own; at 100 TB the same set is 5% of corpus grams —
+      // forcing it into memory would OOM the executors, while the
+      // unhinted plan degrades to a shuffled semi-join on the 60-bit
+      // gram hash (uniform key, no skew)
+      (base.filter(col("bucket") < 90).select("doc_id"),
+        prefilter(trainG, testG).join(testG, Seq("g"), "left_semi").select("doc_id"))
   }
 
   /** DuckDB CTE chain ending in `hit` (doc_id of contaminated train
@@ -5800,12 +5843,11 @@ object Extensions {
     * minhash takedown hands [[refreshClusterLabels]]. */
   private[graft] def mhSurvivorGraph(sigs: DataFrame)(
       survivors: DataFrame): (DataFrame, DataFrame) = {
-    // CACHED (tracked): the survivor signatures feed the banding, both
-    // confirm sides, and the CC node set
+    // CACHED (tracked): the survivor signatures feed the banded pairs
+    // and the CC node set
     val sigA = cacheTracked(
       sigs.join(broadcast(survivors), Seq("doc_id"), "left_semi"))
-    (sigConfirm(bandCandidates(minhashBanded(sigA), Seq("band", "bk")),
-      "id_a", "id_b", sigA, sigA).select("id_a", "id_b"), sigA.select("doc_id"))
+    (sigPairs(sigA).select("id_a", "id_b"), sigA.select("doc_id"))
   }
 
   val clustersPurge: Q = Q("ext_clusters_purge",
@@ -7502,10 +7544,8 @@ object Extensions {
   // =====================================================================
   val corpusCurateFull: Q = Q("ext_corpus_curate_full",
     (spark, sfDir) => {
-      val contaminated = contaminationFlags(spark, sfDir)
-        .filter(col("contaminated")).select("doc_id")
       corpusCurate.fn(spark, sfDir)
-        .join(contaminated, Seq("doc_id"), "left_anti")
+        .join(contaminatedDocIds(spark, sfDir), Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
     },
     Some(s"""WITH $decontamSqlCtes,
@@ -7962,13 +8002,15 @@ object Extensions {
     * own blocking over the survivors' raw vectors — the
     * `survivorGraphOf` the vector takedown hands
     * [[refreshClusterLabels]]. */
-  private[graft] def semanticSurvivorGraph(emb: DataFrame)(
+  private[graft] def semanticSurvivorGraph(emb: DataFrame, bits: Int = SemanticBits,
+      threshold: Double = SemanticCosThreshold)(
       survivors: DataFrame): (DataFrame, DataFrame) = {
     // CACHED (tracked): the survivor vectors feed the blocking, both
     // confirm sides, and the CC node set
     val embA = cacheTracked(
       emb.join(broadcast(survivors), Seq("vec_id"), "left_semi"))
-    (semanticPairsFrom(embA).select("id_a", "id_b"), embA.select("vec_id"))
+    (semanticPairsFrom(embA, bits = bits, threshold = threshold).select("id_a", "id_b"),
+      embA.select("vec_id"))
   }
 
   val semanticPurge: Q = Q("ext_semantic_purge",
@@ -8095,9 +8137,7 @@ object Extensions {
   private def mhSnapAPairsFixture(spark: SparkSession,
                                   sfDir: String): DataFrame = {
     val sigsA = mhSnapASigsFixture(spark, sfDir)
-    val live = sigConfirm(
-      bandCandidates(minhashBanded(sigsA), Seq("band", "bk")),
-      "id_a", "id_b", sigsA, sigsA).select("id_a", "id_b")
+    val live = sigPairs(sigsA).select("id_a", "id_b")
     parquetFixture(spark, "mh-pairs", s"$sfDir/documents.parquet",
       s"snapa$SnapABelow",
       live.queryExecution.logical.toString, live)
@@ -8907,10 +8947,8 @@ object Extensions {
       val semDrop = semanticComponentLabels(spark, sfDir)
         .filter(col("vec_id") =!= col("cluster_id"))
         .select(col("vec_id").as("doc_id"))
-      val contaminated = contaminationFlags(spark, sfDir)
-        .filter(col("contaminated")).select("doc_id")
       corpusCurate.fn(spark, sfDir)
-        .join(contaminated, Seq("doc_id"), "left_anti")
+        .join(contaminatedDocIds(spark, sfDir), Seq("doc_id"), "left_anti")
         .join(semDrop, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
     },
@@ -9386,9 +9424,7 @@ object Extensions {
       // the corpus labels: CC over the corpus's own near-dup pairs,
       // derived from the SERVED signature table, persisted like
       // minhashComponentLabels (pair plan + algo version as the key)
-      val corpusPairs = sigConfirm(
-        bandCandidates(minhashBanded(sigC), Seq("band", "bk")),
-        "id_a", "id_b", sigC, sigC).select("id_a", "id_b")
+      val corpusPairs = sigPairs(sigC).select("id_a", "id_b")
       val labels = parquetFixture(spark, "cc-cache", s"$sfDir/documents.parquet",
         s"mhinc${IncrementalCorpusPct}_${graft.ops.Graph.AlgoVersion}",
         corpusPairs.queryExecution.logical.toString,

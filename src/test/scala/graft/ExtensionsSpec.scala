@@ -24,7 +24,7 @@ class ExtensionsSpec extends SparkSpec {
                    (3L, "zzzz yyyy xxxx wwww vvvv uuuu tttt ssss rrrr"))
       .toDF("doc_id", "text")
     val sig = Extensions.minhashSignatures(docs).collect()
-      .map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sig(1L) == sig(2L))
     assert(sig(1L) != sig(3L))
   }

@@ -123,20 +123,28 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.WindowExec
-    try {
-      val sig = ext.Extensions.minhashSignatures(model.Tables.documents(spark, sf0001))
-      val cand = ext.Extensions.bandCandidates(ext.Extensions.minhashBanded(sig), Seq("band", "bk"))
-      cand.collect()
-      val sized = nodesDeep(cand.queryExecution.executedPlan).collect {
-        case i: InMemoryTableScanExec if i.relation.output.exists(_.name == "bsz") =>
-          nodesDeep(i.relation.cachedPlan)
-      }
-      assert(sized.nonEmpty, "the cached band-sizing frame is missing from the plan")
-      val windows = sized.head.count(_.isInstanceOf[WindowExec])
-      val sorts = sized.head.count(_.isInstanceOf[SortExec])
-      assert(windows == 1 && sorts == 1,
-        s"band stage plans $windows Window and $sorts Sort nodes:\n${sized.head.mkString("\n")}")
-    } finally ext.Extensions.releaseCaches()
+    // the whole candidate plan, not just a cached sizing frame: bucket
+    // size, both anchors and the in-bucket partners come from one
+    // window, and nothing is cached
+    val sig = ext.Extensions.minhashSignatures(model.Tables.documents(spark, sf0001))
+    val cand = ext.Extensions.bandCandidates(ext.Extensions.minhashBanded(sig), Seq("band", "bk"))
+    cand.collect()
+    val nodes = nodesDeep(cand.queryExecution.executedPlan)
+    val windows = nodes.count(_.isInstanceOf[WindowExec])
+    val sorts = nodes.count(_.isInstanceOf[SortExec])
+    assert(windows == 1 && sorts == 1,
+      s"band stage plans $windows Window and $sorts Sort nodes:\n${nodes.mkString("\n")}")
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"the candidate plan reads a cached relation:\n${nodes.mkString("\n")}")
+  }
+
+  test("minhash pairs: one shuffle to band, confirm on the carried signatures — no join") {
+    val plan = finalPlan(ext.Extensions.minhashPairsFrom(model.Tables.documents(spark, sf0001)))
+    val joins = "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|BroadcastNestedLoopJoin".r
+      .findAllIn(plan).size
+    assert(joins == 0, s"the pair set joins back to its signatures:\n$plan")
+    assert(plan.linesIterator.exists(l => l.contains("equal_count") && l.contains("*(")),
+      s"the confirm kernel is outside whole-stage codegen:\n$plan")
   }
 
   test("warm ext_topk_ivfpq construction runs at most one Spark job (the query batch)") {

@@ -242,6 +242,90 @@ class PropertySpec extends SparkSpec {
     }, minSuccessful(5))
   }
 
+  /** Compiles `e` with Janino — a compile error throws here instead of
+    * falling back to the interpreter — and returns its value on `row`
+    * beside the interpreted `eval`. */
+  private def codegenAndEval(e: org.apache.spark.sql.catalyst.expressions.Expression,
+      row: org.apache.spark.sql.catalyst.InternalRow): (Any, Any) = {
+    val proj = org.apache.spark.sql.catalyst.expressions.codegen
+      .GenerateUnsafeProjection.generate(Seq(e))
+    val out = proj(row)
+    (if (out.isNullAt(0)) null else out.get(0, e.dataType), e.eval(row))
+  }
+
+  test("EqualCount equals the per-position CASE WHEN sum, codegen and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val elem = Gen.oneOf(Gen.const(null: java.lang.Long), Gen.choose(-2L, 2L).map(Long.box),
+      Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box))
+    val arr = Gen.oneOf(Gen.const(null: Seq[java.lang.Long]),
+      Gen.choose(0, 18).flatMap(Gen.listOfN(_, elem)))
+    check(Prop.forAll(Gen.listOfN(30, Gen.zip(arr, arr))) { pairs =>
+      val schema = StructType(Seq(StructField("a", ArrayType(LongType)),
+        StructField("b", ArrayType(LongType))))
+      val rows = pairs.map { case (a, b) => Row(a, b) }
+      val frames = Seq(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+      val kernel = graft.expr.ColumnOps.equalCount(col("a"), col("b"))
+      val ref = aggregate(zip_with(col("a"), col("b"),
+        (x, y) => when(x === y, 1).otherwise(0)), lit(0), (s, v) => s + v)
+      val bound = graft.expr.EqualCount(BoundReference(0, ArrayType(LongType), true),
+        BoundReference(1, ArrayType(LongType), true))
+      def data(a: Seq[java.lang.Long]) =
+        if (a == null) null else new GenericArrayData(a.map(x => x: Any).toArray)
+      frames.forall(df => df.filter(not(kernel <=> ref)).count() == 0) &&
+        pairs.forall { case (a, b) =>
+          val (gen, interp) = codegenAndEval(bound, InternalRow(data(a), data(b)))
+          gen == interp
+        }
+    }, minSuccessful(5))
+  }
+
+  test("DequantizeUnit equals the dequantize and normalize lambdas bit for bit, codegen and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+    val dims = 8
+    val code = Gen.frequency(9 -> Gen.choose(0, 255).map(Int.box), 1 -> Gen.const(null: Integer))
+    val codes = Gen.oneOf(Gen.const(null: Seq[Integer]), Gen.listOfN(dims, code),
+      Gen.const(Seq.fill[Integer](dims)(null)))
+    val case_ = for {
+      rows <- Gen.listOfN(25, codes)
+      // positive minima: no non-null vector dequantizes to zero, where
+      // the lambda form raises DIVIDE_BY_ZERO
+      mins <- Gen.listOfN(dims, Gen.choose(0.01, 0.6))
+      scales <- Gen.listOfN(dims, Gen.oneOf(Gen.const(0.0), Gen.choose(1e-4, 1e-2)))
+    } yield (rows, mins, scales)
+    check(Prop.forAll(case_) { case (cs, mins, scales) =>
+      val schema = StructType(Seq(StructField("c", ArrayType(IntegerType))))
+      val rows = cs.map(Row(_))
+      val frames = Seq(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+      val mn = typedLit(mins)
+      val sc = typedLit(scales)
+      val kernel = graft.expr.ColumnOps.dequantizeUnit(col("c"), mn, sc)
+      val dv = transform(col("c"), (x, i) =>
+        x.cast("double") * element_at(sc, i + 1) + element_at(mn, i + 1))
+      val ref = transform(dv, x => x / sqrt(graft.expr.ColumnOps.dotProduct(dv, dv)))
+      val bound = graft.expr.DequantizeUnit(BoundReference(0, ArrayType(IntegerType), true),
+        Literal.create(mins, ArrayType(DoubleType)), Literal.create(scales, ArrayType(DoubleType)))
+      def arr(a: Any) = Option(a.asInstanceOf[ArrayData]).map(_.toSeq[Any](DoubleType))
+      frames.forall(df => df.filter(not(kernel <=> ref)).count() == 0) &&
+        cs.forall { c =>
+          val row = InternalRow(if (c == null) null else new GenericArrayData(c.map(x => x: Any).toArray))
+          val (gen, interp) = codegenAndEval(bound, row)
+          arr(gen) == arr(interp)
+        }
+    }, minSuccessful(5))
+  }
+
   private def minSuccessful(n: Int) =
     org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(n)
 
