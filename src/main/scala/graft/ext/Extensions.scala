@@ -266,20 +266,20 @@ object Extensions {
 
   /** Every banded row (keyCols…, doc_id, payload…) with one `partner`
     * struct (doc_id, payload…) per candidate pair it takes part in,
-    * from ONE window over the band key — no self-join, no cache.
+    * from ONE shuffle and sort over the band key — no self-join, no
+    * cache.
     * Unordered, not distinct (a pair repeats once per shared bucket).
     *
     * Members of a bucket are ordered by their SALTED hash (xxhash64 over
     * band key + doc_id), then doc_id. A bucket of ≤ `cap` members pairs
-    * each member with every LATER member — the frame of the next `cap`
-    * rows, which holds all of them — so each unordered pair appears once
-    * per bucket: the exact m² self-join. A bucket above `cap` is
-    * STAR-LINKED — every member pairs with TWO anchors, the bucket's
-    * first two members (≈2m pairs, linear). A hot bucket means its
-    * members near-certainly belong to one near-dup family, so the star
-    * preserves the connectivity the downstream clustering needs while
-    * dropping the redundant intra-family pairs; the recall trade is
-    * only on pairs whose sole collision was a hot bucket AND whose
+    * each member with every LATER member, so each unordered pair
+    * appears once per bucket: the exact m² self-join. A bucket above
+    * `cap` is STAR-LINKED — every member pairs with TWO anchors, the
+    * bucket's first two members (≈2m pairs, linear). A hot bucket means
+    * its members near-certainly belong to one near-dup family, so the
+    * star preserves the connectivity the downstream clustering needs
+    * while dropping the redundant intra-family pairs; the recall trade
+    * is only on pairs whose sole collision was a hot bucket AND whose
     * similarity check would have passed — documented, and standard LSH
     * practice. Anchors are the 2 members with the smallest salted hash,
     * not the min doc_id: a single anchor that happens to fail the
@@ -289,14 +289,18 @@ object Extensions {
     * pseudo-random anchors make a full severance require both to be
     * outliers.
     *
-    * Bucket size, both anchors and the following members are one
-    * select over one window spec, so they plan as ONE Window over one
-    * shuffle + sort. The sliding frame is evaluated for hot buckets
-    * too, where the star ignores it: O(m·cap) in-memory copying per
-    * hot bucket, no shuffle. The payload rides along so a caller
-    * confirms a pair from the two rows it already holds
-    * ([[sigPairs]]) instead of joining back to its signature table
-    * twice. */
+    * Two windows over the same spec, so ONE shuffle + sort: the first
+    * finds whether the bucket is hot and its anchors, the second
+    * collects the members of a bucket that is not hot, once per bucket,
+    * and each member keeps the slice after its own position. (The
+    * position is looked up in the list, not numbered by a running
+    * frame: a third frame costs three more generated projections.) A
+    * hot bucket collects nothing, so it costs O(m) — a sliding frame of
+    * the next `cap` rows would re-aggregate `cap` rows for every member
+    * (Spark recomputes a sliding frame per row). The payload rides
+    * along so a caller confirms a pair from the two rows it already
+    * holds ([[sigPairs]]) instead of joining back to its signature
+    * table twice. */
   private[graft] def bandPartners(banded: DataFrame, keyCols: Seq[String],
       cap: Int, payload: Seq[String] = Nil): DataFrame = {
     val keys = keyCols.map(col)
@@ -304,23 +308,26 @@ object Extensions {
     // the member struct is the one copy of doc_id and the payload that
     // crosses the band shuffle
     val member = col("__m")
-    val id = col("__m.doc_id")
-    val order = Window.partitionBy(keys: _*).orderBy(xxhash64(keys :+ id: _*), id)
+    // the order keys are columns, so the second window orders by the
+    // first's attributes and needs no sort of its own
+    val order = Window.partitionBy(keys: _*).orderBy(col("__h"), col("doc_id"))
     // a RANGE frame: Spark evaluates nth_value over it as an aggregate,
-    // so the three share one frame (a ROWS frame gives each offset its
-    // own frame and its own generated projections)
+    // so the aggregates share one frame (a ROWS frame gives each offset
+    // its own frame and its own generated projections)
     val whole = order.rangeBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // the bucket is hot iff it has a (cap+1)-th member, and the anchors
     // are members 1 and 2
-    banded.select(keys :+ struct(fields.map(col): _*).as("__m"): _*)
+    banded.select(keys ++ Seq(struct(fields.map(col): _*).as("__m"),
+        xxhash64(keys :+ col("doc_id"): _*).as("__h"), col("doc_id")): _*)
       .select(col("*"),
         nth_value(member, cap + 1).over(whole).isNotNull.as("__hot"),
         nth_value(member, 1).over(whole).as("__a1"),
-        nth_value(member, 2).over(whole).as("__a2"),
-        collect_list(member).over(order.rowsBetween(1, cap)).as("__next"))
+        nth_value(member, 2).over(whole).as("__a2"))
+      .withColumn("__all", collect_list(when(!col("__hot"), member)).over(whole))
       .select(keys ++ fields.map(f => col(s"__m.$f").as(f)) :+
-        explode(when(col("__hot"), array(col("__a1"), col("__a2")))
-          .otherwise(col("__next"))).as("partner"): _*)
+        explode(when(col("__hot"), array(col("__a1"), col("__a2"))).otherwise(
+          slice(col("__all"), array_position(col("__all"), member) + 1, lit(cap))))
+          .as("partner"): _*)
       .filter(col("partner").isNotNull && col("partner.doc_id") =!= col("doc_id"))
   }
 
@@ -346,6 +353,17 @@ object Extensions {
     * set; its SQL twin is [[minhashPairsSqlCtes]]. Unordered. */
   def sigPairs(sig: DataFrame, cap: Int = BandBucketCap): DataFrame =
     confirmedPartners(sig, cap).distinct()
+
+  /** [[sigPairs]] ordered by (id_a, id_b), over ONE shuffle: the range
+    * partitioning on id_a puts every copy of a pair in one partition,
+    * so the distinct needs no hash shuffle, and its partitions are in
+    * key order, so a partition-local sort orders the whole result. (On
+    * id_a alone, its bounds ordering and key projection are the
+    * classes of the curation's range partitioning on doc_id.) */
+  def sortedSigPairs(sig: DataFrame, cap: Int = BandBucketCap): DataFrame =
+    confirmedPartners(sig, cap)
+      .repartitionByRange(col("id_a")).distinct()
+      .sortWithinPartitions("id_a", "id_b")
 
   /** [[sigPairs]] before its distinct: a pair repeats once per bucket
     * its two documents share. */
@@ -495,14 +513,7 @@ object Extensions {
        |         FROM reach GROUP BY id)""".stripMargin
 
   val dedupMinhash: Q = Q("ext_dedup_minhash",
-    // minhashPairs, sorted, over ONE shuffle: the range partitioning on
-    // (id_a, id_b) puts every copy of a pair in one partition, so the
-    // distinct needs no hash shuffle, and its partitions are in key
-    // order, so a partition-local sort orders the whole result
-    (spark, sfDir) =>
-      confirmedPartners(minhashSignatures(Tables.documents(spark, sfDir)), BandBucketCap)
-        .repartitionByRange(col("id_a"), col("id_b")).distinct()
-        .sortWithinPartitions("id_a", "id_b"),
+    (spark, sfDir) => sortedSigPairs(minhashSignatures(Tables.documents(spark, sfDir))),
     Some(s"""WITH ${minhashPairsSqlCtes()}
             |SELECT id_a, id_b, est_jaccard FROM est
             |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin))

@@ -124,16 +124,19 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.WindowExec
     // the whole candidate plan, not just a cached sizing frame: bucket
-    // size, both anchors and the in-bucket partners come from one
-    // window, and nothing is cached
+    // size and both anchors come from one window, the in-bucket
+    // partners from a second window over the same sort, and nothing is
+    // cached
     val sig = ext.Extensions.minhashSignatures(model.Tables.documents(spark, sf0001))
     val cand = ext.Extensions.bandCandidates(ext.Extensions.minhashBanded(sig), Seq("band", "bk"))
     cand.collect()
     val nodes = nodesDeep(cand.queryExecution.executedPlan)
-    val windows = nodes.count(_.isInstanceOf[WindowExec])
+    val windows = nodes.collect { case w: WindowExec => w }
     val sorts = nodes.count(_.isInstanceOf[SortExec])
-    assert(windows == 1 && sorts == 1,
-      s"band stage plans $windows Window and $sorts Sort nodes:\n${nodes.mkString("\n")}")
+    val sizing = windows.filter(_.windowExpression.exists(_.toString.contains("nth_value")))
+    assert(sizing.length == 1 && windows.length == 2 && sorts == 1,
+      s"band stage plans ${windows.length} Window (${sizing.length} sizing) and $sorts Sort " +
+        s"nodes:\n${nodes.mkString("\n")}")
     assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
       s"the candidate plan reads a cached relation:\n${nodes.mkString("\n")}")
   }
@@ -145,6 +148,34 @@ class PlanSpec extends SparkSpec {
     assert(joins == 0, s"the pair set joins back to its signatures:\n$plan")
     assert(plan.linesIterator.exists(l => l.contains("equal_count") && l.contains("*(")),
       s"the confirm kernel is outside whole-stage codegen:\n$plan")
+  }
+
+  test("ext_dedup_minhash and the shared top-k tail return their rows in order") {
+    // both take their global order from the plan's shape — a range
+    // partitioning or one partition, then a partition-local sort — not
+    // from an orderBy. Coalescing is off so a shuffle added after the
+    // sort spreads the rows over several partitions and breaks the order.
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val pairs = ext.Extensions.dedupMinhash.fn(spark, sf0001)
+      val ids = pairs.collect()
+        .map(r => (r.getAs[Number]("id_a").longValue, r.getAs[Number]("id_b").longValue)).toSeq
+      assert(ids.nonEmpty && pairs.rdd.getNumPartitions > 1,
+        s"${ids.length} pairs over ${pairs.rdd.getNumPartitions} partitions: the order is untested")
+      assert(ids == ids.sorted, s"ext_dedup_minhash rows are not in (id_a, id_b) order: $ids")
+      val ranked = ext.Extensions.topkCosine.fn(spark, sf0001).collect()
+        .map(r => (r.getAs[Number]("query_id").longValue, r.getAs[Int]("rank"))).toSeq
+      assert(ranked.nonEmpty)
+      assert(ranked == ranked.sorted, s"ext_topk_cosine rows are not in (query_id, rank) order: $ranked")
+    } finally {
+      before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      ext.Extensions.releaseCaches()
+    }
   }
 
   test("warm ext_topk_ivfpq construction runs at most one Spark job (the query batch)") {
