@@ -1028,23 +1028,6 @@ object Extensions {
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))),
     Some(substrRewriteSql("")))
 
-  // =====================================================================
-  // E56: incremental substring-dedup maintenance — the arrival
-  // contract (E35/E36/E39) applied to the newest family: the standing
-  // corpus's GRAM-COUNT table is the stored index (`substr-grams`,
-  // (g, cnt) — 60-bit hashes, index-sized, written once per corpus),
-  // and an arriving batch pays ONE O(batch) tokenize+gram scan: its
-  // gram counts merge with the stored counts by a plain join, a batch
-  // position is duplicated iff the MERGED total ≥ 2, and the coverage
-  // union runs over batch positions only. The corpus is never
-  // re-tokenized on arrival.
-  //
-  // Oracle-paired (the strongest gate an arrival op can have): a doc's
-  // dup flags depend only on GLOBAL gram counts, not on which split
-  // the other occurrences live in — so the incremental output EQUALS
-  // the monolithic E52 restricted to the batch split, and the oracle
-  // is E52's SQL with that WHERE clause.
-  // =====================================================================
   /** (g, cnt): the corpus gram-count table — the substring-dedup
     * family's stored index artifact. Deliberately UNCACHED (unlike the
     * stats path's [[substringDocs]]): every consumer — the fixture
@@ -1138,30 +1121,6 @@ object Extensions {
     substringStatsFrom(docs, pos, dupG)
   }
 
-  /** The stored corpus gram index — (g, cnt, cdoc, cpos),
-    * [[substringGramIndex]] — shared by the stats arrival (E56), the
-    * compaction (E57), and the rewrite arrival (E60): same fixture key
-    * ⇒ one table serves all three. */
-  private def substrGramsFixture(spark: SparkSession, sfDir: String,
-                                 corpus: DataFrame): DataFrame = {
-    val corpusGrams0 = substringGramIndex(corpus)
-    parquetFixture(spark, "substr-grams",
-      s"$sfDir/documents.parquet",
-      s"w${SubstrDedupW}_inc${IncrementalCorpusPct}_cn1",
-      corpusGrams0.queryExecution.logical.toString, corpusGrams0)
-  }
-
-  val substrIncremental: Q = Q("ext_substr_incremental",
-    (spark, sfDir) => {
-      val (corpus, batch) = incrementalDocSplit(spark, sfDir)
-      val idx = substrGramsFixture(spark, sfDir, corpus)
-      // metadata-only count arms the bloom prefilter at scale
-      substrStatsAgainst(batch, idx, indexRows = Some(idx.count()))
-    },
-    Some(substrStatsSql(
-      s"WHERE ${duckHash60("CAST(g.doc_id AS VARCHAR)")} % 100 >= " +
-        s"$IncrementalCorpusPct")))
-
   // =====================================================================
   // E60: incremental substring-dedup REWRITE — the arrival contract
   // (E56) for the family's CONSUMER transformation: a daily batch is
@@ -1216,71 +1175,6 @@ object Extensions {
         least(col("pos") + W, col("n_tokens")).as("e")))
     substrRewriteFrom(docs, spans)
   }
-
-  val substrRewriteIncremental: Q = Q("ext_substr_rewrite_incremental",
-    (spark, sfDir) => {
-      val (corpus, batch) = incrementalDocSplit(spark, sfDir)
-      val idx = substrGramsFixture(spark, sfDir, corpus)
-      substrRewriteAgainst(batch, idx, indexRows = Some(idx.count()))
-    },
-    Some(substrRewriteSql(
-      s"WHERE ${duckHash60("CAST(d.doc_id AS VARCHAR)")} % 100 >= " +
-        s"$IncrementalCorpusPct")))
-
-  // =====================================================================
-  // E57: substring-dedup index compaction — the settling verb (E45's
-  // contract) for the gram-count table, completing the family's
-  // lifecycle on day one: accumulated arrival counts fold into ONE
-  // fresh (g, cnt) table by the SAME groupBy-sum the build runs — over
-  // index rows + the batch's one-scan counts, never the raw corpus.
-  // Counts are additive, so the compacted table is row-identical to
-  // the monolithic count table over corpus ∪ day-1 (asserted), and a
-  // day-2 arrival against it is ORACLE-PAIRED exactly like E56: global
-  // counts are global counts, whichever tables they were folded from.
-  // =====================================================================
-  /** Fold the stored corpus gram index ∪ a batch's one-scan index rows
-    * into a fresh stored (g, cnt, cdoc, cpos) table — counts SUM per
-    * gram, canonicals take the min (doc, pos) struct: both monoid
-    * folds, so the compacted table is row-identical to the monolithic
-    * index over corpus ∪ batch. Deterministic and idempotent (a pure
-    * aggregate of the inputs); fingerprint = merged plan + base scan
-    * paths, so a changed gram width or a different batch orphans the
-    * compact. */
-  def substrGramsCompacted(corpusGrams: DataFrame, batchIdx: DataFrame,
-                           src: String): DataFrame = {
-    val spark = corpusGrams.sparkSession
-    val merged = corpusGrams.unionByName(batchIdx)
-      .groupBy("g").agg(sum(col("cnt")).as("cnt"),
-        min(struct(col("cdoc").as("d"), col("cpos").as("p"))).as("canon"))
-      .select(col("g"), col("cnt"),
-        col("canon.d").as("cdoc"), col("canon.p").as("cpos"))
-    parquetFixture(spark, "substr-grams-compact", src,
-      s"w${SubstrDedupW}_compact2",
-      merged.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(merged).mkString(","), merged)
-  }
-
-  /** Post-compaction day-2 arrival: corpus (<80) built, day-1 batch
-    * (80-89) folded in by [[substrGramsCompacted]], day-2 (≥90) stats
-    * served against the compacted table — one raw documents scan (the
-    * day-2 filter), no base-table read, no day-1 re-scan (PlanSpec
-    * gates the scan set). */
-  val substrCompact: Q = Q("ext_substr_compact",
-    (spark, sfDir) => {
-      val base = bucketedDocs(spark, sfDir)
-      val corpus = base.filter(col("bucket") < IncrementalCorpusPct)
-        .select("doc_id", "text")
-      val day1 = base.filter(col("bucket") >= IncrementalCorpusPct &&
-          col("bucket") < 90).select("doc_id", "text")
-      val day2 = base.filter(col("bucket") >= 90).select("doc_id", "text")
-      val compacted = substrGramsCompacted(
-        substrGramsFixture(spark, sfDir, corpus),
-        substringGramIndex(day1), s"$sfDir/documents.parquet")
-      substrStatsAgainst(day2, compacted,
-        indexRows = Some(compacted.count()))
-    },
-    Some(substrStatsSql(
-      s"WHERE ${duckHash60("CAST(g.doc_id AS VARCHAR)")} % 100 >= 90")))
 
   // =====================================================================
   // E3: brute-force top-k cosine similarity search (the exact baseline;
@@ -2627,26 +2521,46 @@ object Extensions {
       // collision).
       case Some(s) => parquetFixture(emb.sparkSession, "ivfpq-codes", s,
         s"${capTag}_c${nCells}_ivfpq4",
-        baseJoin.queryExecution.logical.toString +
-          "\nscans:" + scanRootPaths(baseJoin).mkString(","), capped,
+        fixturePlanOf(baseJoin), capped,
         partitionCols = Seq("cell"))
         .select("cell", "corpus_id", "code")
       case None => capped
     }
   }
 
-  /** File-scan root paths of a frame's ANALYZED plan — appended to a
-    * fixture fingerprint when the producing plan reads OTHER stored
-    * fixtures (whose relations render pathless in plan strings). */
-  private def scanRootPaths(df: DataFrame): Seq[String] =
+  /** The fixture fingerprint of a frame that reads OTHER stored
+    * fixtures: its logical plan plus its file-scan roots. A fixture
+    * relation renders pathless in a plan string, so without the roots
+    * a retrained upstream model (a new upstream key) would silently
+    * serve the stale table. */
+  private[graft] def fixturePlanOf(df: DataFrame,
+      fixtureRoot: java.io.File = new java.io.File("target")): String =
+    df.queryExecution.logical.toString + "\nscans:" +
+      scanRootPaths(df, fixtureRoot).mkString(",")
+
+  /** File-scan root paths of a frame's ANALYZED plan, rendered
+    * location-independently: a fixture dir under `fixtureRoot` (the
+    * working directory's `target/`) as its `<family>/<key>` tail — the
+    * key carries the upstream's own data and plan fingerprint — and
+    * any other source as its path. */
+  private def scanRootPaths(df: DataFrame,
+                            fixtureRoot: java.io.File): Seq[String] = {
+    val root = fixtureRoot.getAbsolutePath
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString)
+            h.location.rootPaths.map { p =>
+              val family = p.getParent
+              if (family != null && family.getParent != null &&
+                  family.getParent.toUri.getPath == root)
+                s"${family.getName}/${p.getName}"
+              else p.toString
+            }
           case _ => Seq.empty[String]
         }
     }.flatten.sorted
+  }
 
   /** IVFPQ search: nProbe cell routing (ivfTopK's model-table join)
     * feeding a cell-equi-joined ADC scan (pqTopK's scoring), top-R
@@ -2850,8 +2764,7 @@ object Extensions {
       .select("cell", "label", "corpus_id", "code")
     parquetFixture(spark, "ivfpq-codes-attr", srcPath,
       s"attr1_c$nCells",
-      liveAttr.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(liveAttr).mkString(","),
+      fixturePlanOf(liveAttr),
       liveAttr, partitionCols = Seq("cell"))
   }
 
@@ -2865,8 +2778,7 @@ object Extensions {
     val live = codesAttr.select("label").distinct()
     parquetFixture(codesAttr.sparkSession, "ivfpq-attr-labels", srcPath,
       s"attr1_c$nCells",
-      live.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(live).mkString(","), live)
+      fixturePlanOf(live), live)
   }
 
   def ivfpqFilteredTopK(embL: DataFrame, srcPath: String,
@@ -3138,8 +3050,7 @@ object Extensions {
       src: String, keyExtra: String, nCells: Int,
       totalRows: => Option[Long] = None): DataFrame =
     parquetFixture(merged.sparkSession, family, src, keyExtra,
-      merged.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(merged).mkString(","),
+      fixturePlanOf(merged),
       recapCellCodes(merged, nCells, totalRows),
       partitionCols = Seq("cell"))
       .select("cell", "corpus_id", "code")
@@ -3606,8 +3517,7 @@ object Extensions {
     src match {
       case Some(s) => parquetFixture(emb.sparkSession, "imipq-codes", s,
         s"${capTag}_k${cs0.length}x${cs1.length}_imipq1",
-        baseJoin.queryExecution.logical.toString +
-          "\nscans:" + scanRootPaths(baseJoin).mkString(","), capped,
+        fixturePlanOf(baseJoin), capped,
         partitionCols = Seq("cell"))
         .select("cell", "corpus_id", "code")
       case None => capped
@@ -5394,18 +5304,29 @@ object Extensions {
     * checksum residue keeps the sum far from int64 overflow at any
     * plausible shard size (1e11 docs × 1e5 bound ≈ 1e16 << 2^63). */
   val shardManifest: Q = Q("ext_shard_manifest",
-    // delegates to the ONE manifest aggregation (shardManifestOf) so
-    // the published monolithic receipt and the lifecycle fold cannot
-    // drift — the helper's whole reason to exist
-    (spark, sfDir) => shardManifestOf(Tables.documents(spark, sfDir))
-      .orderBy("shard"),
-    Some(s"""WITH h AS (SELECT ${duckHash60("text")} AS hh, n_chars FROM documents)
-            |SELECT CAST(hh % $ShardCount AS INT) AS shard,
-            |  count(*) AS n_docs,
-            |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-            |  min(hh) AS min_hash, max(hh) AS max_hash,
-            |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
-            |FROM h GROUP BY 1 ORDER BY shard""".stripMargin))
+    // the ONE manifest aggregation ([[manifestAggOf]]) the lifecycle
+    // verbs run too, so the published receipt and the maintained one
+    // cannot drift
+    (spark, sfDir) => {
+      val h = Scalars.hash60(col("text"))
+      manifestAggOf(Tables.documents(spark, sfDir).select(
+          pmod(h, lit(ShardCount.toLong)).cast("int").as("shard"),
+          h.as("hh"), col("n_chars")))
+        .orderBy("shard")
+    },
+    Some(manifestOracleSql("documents")))
+
+  /** The monolithic manifest SQL over a documents relation — the
+    * oracle of the published receipt and of every maintained one,
+    * which must equal the rebuilt-from-scratch receipt. */
+  private def manifestOracleSql(docs: String): String =
+    s"""WITH h AS (SELECT ${duckHash60("text")} AS hh, n_chars FROM $docs)
+       |SELECT CAST(hh % $ShardCount AS INT) AS shard,
+       |  count(*) AS n_docs,
+       |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
+       |  min(hh) AS min_hash, max(hh) AS max_hash,
+       |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
+       |FROM h GROUP BY 1 ORDER BY shard""".stripMargin
 
   /** The physical write of [[shardAssign]]'s contract: ONE pass —
     * project (shard, content hash), repartition on the shard id (each
@@ -5437,21 +5358,14 @@ object Extensions {
   }
 
   // =====================================================================
-  // E66: shard-store lifecycle — the arrival + settling verbs (the
-  // E39/E45 contract) applied to the LAST stored artifact without them:
-  // the written training shards. A daily 100 TB ingest cannot re-run
-  // the full-corpus shard write per batch; it lands each batch as
+  // E66: shard-store arrival — a daily 100 TB ingest cannot re-run the
+  // full-corpus shard write per batch; it lands each batch as
   // per-shard DELTA files (content-hash assignment is stateless, so a
   // batch doc's shard is decided by ONE O(batch) projection — no
   // standing-corpus read at all) and folds base ∪ deltas into fresh
-  // strict-order shards at compaction cadence. The published integrity
-  // receipt (the manifest, E64) is a MONOID: counts/volumes/checksums
-  // add, hash ranges combine by min/max — so maintaining it on arrival
-  // costs O(manifest ⊕ batch), never a store read. The registered fold
-  // query's oracle is the MONOLITHIC full-corpus manifest SQL verbatim
-  // — folded receipts and rebuilt-from-scratch receipts must be
-  // bit-identical, the same "global counts are global counts" gate the
-  // substring-dedup arrivals carry.
+  // strict-order shards at compaction cadence. The receipt's own
+  // lifecycle is the shard binding of the document-index verbs
+  // ([[ShardIndex]]).
   // =====================================================================
   /** Batch-side shard arrival: the ≥[[IncrementalCorpusPct]] split
     * assigned + delta-ranked with ZERO standing-corpus input —
@@ -5478,45 +5392,10 @@ object Extensions {
             |    ORDER BY hh, doc_id) AS INT) AS delta_rank
             |FROM h ORDER BY shard, delta_rank""".stripMargin))
 
-  /** The corpus-split manifest as a STORED fixture (≤ [[ShardCount]]
-    * rows) — the receipt the fold below maintains without reading the
-    * store. */
-  private def shardManifestFixture(spark: SparkSession,
-                                   sfDir: String): DataFrame = {
-    val live = shardManifestOf(
-      incrementalDocSplitChars(spark, sfDir)._1)
-    parquetFixture(spark, "shard-manifest", s"$sfDir/documents.parquet",
-      s"n${ShardCount}_inc$IncrementalCorpusPct",
-      live.queryExecution.logical.toString, live)
-  }
-
-  /** [[incrementalDocSplit]] carrying `n_chars` (the manifest's byte
-    * column) — the SAME bucketedDocs projection (one bucket
-    * expression in the library), one extra pruned column. */
-  private def incrementalDocSplitChars(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame) = {
-    val base = bucketedDocs(spark, sfDir, extraCols = Seq("n_chars"))
-    (base.filter(col("bucket") < IncrementalCorpusPct)
-       .select("doc_id", "text", "n_chars"),
-     base.filter(col("bucket") >= IncrementalCorpusPct)
-       .select("doc_id", "text", "n_chars"))
-  }
-
-  /** One manifest aggregation — shared by the monolithic query
-    * (E64), the stored fixture, and the fold's batch side, so the
-    * receipt's definition cannot drift between producers. */
-  private def shardManifestOf(docs: DataFrame): DataFrame = {
-    val h = Scalars.hash60(col("text"))
-    manifestAggOf(
-      docs.select(pmod(h, lit(ShardCount.toLong)).cast("int").as("shard"),
-        h.as("hh"), col("n_chars")))
-  }
-
-  /** The manifest GROUP over already-derived receipt columns
-    * (shard, hh, n_chars) — split out of [[shardManifestOf]] so the
-    * purge verb (E71) can recompute affected shards from the stored
-    * shard INDEX rows (which carry hh/n_chars but no text) with the
-    * exact same aggregation expressions. */
+  /** The manifest GROUP over receipt columns (shard, hh, n_chars) —
+    * one definition for the monolithic receipt, the stored receipts
+    * and the affected-shard recompute over stored index rows (which
+    * carry hh/n_chars but no text). */
   private[graft] def manifestAggOf(rows: DataFrame): DataFrame =
     rows.groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
@@ -5524,36 +5403,6 @@ object Extensions {
         min(col("hh")).as("min_hash"),
         max(col("hh")).as("max_hash"),
         sum(pmod(col("hh"), lit(100003L))).as("checksum"))
-
-  /** Manifest monoid fold: stored corpus receipt ⊕ batch partial →
-    * the post-compaction receipt. Every column is a monoid (sum /
-    * sum / min / max / sum), so the fold is one union + one
-    * ≤ 2·[[ShardCount]]-row groupBy — O(manifest ⊕ batch) with no
-    * store read (PlanSpec gates the scan set: ONE raw documents scan,
-    * the batch filter). */
-  val shardManifestFold: Q = Q("ext_shard_manifest_fold",
-    (spark, sfDir) => {
-      val stored = shardManifestFixture(spark, sfDir)
-      val batchPart = shardManifestOf(
-        incrementalDocSplitChars(spark, sfDir)._2)
-      stored.unionByName(batchPart)
-        .groupBy("shard")
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("total_chars")).as("total_chars"),
-          min(col("min_hash")).as("min_hash"),
-          max(col("max_hash")).as("max_hash"),
-          sum(col("checksum")).as("checksum"))
-        .orderBy("shard")
-    },
-    // the MONOLITHIC manifest SQL verbatim (E64's oracle): folded
-    // receipts must equal the rebuilt-from-scratch receipt
-    Some(s"""WITH h AS (SELECT ${duckHash60("text")} AS hh, n_chars FROM documents)
-            |SELECT CAST(hh % $ShardCount AS INT) AS shard,
-            |  count(*) AS n_docs,
-            |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-            |  min(hh) AS min_hash, max(hh) AS max_hash,
-            |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
-            |FROM h GROUP BY 1 ORDER BY shard""".stripMargin))
 
   /** Physical delta landing: the batch written as per-shard delta
     * files — the same (shard, content_hash, doc_id) order discipline
@@ -5581,50 +5430,16 @@ object Extensions {
   }
 
   // =====================================================================
-  // E71: PURGE — the takedown verb, the one lifecycle verb no stored
-  // artifact had. Every family here has build → arrive → compact →
-  // retrain; all of them are ADDITIVE. A real corpus also shrinks:
-  // takedown requests, licence revocations, opt-outs — and the contract
-  // that matters at 100 TB is that deletion costs O(purged ⊕ artifact),
-  // never a corpus rebuild. Three artifact classes, three purge shapes:
-  //
-  //  * lexical postings (ext_bm25_purge): postings are per-doc facts,
-  //    so purge is ONE broadcast anti-join on the stored index — and
-  //    because BM25's corpus stats (n_docs, avgdl, df) derive from the
-  //    postings table itself, the purged index reproduces the
-  //    filtered-corpus search EXACTLY. That makes the purge verb
-  //    ORACLE-PAIRED (full BM25 SQL over `documents WHERE NOT purged`)
-  //    — the strongest gate any maintenance op here carries.
-  //  * vector codes (ext_ivfpq_purge): code rows are per-vector pure
-  //    functions of the frozen models, so purge is the same anti-join
-  //    on the stored cell-partitioned codes; results can never contain
-  //    a purged id (the candidate set is the code table). The one open
-  //    semantic: the hot-cell cap was resolved over the pre-purge
-  //    count, so a bound cap can leave a purged cell slightly UNDER
-  //    the rows a from-scratch build would keep — exactly the debt the
-  //    compaction verb (E45) settles on its next cadence; at driver
-  //    SFs the cap has asserted headroom and equality is exact.
-  //  * the shard store + its receipt (ext_shard_purge): the manifest
-  //    is only HALF a group — counts, volumes and checksums have
-  //    inverses (subtract), but min/max hash ranges do NOT, so a purge
-  //    receipt cannot be maintained by pure fold the way the arrival
-  //    receipt (E66) is. The honest cost: recompute ONLY the affected
-  //    shards (takedown content hashes name their shards — a
-  //    purge-sized driver collect turns them into a partition-pruned
-  //    literal on the stored shard index), pass every untouched
-  //    shard's row through from the stored receipt. Deletion's receipt
-  //    is O(affected shards), vs arrival's O(batch) — the asymmetry IS
-  //    the design note.
-  //
-  // The purge SET at driver SFs is the deterministic content bucket
-  // ≥ [[PurgeBucketFrom]] (~3% of docs/vectors) — in deployment it
-  // arrives as the takedown request list; both engines state the same
-  // predicate, so every purge query with SQL-expressible semantics is
-  // hash-matched end to end.
-  //
-  // The shard, substr and cluster-label purges below have no fold of
-  // their own: each runs its artifact's refresh fold (E76) with nothing
-  // arriving — a takedown is a snapshot diff whose fresh side is empty.
+  // E71: PURGE — the takedown verb: deletion costs O(purged ⊕
+  // artifact), never a corpus rebuild. The document-side artifacts run
+  // their refresh fold with nothing arriving — a takedown is a snapshot
+  // diff whose fresh side is empty ([[purgeDocs]],
+  // [[purgeClusterLabels]]); the code indexes anti-join the takedown
+  // ids ([[purgeIndex]]). The purge SET at driver SFs is the
+  // deterministic content bucket ≥ [[PurgeBucketFrom]] (~3% of
+  // docs/vectors) — in deployment it arrives as the takedown request
+  // list; both engines state the same predicate, so every purge query
+  // with SQL-expressible semantics is hash-matched end to end.
   // =====================================================================
   final val PurgeBucketFrom = 97
 
@@ -5643,60 +5458,6 @@ object Extensions {
       .filter(pmod(Scalars.hash60(col("vec_id").cast("string")),
         lit(100L)) >= PurgeBucketFrom)
       .select("vec_id")
-
-  /** (shard, doc_id, hh, n_chars): the queryable receipt-column twin
-    * of the written shard store — what a deployment's shard files
-    * already carry (writeShards stores content_hash per row), stored
-    * hive-partitioned by shard so a purge touching k shards reads k
-    * directories, never the corpus. */
-  private def shardIndexFixture(spark: SparkSession,
-                                sfDir: String): DataFrame = {
-    val h = Scalars.hash60(col("text"))
-    val live = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), h.as("hh"), col("n_chars"),
-        pmod(h, lit(ShardCount.toLong)).cast("int").as("shard"))
-    parquetFixture(spark, "shard-index", s"$sfDir/documents.parquet",
-      s"n$ShardCount", live.queryExecution.logical.toString, live,
-      partitionCols = Seq("shard"))
-  }
-
-  /** The FULL-corpus manifest as a stored ≤ [[ShardCount]]-row fixture
-    * — the receipt the purge passes untouched shards through from. */
-  private def shardManifestFullFixture(spark: SparkSession,
-                                       sfDir: String): DataFrame = {
-    val live = shardManifestOf(Tables.documents(spark, sfDir))
-    parquetFixture(spark, "shard-manifest-all",
-      s"$sfDir/documents.parquet", s"n$ShardCount",
-      live.queryExecution.logical.toString, live)
-  }
-
-  val shardPurge: Q = Q("ext_shard_purge",
-    (spark, sfDir) => {
-      // CACHED (tracked): the purge frame feeds the affected-shard
-      // collect AND the anti-join — without the cache the purge-list
-      // derivation (the query's one raw documents scan) runs twice
-      val h = Scalars.hash60(col("text"))
-      val purge = cacheTracked(
-        bucketedDocs(spark, sfDir, extraCols = Seq("n_chars"))
-          .filter(col("bucket") >= PurgeBucketFrom)
-          .select(col("doc_id"), h.as("hh"), col("n_chars"),
-            pmod(h, lit(ShardCount.toLong)).cast("int").as("shard")))
-      // nothing arrives: the refresh fold with an empty arrival side
-      shardManifestFold(shardManifestFullFixture(spark, sfDir),
-        shardIndexFixture(spark, sfDir), broadcast(purge.select("doc_id")),
-        purge, purge.limit(0))
-    },
-    // the monolithic manifest SQL over the filtered corpus: purged
-    // receipts must equal rebuilt-from-scratch receipts — the same
-    // "global counts are global counts" gate the fold (E66) carries
-    Some(s"""WITH h AS (SELECT ${duckHash60("text")} AS hh, n_chars FROM documents
-            |  WHERE NOT (${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom))
-            |SELECT CAST(hh % $ShardCount AS INT) AS shard,
-            |  count(*) AS n_docs,
-            |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-            |  min(hh) AS min_hash, max(hh) AS max_hash,
-            |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
-            |FROM h GROUP BY 1 ORDER BY shard""".stripMargin))
 
   /** Physical store purge: rewrite ONLY the affected shard
     * directories without the purged rows; untouched shard files are
@@ -5748,72 +5509,6 @@ object Extensions {
     org.apache.commons.io.FileUtils.deleteDirectory(trash.toFile)
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
-
-  // =====================================================================
-  // E71b: substring-index purge — the fourth artifact class, and the
-  // one where deletion SPLITS the stored columns: gram COUNTS have an
-  // inverse (subtract the purge batch's own O(purge) gram counts —
-  // surviving counts are exact, so every stats consumer is served
-  // exactly), but the CANONICAL (min doc_id) does not — a gram whose
-  // canonical doc was taken down cannot learn its new canonical from
-  // the index alone (the index stores one witness, not all
-  // occurrences). The honest semantics, shared with the streamed
-  // legacy-partition discipline in IndexMaintenanceStream: the purge
-  // TOMBSTONES those canonicals (`tombstoned` column). A tombstoned
-  // index serves stats exactly but must not drive the keep-one
-  // rewrite (E55/E60) until the next compaction rebuilds canonicals
-  // from the surviving corpus — serving a purged doc as canonical
-  // would KEEP spans the rewrite should remove, the exact failure the
-  // legacy-schema nulls document. Non-tombstoned canonicals stay
-  // valid by construction: the canonical is the global min doc_id,
-  // and a surviving min of a superset is the min of the subset.
-  // Oracle-paired: counts and tombstone flags are both pure functions
-  // of (full corpus, purge predicate) DuckDB can state.
-  // =====================================================================
-  /** The FULL-corpus gram index as a stored fixture — the purge
-    * target (the incremental fixtures cover the 80% split). */
-  private def substrGramsFullFixture(spark: SparkSession,
-                                     sfDir: String): DataFrame = {
-    val live = substringGramIndex(
-      Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-    parquetFixture(spark, "substr-grams", s"$sfDir/documents.parquet",
-      s"w${SubstrDedupW}_full_cn1",
-      live.queryExecution.logical.toString, live)
-  }
-
-  val substrPurge: Q = Q("ext_substr_purge",
-    (spark, sfDir) => {
-      val stored = substrGramsFullFixture(spark, sfDir)
-      // the takedown rows: ONE raw scan (in deployment, the request
-      // list itself)
-      val purged = bucketedDocs(spark, sfDir)
-        .filter(col("bucket") >= PurgeBucketFrom)
-        .select(col("doc_id"), col("text"))
-      // nothing arrives: the purge half of the refresh fold, served
-      substrPurgeHalf(stored, purged,
-        d => pmod(Scalars.hash60(d.cast("string")), lit(100L)) >=
-          PurgeBucketFrom)
-        .select("g", "cnt", "tombstoned").orderBy("g")
-    },
-    Some(s"""WITH d AS (
-            |  SELECT doc_id, regexp_split_to_array(
-            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
-            |    '\\s+') AS toks
-            |  FROM documents),
-            |gr AS (
-            |  SELECT doc_id,
-            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
-            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)] AS grams
-            |  FROM d),
-            |p AS (SELECT doc_id, unnest(grams) AS gh FROM gr),
-            |a AS (SELECT gh, count(*) AS cnt_all,
-            |    sum(CASE WHEN ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom
-            |        THEN 1 ELSE 0 END) AS pcnt,
-            |    min(doc_id) AS cdoc
-            |  FROM p GROUP BY gh)
-            |SELECT gh AS g, CAST(cnt_all - pcnt AS BIGINT) AS cnt,
-            |  (${duckHash60("CAST(cdoc AS VARCHAR)")} % 100 >= $PurgeBucketFrom) AS tombstoned
-            |FROM a WHERE cnt_all - pcnt >= 1 ORDER BY g""".stripMargin))
 
   // =====================================================================
   // E71c: dedup-cluster purge — deletion on the GRAPH artifact, where
@@ -6281,44 +5976,13 @@ object Extensions {
 
   // =====================================================================
   // E76: CRAWL REFRESH — the composition the snapshot diff (E72)
-  // exists to feed, closing the lifecycle loop END TO END: the diff's
-  // statuses DRIVE the maintenance verbs against the stored index in
-  // one verb. `removed ∪ changed` anti-joins out of the stored
-  // snapshot-A postings (the purge half, E71's shape); `added ∪
-  // changed` contributes one O(delta) tokenize pass over snapshot B
-  // (the arrival half, E35's shape); the refreshed index then serves
-  // BM25 and must reproduce the FROM-SCRATCH snapshot-B ranking
-  // exactly — the oracle is the full BM25 SQL over the snapshot-B
-  // derivation verbatim, the same corpus-as-it-now-is gate the purge
-  // verb carries. Postings are per-doc facts, so refresh = purge +
-  // arrive composes with no residual debt (nothing like the ivfpq
-  // cell cap); RefreshSpec additionally asserts the refreshed TABLE is
-  // row-identical to postingsOf(snapshot B) — index identity, stronger
-  // than search-output identity.
-  //
-  // Scale shape: the stored index is never re-tokenized (one fixture
-  // read); the diff costs two hash projections (inherent to content
-  // diffing — a deployment storing content hashes in crawl metadata
-  // skips even that); the delta id-joins are ADAPTIVE — the diff is
-  // cached anyway, so one cache-resident count sizes the delta, and a
-  // batch-sized delta (≤ RefreshBroadcastMaxIds) broadcasts while an
-  // oversized one (a near-full re-crawl, where a forced broadcast
-  // would OOM) falls back to the shuffled doc_id join. The hint is
-  // measured, not stylistic: REFRESHPROBE shows the unhinted SMJ pays
-  // the stored index's shuffle map-write before AQE can convert
-  // (3.2× on the purge half at 8M docs, page cache warmed before
-  // both variants so the gap is strategy cost, not cold I/O).
+  // exists to feed: the diff's statuses drive the maintenance verbs
+  // against the stored snapshot-A artifacts in one verb
+  // ([[refreshDocs]], [[refreshIndex]], [[refreshClusterLabels]]). The
+  // stored artifact is never rebuilt; the diff costs two hash
+  // projections (inherent to content diffing; the A side reads stored
+  // hash metadata), and the delta id-joins are adaptive (below).
   // =====================================================================
-  /** The stored inverted index over snapshot A — the previous crawl's
-    * postings table, the artifact the refresh maintains. */
-  private def snapshotAPostingsFixture(spark: SparkSession,
-                                       sfDir: String): DataFrame = {
-    val p0 = postingsOf(snapshotDocsA(spark, sfDir))
-    parquetFixture(spark, "bm25-postings-snapa",
-      s"$sfDir/documents.parquet", s"tok1_snapa$SnapABelow",
-      p0.queryExecution.logical.toString, p0)
-  }
-
   /** The snapshot-B documents relation as a DuckDB FROM-source — the
     * SQL twin of [[snapshotDocsB]], fed to [[bm25OracleSql]] so the
     * refresh's gate is "BM25 over today's crawl" stated verbatim. */
@@ -6331,10 +5995,6 @@ object Extensions {
        |       FROM documents) db
        | WHERE bucket >= $SnapBFrom) snapb""".stripMargin
 
-  // lazy: the oracle is built from bm25OracleSql/Bm25Queries, which
-  // are DECLARED LATER in this object — an eager val here would read
-  // an uninitialized Bm25Queries at object-init time. Forced via
-  // [[all]] after the object is fully constructed.
   /** Delta-id broadcast ceiling for the refresh: ≤4M ids ≈ 32 MB on
     * the wire — comfortably executor-resident. REFRESHPROBE measured
     * the cost of NOT hinting a batch-sized delta: the sort-merge
@@ -6400,8 +6060,8 @@ object Extensions {
     diff
   }
 
-  /** The document diff (postings E76, substr E76b, shards E76e,
-    * clusters E76f, the E81 receipt). The A side reads the stored hash
+  /** The document diff (the document-index refresh, clusters E76f,
+    * the E81 receipt). The A side reads the stored hash
     * metadata (round 14): the refill a bench rep / fresh session pays
     * drops yesterday's text scan+hash. */
   private[graft] def cachedSnapshotStatuses(spark: SparkSession,
@@ -6409,68 +6069,6 @@ object Extensions {
     cachedDiff(spark, sfDir, "documents", "snapstat", "doc_id")(
       snapshotStatusesFromHashes(snapAHashesFixture(spark, sfDir),
         snapshotDocsB(spark, sfDir)))
-
-  /** The refreshed snapshot index: stored snapshot-A postings with the
-    * diff's stale docs purged and the fresh delta's postings arrived —
-    * factored so RefreshSpec can assert it row-identical to a
-    * from-scratch postingsOf(snapshot B) build (index identity, a
-    * stronger gate than the registered query's search-output oracle). */
-  private[graft] def refreshedSnapshotPostings(spark: SparkSession,
-                                               sfDir: String): DataFrame = {
-    val b = snapshotDocsB(spark, sfDir)
-    val diff = cachedSnapshotStatuses(spark, sfDir)
-    // purge half: drop every stale doc's postings from the stored
-    // index; arrival half: ONE tokenize pass restricted to the
-    // fresh delta (the explode runs post-join, delta rows only)
-    snapshotAPostingsFixture(spark, sfDir)
-      .join(diff.stale, Seq("doc_id"), "left_anti")
-      .unionByName(postingsOf(b.join(diff.fresh, Seq("doc_id"))))
-  }
-
-  lazy val crawlRefresh: Q = Q("ext_crawl_refresh",
-    (spark, sfDir) =>
-      bm25From(snapshotDocsB(spark, sfDir),
-        postings0 = Some(refreshedSnapshotPostings(spark, sfDir)))
-        .orderBy("query_id", "rank"),
-    Some(bm25OracleSql(duckSnapshotBRel)))
-
-  // =====================================================================
-  // E76b: crawl refresh for the SUBSTR GRAM INDEX — the second
-  // heavyweight family the diff drives, where refresh SPLITS the
-  // stored columns (the E71b purge taxonomy under composition,
-  // probe-validated at 2M/8M docs before registration — commit
-  // b3a5aa4): gram COUNTS are a monoid, so subtracting the stale
-  // docs' own gram pass and full-outer-adding the fresh one
-  // reproduces a snapshot-B rebuild's counts EXACTLY; the CANONICAL
-  // (min (doc_id, pos) witness) is not invertible — a gram whose
-  // stored witness was stale but whose other stored occurrences
-  // survive TOMBSTONES (the index stores one witness, not all
-  // occurrences; the next compaction re-derives it), while a gram
-  // whose stored occurrences ALL died takes the fresh min with NO
-  // tombstone (the fresh witness IS the true canonical — the first
-  // probe draft over-flagged 640k grams before that rule landed).
-  // Oracle-paired: counts, tombstone flags, and the merged canonical
-  // doc are all pure functions of (corpus, snapshot predicates) DuckDB
-  // can state — E56's "global counts are global counts" argument
-  // verbatim.
-  //
-  // Scale shape: the stored index is never re-tokenized (one fixture
-  // read); both delta gram passes are O(delta); the fold is
-  // index-shuffle-bound on 60-bit longs (gram rows ≈ token count).
-  // The one-shuffle union+groupBy alternative (the E57 compaction
-  // shape) was measured and REJECTED: min(struct) is not
-  // hash-aggregatable, so it sort-aggregates the whole stored+delta
-  // frame — 37.7 s vs this join fold's 10.3 s at the 2M-doc probe.
-  // =====================================================================
-  /** The stored full gram index over snapshot A — the previous
-    * crawl's (g, cnt, cdoc, cpos) artifact the refresh maintains. */
-  private def snapshotAGramsFixture(spark: SparkSession,
-                                    sfDir: String): DataFrame = {
-    val live = substringGramIndex(snapshotDocsA(spark, sfDir))
-    parquetFixture(spark, "substr-grams", s"$sfDir/documents.parquet",
-      s"w${SubstrDedupW}_snapa${SnapABelow}_cn1",
-      live.queryExecution.logical.toString, live)
-  }
 
   /** Stale-ness of a doc_id that appears in SNAPSHOT A (every stored
     * canonical does): removed (bucket < [[SnapBFrom]]) or revised
@@ -6481,34 +6079,36 @@ object Extensions {
     b < SnapBFrom || pmod(b, lit(SnapRevMod.toLong)) === 0
   }
 
-  /** The purge half of the gram-index fold over any stored (g, cnt,
-    * cdoc, cpos) index — the takedown verb (E71b) on its own, and the
-    * first step of [[substrRefreshFold]]: subtract the stale docs' own
-    * gram counts (the O(delta) gram pass) and tombstone the canonicals
-    * whose witness `isStale`. Output (g, cnt, tombstoned, cdoc, cpos).
-    * No forced broadcast: AQE broadcasts a routine delta at runtime,
-    * and a near-full re-crawl delta, which a broadcast would OOM,
-    * stays a shuffled join. */
-  private[graft] def substrPurgeHalf(stored: DataFrame,
-      staleDocs: DataFrame, isStale: Column => Column): DataFrame = {
+  /** The gram-index refresh fold over any stored (g, cnt, cdoc, cpos)
+    * index — [[GramIndex]]'s purge step: the stale docs' own gram
+    * counts subtract (an O(delta) gram pass) and the fresh docs' grams
+    * full-outer-add; canonicals min-fold. The canonical does not
+    * invert (the index stores one witness, not every occurrence), so a
+    * gram whose stored witness `isStale` but whose count survives is
+    * TOMBSTONED: it serves stats exactly but must not drive the
+    * keep-one rewrite (E55/E60) until compaction re-derives it — a
+    * dead witness would KEEP spans the rewrite should remove. A gram
+    * whose stored occurrences all died takes the fresh witness with no
+    * tombstone (it IS the true canonical; a probe draft without that
+    * rule over-flagged 640k grams), and a surviving witness stays valid
+    * (the min of a superset that kept its min). Both joins keep AQE's
+    * choice: a forced broadcast would OOM on a near-full re-crawl
+    * delta. The one-shuffle union+groupBy alternative was measured and
+    * rejected: min(struct) is not hash-aggregatable, so it
+    * sort-aggregates the whole stored+delta frame (37.7 s vs this
+    * fold's 10.3 s at the 2M-doc probe). Output (g, cnt, tombstoned,
+    * cdoc, cpos); package-private so the specs can drive planted
+    * tombstone / all-died / fresh-only cases at any scale. */
+  private[graft] def substrRefreshFold(stored: DataFrame,
+      staleDocs: DataFrame, freshDocs: DataFrame,
+      isStale: Column => Column): DataFrame = {
     val staleG = substringGramIndex(staleDocs)
       .select(col("g"), col("cnt").as("pcnt"))
-    stored.join(staleG, Seq("g"), "left")
+    val afterPurge = stored.join(staleG, Seq("g"), "left")
       .select(col("g"),
         (col("cnt") - coalesce(col("pcnt"), lit(0L))).as("cnt"),
         isStale(col("cdoc")).as("tombstoned"), col("cdoc"), col("cpos"))
       .filter(col("cnt") >= 1)
-  }
-
-  /** The refresh fold over any stored (g, cnt, cdoc, cpos) index —
-    * [[substrPurgeHalf]] full-outer-joined with the fresh docs' gram
-    * pass (counts add, canonicals min-fold). Exposed package-private
-    * so RefreshSpec can drive planted tombstone / all-died /
-    * fresh-only gram cases at any scale. */
-  private[graft] def substrRefreshFold(stored: DataFrame,
-      staleDocs: DataFrame, freshDocs: DataFrame,
-      isStale: Column => Column): DataFrame = {
-    val afterPurge = substrPurgeHalf(stored, staleDocs, isStale)
     val freshG = substringGramIndex(freshDocs)
       .select(col("g"), col("cnt").as("fcnt"),
         col("cdoc").as("fdoc"), col("cpos").as("fpos"))
@@ -6532,83 +6132,6 @@ object Extensions {
       .select(col("g"), col("cnt"), col("tombstoned"),
         col("mc.d").as("cdoc"), col("mc.p").as("cpos"))
   }
-
-  /** The refreshed snapshot gram index — factored so RefreshSpec can
-    * assert the probe's three exactness properties against a
-    * from-scratch snapshot-B build (counts identical; non-tombstoned
-    * canonicals identical; tombstones only where the stored witness
-    * was stale). */
-  private[graft] def refreshedSnapshotGrams(spark: SparkSession,
-                                            sfDir: String): DataFrame = {
-    val diff = cachedSnapshotStatuses(spark, sfDir)
-    substrRefreshFold(snapshotAGramsFixture(spark, sfDir),
-      snapshotDocsA(spark, sfDir).join(diff.stale, Seq("doc_id")),
-      snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id")),
-      snapshotStaleCol)
-  }
-
-  // lazy for the same object-init reason as crawlRefresh (shared
-  // snapshot constants); cpos is spec-gated rather than oracled (the
-  // struct-min's pos needs a two-level SQL agg the cdoc hash already
-  // pins transitively — RefreshSpec asserts the full 5-column index)
-  lazy val substrRefresh: Q = Q("ext_substr_refresh",
-    (spark, sfDir) => refreshedSnapshotGrams(spark, sfDir)
-      .select("g", "cnt", "tombstoned", "cdoc").orderBy("g"),
-    Some(s"""WITH d AS (SELECT doc_id, text,
-            |    ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
-            |  FROM documents),
-            |a AS (SELECT doc_id, text,
-            |    (bucket < $SnapBFrom OR bucket % $SnapRevMod = 0) AS stale
-            |  FROM d WHERE bucket < $SnapABelow),
-            |f AS (SELECT doc_id,
-            |    CASE WHEN bucket % $SnapRevMod = 0 THEN text || ' rev2'
-            |         ELSE text END AS text
-            |  FROM d WHERE bucket >= $SnapBFrom
-            |    AND (bucket >= $SnapABelow OR bucket % $SnapRevMod = 0)),
-            |ta AS (SELECT doc_id, stale, regexp_split_to_array(
-            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
-            |    '\\s+') AS toks FROM a),
-            |pa AS (SELECT doc_id, stale, unnest(
-            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
-            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)]) AS g
-            |  FROM ta),
-            |sa AS (SELECT g, count(*) AS cnt_a,
-            |    sum(CASE WHEN stale THEN 1 ELSE 0 END) AS pcnt,
-            |    min(doc_id) AS cdoc_a
-            |  FROM pa GROUP BY g),
-            |sa2 AS (SELECT *,
-            |    ${duckHash60("CAST(cdoc_a AS VARCHAR)")} % 100 AS cb
-            |  FROM sa),
-            |tf AS (SELECT doc_id, regexp_split_to_array(
-            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
-            |    '\\s+') AS toks FROM f),
-            |pf AS (SELECT doc_id, unnest(
-            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
-            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)]) AS g
-            |  FROM tf),
-            |sf AS (SELECT g, count(*) AS fcnt, min(doc_id) AS fdoc
-            |  FROM pf GROUP BY g),
-            |j AS (SELECT coalesce(sa2.g, sf.g) AS g, cnt_a, pcnt, cdoc_a,
-            |    cb, fcnt, fdoc
-            |  FROM sa2 FULL OUTER JOIN sf ON sa2.g = sf.g),
-            |r AS (SELECT g,
-            |    CAST(coalesce(CASE WHEN cnt_a - pcnt >= 1
-            |        THEN cnt_a - pcnt END, 0) + coalesce(fcnt, 0) AS BIGINT)
-            |      AS cnt,
-            |    coalesce(cnt_a - pcnt >= 1 AND
-            |      (cb < $SnapBFrom OR cb % $SnapRevMod = 0), false)
-            |      AS tombstoned,
-            |    CASE WHEN cnt_a - pcnt >= 1 AND
-            |        NOT (cb < $SnapBFrom OR cb % $SnapRevMod = 0)
-            |      THEN cdoc_a END AS sdoc,
-            |    fdoc
-            |  FROM j)
-            |SELECT g, cnt, tombstoned,
-            |  CASE WHEN tombstoned THEN NULL
-            |       WHEN sdoc IS NULL THEN fdoc
-            |       WHEN fdoc IS NULL THEN sdoc
-            |       ELSE least(sdoc, fdoc) END AS cdoc
-            |FROM r WHERE cnt >= 1 ORDER BY g""".stripMargin))
 
   // =====================================================================
   // E76c: crawl refresh for the VECTOR (IVFPQ) INDEX — the third
@@ -6932,27 +6455,416 @@ object Extensions {
   val lshRefresh: Q = Q("ext_lsh_refresh", refreshIndex(LshIndex), None)
 
   // =====================================================================
-  // E76e (round 14): SHARD-STORE REFRESH — the diff-driven verb the
-  // shard store lacked: it had arrive (E66), compact, and purge (E71)
-  // as separate manual steps where the index families run one. The
-  // refreshed RECEIPT is the registered, ORACLE-PAIRED contract (the
-  // manifest monoid is the store's integrity artifact — E66's gate):
-  // stale docs leave, fresh docs arrive, and the refreshed manifest
-  // must equal the monolithic snapshot-B manifest SQL verbatim.
-  // Shape: min/max hash ranges have no inverse (E71's shard lesson),
-  // so affected shards — named by the stale docs' stored index rows
-  // and the arrivals' own content hashes — are recomputed from the
-  // partition-pruned snapshot-A shard index minus the stale ids plus
-  // the O(delta) arrival rows; untouched shards pass through from the
-  // stored snapshot-A receipt. Physical store movement composes the
-  // existing verbs ([[purgeShardStore]] + [[writeShardDelta]] +
-  // [[compactShards]]); the receipt is what a pipeline publishes.
+  // The document-index lifecycle, written ONCE. Three stored document
+  // artifacts are maintained by the same four verbs over a
+  // [[DocIndex]] binding — the BM25 postings ([[PostingsIndex]]), the
+  // substring gram index ([[GramIndex]]) and the shard receipt
+  // ([[ShardIndex]]):
+  //  * incremental: the stored standing-corpus split served with the
+  //    batch pending on top — one O(batch) scan, the corpus never
+  //    re-tokenized.
+  //  * compact: the batch's arrival rows folded into ONE fresh stored
+  //    table from index rows plus the O(batch) scan, never the raw
+  //    corpus; substr then serves a day-2 batch against it.
+  //  * purge: the refresh fold with nothing arriving — a takedown is a
+  //    snapshot diff whose fresh side is empty.
+  //  * refresh: the snapshot diff's stale docs leave the stored
+  //    snapshot-A table and its fresh docs arrive through ONE O(delta)
+  //    arrival pass.
+  // Each fold is a monoid where it can be and names the part that is
+  // not. Postings are per-doc rows, so purge is an anti-join and
+  // arrival a union; BM25's corpus stats derive from the postings, so
+  // every postings verb is oracle-paired on the BM25 SQL over the
+  // corpus as it now is. Gram counts sum and canonicals min-fold, but a
+  // canonical does not invert: a dead witness tombstones
+  // ([[substrRefreshFold]]). Receipt counts, volumes and checksums add
+  // and subtract, but min/max hash ranges do not: the shards a stale
+  // doc leaves or a fresh doc enters are recomputed from the
+  // partition-pruned stored index ([[shardManifestFold]]). A verb takes
+  // its serve from the registration, so substr serves batch stats on
+  // arrival and index rows on purge and refresh with no family branch.
+  // Every gram and receipt verb is oracle-paired: counts, tombstones
+  // and receipts are pure functions of (corpus, split predicates)
+  // DuckDB can state — global counts are global counts, whichever
+  // tables they were folded from.
   // =====================================================================
+  /** A document split a family stores a table for; `docs` gives its
+    * (doc_id, text) frame. */
+  private[graft] sealed abstract class DocSplit(
+      val docs: (SparkSession, String) => DataFrame)
+
+  private[graft] object DocSplit {
+    /** The incremental verbs' standing corpus. */
+    case object Corpus extends DocSplit(incrementalDocSplit(_, _)._1)
+    /** The whole corpus — the purge target. */
+    case object Full extends DocSplit(Tables.documents(_, _))
+    /** Yesterday's crawl — the refresh target. */
+    case object SnapA extends DocSplit(snapshotDocsA(_, _))
+  }
+
+  /** One purge or refresh step: the `staleIds` (doc_id, broadcast-hinted
+    * where the delta is small) and their stored-side `staleDocs` leave,
+    * the `fresh` docs arrive (none for a takedown); `isStale` flags a
+    * stored witness doc_id that left, as a column predicate so no join
+    * against the delta is needed. */
+  private[graft] final case class DocDelta(staleIds: DataFrame,
+      staleDocs: DataFrame, isStale: Column => Column, fresh: DataFrame)
+
+  /** One document-index family's lifecycle binding; `S` is its stored
+    * state. */
+  private[graft] abstract class DocIndex[S] {
+    /** The stored (fixture-persisted) table of a document split. */
+    def stored(spark: SparkSession, sfDir: String, split: DocSplit): S
+    /** The one-scan arrival rows of a (doc_id, text) frame. */
+    def arrive(docs: DataFrame): DataFrame
+    /** The compaction fold of stored ∪ arrival rows into one fresh
+      * stored state. */
+    def fold(stored: S, arrivals: DataFrame, src: String): S
+    /** The purge step: the delta's stale docs leave, its fresh docs
+      * arrive. */
+    def refresh(stored: S, d: DocDelta): S
+  }
+
+  /** A split's stored table: `live` persisted under (family, tag). */
+  private def docFixture(spark: SparkSession, sfDir: String, family: String,
+      tag: String, live: DataFrame,
+      partitionCols: Seq[String] = Nil): DataFrame =
+    parquetFixture(spark, family, s"$sfDir/documents.parquet", tag,
+      live.queryExecution.logical.toString, live, partitionCols)
+
+  /** The BM25 postings (doc_id, term, tf, dl) — the stored index every
+    * lexical retrieval query reads instead of re-tokenizing the corpus
+    * (ext_bm25_search, ext_tfidf_terms, the hybrid sparse towers). */
+  private[graft] object PostingsIndex extends DocIndex[DataFrame] {
+    def stored(spark: SparkSession, sfDir: String,
+               split: DocSplit): DataFrame = {
+      val (family, tag) = split match {
+        case DocSplit.Corpus =>
+          ("bm25-postings", s"tok1_inc$IncrementalCorpusPct")
+        case DocSplit.Full => ("bm25-postings", "tok1")
+        case DocSplit.SnapA => ("bm25-postings-snapa", s"tok1_snapa$SnapABelow")
+      }
+      docFixture(spark, sfDir, family, tag, postingsOf(split.docs(spark, sfDir)))
+    }
+    def arrive(docs: DataFrame): DataFrame = postingsOf(docs)
+    /** No cap to re-resolve: the compacted table IS the postings of
+      * corpus ∪ batch, row-exact. */
+    def fold(stored: DataFrame, arrivals: DataFrame,
+             src: String): DataFrame = {
+      val merged = stored.unionByName(arrivals)
+      parquetFixture(stored.sparkSession, "bm25-postings-compact", src,
+        "tok1_compact1", fixturePlanOf(merged), merged)
+    }
+    def refresh(stored: DataFrame, d: DocDelta): DataFrame =
+      stored.join(d.staleIds, Seq("doc_id"), "left_anti")
+        .unionByName(arrive(d.fresh))
+    /** BM25 over the index with the pending docs' postings appended at
+      * read time (an empty `pending` plans no union). */
+    def serve(index: DataFrame, pending: DataFrame): DataFrame =
+      bm25From(pending, postings0 = Some(index.unionByName(arrive(pending))))
+        .orderBy("query_id", "rank")
+  }
+
+  /** Gram counts sum, canonicals min-fold: both monoids. One definition
+    * for the compaction and the streamed index's merged read; a null
+    * canonical (a streamed partial written before canonicals were
+    * stored) never wins the min. */
+  private[graft] def foldGrams(rows: DataFrame): DataFrame =
+    rows.groupBy("g")
+      .agg(sum(col("cnt")).as("cnt"),
+        min(when(col("cdoc").isNotNull,
+          struct(col("cdoc").as("d"), col("cpos").as("p")))).as("canon"))
+      .select(col("g"), col("cnt"),
+        col("canon.d").as("cdoc"), col("canon.p").as("cpos"))
+
+  /** The substring gram index (g, cnt, cdoc, cpos),
+    * [[substringGramIndex]]. */
+  private[graft] object GramIndex extends DocIndex[DataFrame] {
+    def stored(spark: SparkSession, sfDir: String,
+               split: DocSplit): DataFrame = {
+      val tag = split match {
+        case DocSplit.Corpus => s"inc$IncrementalCorpusPct"
+        case DocSplit.Full => "full"
+        case DocSplit.SnapA => s"snapa$SnapABelow"
+      }
+      docFixture(spark, sfDir, "substr-grams", s"w${SubstrDedupW}_${tag}_cn1",
+        substringGramIndex(split.docs(spark, sfDir)))
+    }
+    def arrive(docs: DataFrame): DataFrame = substringGramIndex(docs)
+    /** The compacted table is row-identical to the monolithic index
+      * over corpus ∪ batch. */
+    def fold(stored: DataFrame, arrivals: DataFrame,
+             src: String): DataFrame = {
+      val merged = foldGrams(stored.unionByName(arrivals))
+      parquetFixture(stored.sparkSession, "substr-grams-compact", src,
+        s"w${SubstrDedupW}_compact2", fixturePlanOf(merged), merged)
+    }
+    def refresh(stored: DataFrame, d: DocDelta): DataFrame =
+      substrRefreshFold(stored, d.staleDocs, d.fresh, d.isStale)
+  }
+
+  /** The shard family's stored state: the ≤ [[ShardCount]]-row receipt,
+    * and the per-doc receipt rows it aggregates — stored
+    * hive-partitioned by shard so a verb touching k shards reads k
+    * directories, and built only when a verb reads them. */
+  private[graft] final class ShardStore(val manifest: DataFrame,
+                                        index0: => DataFrame) {
+    lazy val index: DataFrame = index0
+  }
+
+  /** The shard receipt (E64's manifest) of the written training shards. */
+  private[graft] object ShardIndex extends DocIndex[ShardStore] {
+    def stored(spark: SparkSession, sfDir: String,
+               split: DocSplit): ShardStore = {
+      val (manifest, index, tag) = split match {
+        case DocSplit.Corpus => ("shard-manifest", "shard-index",
+          s"n${ShardCount}_inc$IncrementalCorpusPct")
+        case DocSplit.Full => ("shard-manifest-all", "shard-index", s"n$ShardCount")
+        case DocSplit.SnapA => ("shard-manifest-a", "shard-index-a",
+          s"n${ShardCount}_snapA$SnapABelow")
+      }
+      val rows = arrive(split.docs(spark, sfDir))
+      new ShardStore(docFixture(spark, sfDir, manifest, tag,
+          manifestAggOf(rows.select("shard", "hh", "n_chars"))),
+        docFixture(spark, sfDir, index, tag, rows, partitionCols = Seq("shard")))
+    }
+    def arrive(docs: DataFrame): DataFrame = shardReceiptRows(docs)
+    /** Every receipt column is a monoid (sum / sum / min / max / sum):
+      * one union + one ≤ 2·[[ShardCount]]-row groupBy, no store read. */
+    def fold(stored: ShardStore, arrivals: DataFrame,
+             src: String): ShardStore =
+      new ShardStore(
+        stored.manifest
+          .unionByName(manifestAggOf(arrivals.select("shard", "hh", "n_chars")))
+          .groupBy("shard")
+          .agg(sum(col("n_docs")).as("n_docs"),
+            sum(col("total_chars")).as("total_chars"),
+            min(col("min_hash")).as("min_hash"),
+            max(col("max_hash")).as("max_hash"),
+            sum(col("checksum")).as("checksum")),
+        stored.index.unionByName(arrivals))
+    /** The stale docs name their shards by their own content hash (the
+      * E66 stateless contract), so no store is read to find them. */
+    def refresh(stored: ShardStore, d: DocDelta): ShardStore = {
+      // CACHED (tracked): the arrival receipt feeds the affected-shard
+      // collect AND the recompute union
+      val arrived = cacheTracked(arrive(d.fresh))
+      new ShardStore(
+        shardManifestFold(stored.manifest, stored.index, d.staleIds,
+          arrive(d.staleDocs), arrived),
+        stored.index.join(d.staleIds, Seq("doc_id"), "left_anti")
+          .unionByName(arrived))
+    }
+  }
+
+  /** A verb's serve: its answer over the maintained index with the
+    * `pending` docs arrived on top (empty after a fold of the whole
+    * batch, a purge or a refresh). */
+  private type DocServe[S] = (S, DataFrame) => DataFrame
+
+  private def incrementalDocs[S](ix: DocIndex[S])(serve: DocServe[S])(
+      spark: SparkSession, sfDir: String): DataFrame =
+    serve(ix.stored(spark, sfDir, DocSplit.Corpus),
+      incrementalDocSplit(spark, sfDir)._2)
+
+  /** `day2From`: batch docs from this bucket on stay pending, served
+    * against the compacted table; the rest of the batch is folded. */
+  private def compactDocs[S](ix: DocIndex[S], day2From: Option[Int] = None)(
+      serve: DocServe[S])(spark: SparkSession, sfDir: String): DataFrame = {
+    val base = bucketedDocs(spark, sfDir)
+    val batch = col("bucket") >= IncrementalCorpusPct
+    val folded = base.filter(day2From.fold(batch)(b => batch && col("bucket") < b))
+      .select("doc_id", "text")
+    val pending = day2From.fold(folded.limit(0))(b =>
+      base.filter(col("bucket") >= b).select("doc_id", "text"))
+    serve(ix.fold(ix.stored(spark, sfDir, DocSplit.Corpus),
+      ix.arrive(folded), s"$sfDir/documents.parquet"), pending)
+  }
+
+  private def purgeDocs[S](ix: DocIndex[S])(serve: DocServe[S])(
+      spark: SparkSession, sfDir: String): DataFrame = {
+    // the takedown rows: ONE raw scan (in deployment, the request list)
+    val purged = bucketedDocs(spark, sfDir)
+      .filter(col("bucket") >= PurgeBucketFrom).select("doc_id", "text")
+    val none = purged.limit(0)
+    serve(ix.refresh(ix.stored(spark, sfDir, DocSplit.Full),
+      DocDelta(broadcast(purgeDocIds(spark, sfDir)), purged,
+        d => pmod(Scalars.hash60(d.cast("string")), lit(100L)) >= PurgeBucketFrom,
+        none)), none)
+  }
+
+  /** The refresh verb's maintained index — package-private so
+    * RefreshSpec can assert it against a from-scratch snapshot-B
+    * build (index identity, stronger than the served output). */
+  private[graft] def refreshedDocIndex[S](ix: DocIndex[S],
+      spark: SparkSession, sfDir: String): S = {
+    val diff = cachedSnapshotStatuses(spark, sfDir)
+    // a changed doc rides both halves: its stale rows leave, its
+    // revised text arrives
+    ix.refresh(ix.stored(spark, sfDir, DocSplit.SnapA), DocDelta(diff.stale,
+      snapshotDocsA(spark, sfDir).join(diff.stale, Seq("doc_id")),
+      snapshotStaleCol,
+      snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id"))))
+  }
+
+  private def refreshDocs[S](ix: DocIndex[S])(serve: DocServe[S])(
+      spark: SparkSession, sfDir: String): DataFrame =
+    serve(refreshedDocIndex(ix, spark, sfDir),
+      snapshotDocsB(spark, sfDir).limit(0))
+
+  /** Substr arrivals serve the pending batch's stats against the index
+    * (a metadata-only count arms the bloom prefilter at scale). */
+  private def gramStats(index: DataFrame, batch: DataFrame): DataFrame =
+    substrStatsAgainst(batch, index, indexRows = Some(index.count()))
+
+  private def gramRewrite(index: DataFrame, batch: DataFrame): DataFrame =
+    substrRewriteAgainst(batch, index, indexRows = Some(index.count()))
+
+  private def gramRows(cols: String*)(index: DataFrame,
+                                      pending: DataFrame): DataFrame =
+    index.select(cols.map(col): _*).orderBy("g")
+
+  private def receipt(st: ShardStore, pending: DataFrame): DataFrame =
+    st.manifest.orderBy("shard")
+
+  // lazy: the oracles read Bm25Queries and bm25Search, declared later
+  // in this object; [[all]] forces them after construction
+  lazy val substrIncremental: Q = Q("ext_substr_incremental",
+    incrementalDocs(GramIndex)(gramStats),
+    Some(substrStatsSql(
+      s"WHERE ${duckHash60("CAST(g.doc_id AS VARCHAR)")} % 100 >= " +
+        s"$IncrementalCorpusPct")))
+  lazy val substrRewriteIncremental: Q = Q("ext_substr_rewrite_incremental",
+    incrementalDocs(GramIndex)(gramRewrite),
+    Some(substrRewriteSql(
+      s"WHERE ${duckHash60("CAST(d.doc_id AS VARCHAR)")} % 100 >= " +
+        s"$IncrementalCorpusPct")))
+  lazy val substrCompact: Q = Q("ext_substr_compact",
+    compactDocs(GramIndex, day2From = Some(90))(gramStats),
+    Some(substrStatsSql(
+      s"WHERE ${duckHash60("CAST(g.doc_id AS VARCHAR)")} % 100 >= 90")))
+  lazy val bm25Incremental: Q = Q("ext_bm25_incremental",
+    incrementalDocs(PostingsIndex)(PostingsIndex.serve), bm25Search.oracle)
+  lazy val bm25Compact: Q = Q("ext_bm25_compact",
+    compactDocs(PostingsIndex)(PostingsIndex.serve), bm25Search.oracle)
+  lazy val shardManifestFold: Q = Q("ext_shard_manifest_fold",
+    compactDocs(ShardIndex)(receipt), Some(manifestOracleSql("documents")))
+  lazy val bm25Purge: Q = Q("ext_bm25_purge",
+    purgeDocs(PostingsIndex)(PostingsIndex.serve),
+    Some(bm25OracleSql(
+      s"documents WHERE NOT (${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom)")))
+  lazy val shardPurge: Q = Q("ext_shard_purge", purgeDocs(ShardIndex)(receipt),
+    Some(manifestOracleSql(s"""documents
+            |  WHERE NOT (${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom)""".stripMargin)))
+  lazy val crawlRefresh: Q = Q("ext_crawl_refresh",
+    refreshDocs(PostingsIndex)(PostingsIndex.serve),
+    Some(bm25OracleSql(duckSnapshotBRel)))
+  lazy val substrPurge: Q = Q("ext_substr_purge",
+    purgeDocs(GramIndex)(gramRows("g", "cnt", "tombstoned")),
+    Some(s"""WITH d AS (
+            |  SELECT doc_id, regexp_split_to_array(
+            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
+            |    '\\s+') AS toks
+            |  FROM documents),
+            |gr AS (
+            |  SELECT doc_id,
+            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
+            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)] AS grams
+            |  FROM d),
+            |p AS (SELECT doc_id, unnest(grams) AS gh FROM gr),
+            |a AS (SELECT gh, count(*) AS cnt_all,
+            |    sum(CASE WHEN ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom
+            |        THEN 1 ELSE 0 END) AS pcnt,
+            |    min(doc_id) AS cdoc
+            |  FROM p GROUP BY gh)
+            |SELECT gh AS g, CAST(cnt_all - pcnt AS BIGINT) AS cnt,
+            |  (${duckHash60("CAST(cdoc AS VARCHAR)")} % 100 >= $PurgeBucketFrom) AS tombstoned
+            |FROM a WHERE cnt_all - pcnt >= 1 ORDER BY g""".stripMargin))
+  // cpos is spec-gated rather than oracled (the struct-min's pos
+  // needs a two-level SQL agg the cdoc hash already pins transitively —
+  // RefreshSpec asserts the full 5-column index)
+  lazy val substrRefresh: Q = Q("ext_substr_refresh",
+    refreshDocs(GramIndex)(gramRows("g", "cnt", "tombstoned", "cdoc")),
+    Some(s"""WITH d AS (SELECT doc_id, text,
+            |    ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
+            |  FROM documents),
+            |a AS (SELECT doc_id, text,
+            |    (bucket < $SnapBFrom OR bucket % $SnapRevMod = 0) AS stale
+            |  FROM d WHERE bucket < $SnapABelow),
+            |f AS (SELECT doc_id,
+            |    CASE WHEN bucket % $SnapRevMod = 0 THEN text || ' rev2'
+            |         ELSE text END AS text
+            |  FROM d WHERE bucket >= $SnapBFrom
+            |    AND (bucket >= $SnapABelow OR bucket % $SnapRevMod = 0)),
+            |ta AS (SELECT doc_id, stale, regexp_split_to_array(
+            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
+            |    '\\s+') AS toks FROM a),
+            |pa AS (SELECT doc_id, stale, unnest(
+            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
+            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)]) AS g
+            |  FROM ta),
+            |sa AS (SELECT g, count(*) AS cnt_a,
+            |    sum(CASE WHEN stale THEN 1 ELSE 0 END) AS pcnt,
+            |    min(doc_id) AS cdoc_a
+            |  FROM pa GROUP BY g),
+            |sa2 AS (SELECT *,
+            |    ${duckHash60("CAST(cdoc_a AS VARCHAR)")} % 100 AS cb
+            |  FROM sa),
+            |tf AS (SELECT doc_id, regexp_split_to_array(
+            |    regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'),
+            |    '\\s+') AS toks FROM f),
+            |pf AS (SELECT doc_id, unnest(
+            |    [${duckHash60(s"array_to_string(toks[i:i+${SubstrDedupW - 1}], ' ')")}
+            |     for i in range(1, greatest(len(toks) - ${SubstrDedupW - 1}, 1) + 1)]) AS g
+            |  FROM tf),
+            |sf AS (SELECT g, count(*) AS fcnt, min(doc_id) AS fdoc
+            |  FROM pf GROUP BY g),
+            |j AS (SELECT coalesce(sa2.g, sf.g) AS g, cnt_a, pcnt, cdoc_a,
+            |    cb, fcnt, fdoc
+            |  FROM sa2 FULL OUTER JOIN sf ON sa2.g = sf.g),
+            |r AS (SELECT g,
+            |    CAST(coalesce(CASE WHEN cnt_a - pcnt >= 1
+            |        THEN cnt_a - pcnt END, 0) + coalesce(fcnt, 0) AS BIGINT)
+            |      AS cnt,
+            |    coalesce(cnt_a - pcnt >= 1 AND
+            |      (cb < $SnapBFrom OR cb % $SnapRevMod = 0), false)
+            |      AS tombstoned,
+            |    CASE WHEN cnt_a - pcnt >= 1 AND
+            |        NOT (cb < $SnapBFrom OR cb % $SnapRevMod = 0)
+            |      THEN cdoc_a END AS sdoc,
+            |    fdoc
+            |  FROM j)
+            |SELECT g, cnt, tombstoned,
+            |  CASE WHEN tombstoned THEN NULL
+            |       WHEN sdoc IS NULL THEN fdoc
+            |       WHEN fdoc IS NULL THEN sdoc
+            |       ELSE least(sdoc, fdoc) END AS cdoc
+            |FROM r WHERE cnt >= 1 ORDER BY g""".stripMargin))
+  // the oracle derives snapshot B's n_chars as len(text): the revised
+  // text's live length
+  lazy val shardRefresh: Q = Q("ext_shard_refresh",
+    refreshDocs(ShardIndex)(receipt),
+    Some(s"""WITH d AS (SELECT doc_id, text,
+            |    ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
+            |  FROM documents),
+            |bb AS (SELECT CASE WHEN bucket % $SnapRevMod = 0
+            |         THEN text || ' rev2' ELSE text END AS text
+            |  FROM d WHERE bucket >= $SnapBFrom),
+            |h AS (SELECT ${duckHash60("text")} AS hh,
+            |    CAST(len(text) AS BIGINT) AS n_chars FROM bb)
+            |SELECT CAST(hh % $ShardCount AS INT) AS shard,
+            |  count(*) AS n_docs,
+            |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
+            |  min(hh) AS min_hash, max(hh) AS max_hash,
+            |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
+            |FROM h GROUP BY 1 ORDER BY shard""".stripMargin))
+
   /** Per-doc shard receipt columns of a (doc_id, text) frame —
     * (doc_id, shard, hh, n_chars), pure content arithmetic (the E66
     * stateless contract; n_chars = length(text), which the documents
     * table's n_chars column equals, and the snapshot-B side's revised
-    * text needs the live length anyway). */
+    * text needs the live length anyway) — [[ShardIndex]]'s arrival
+    * rows. */
   private def shardReceiptRows(docs: DataFrame): DataFrame = {
     val h = Scalars.hash60(col("text"))
     docs.select(col("doc_id"),
@@ -6960,41 +6872,16 @@ object Extensions {
       h.as("hh"), length(col("text")).cast("long").as("n_chars"))
   }
 
-  /** The snapshot-A shard index fixture — [[shardIndexFixture]] for
-    * yesterday's crawl, hive-partitioned by shard so the refresh's
-    * affected-shard recompute prunes to the touched directories. */
-  private def shardIndexAFixture(spark: SparkSession,
-                                 sfDir: String): DataFrame = {
-    val live = shardReceiptRows(snapshotDocsA(spark, sfDir))
-    parquetFixture(spark, "shard-index-a", s"$sfDir/documents.parquet",
-      s"n${ShardCount}_snapA$SnapABelow",
-      live.queryExecution.logical.toString, live,
-      partitionCols = Seq("shard"))
-  }
-
-  /** The snapshot-A manifest as a stored ≤ [[ShardCount]]-row fixture
-    * — the receipt untouched shards pass through from. */
-  private def shardManifestAFixture(spark: SparkSession,
-                                    sfDir: String): DataFrame = {
-    val live = manifestAggOf(
-      shardReceiptRows(snapshotDocsA(spark, sfDir))
-        .select("shard", "hh", "n_chars"))
-    parquetFixture(spark, "shard-manifest-a", s"$sfDir/documents.parquet",
-      s"n${ShardCount}_snapA$SnapABelow",
-      live.queryExecution.logical.toString, live)
-  }
-
-  /** The one affected-shard recompute behind both receipt verbs,
-    * purge (E71) and refresh (E76e): `removedIds` leave the store, the
-    * `arrived` receipt rows (shard, hh, n_chars) enter it. Affected
-    * shards = `removedShards` ∪ the arrivals' shards, ONE diff-sized
-    * collect whose literal partition-prunes the stored index; they are
-    * recomputed from it, every other shard passes through from the
-    * stored receipt. A purge names its shards from the takedown rows'
-    * own content hash and arrives nothing; a refresh names them from
-    * the stale docs' stored index rows. Package-private so the specs
-    * can drive it at a shard count where the pass-through path carries
-    * rows (at ShardCount=8 a spread delta touches every shard). */
+  /** The shard receipt's purge step ([[ShardIndex]]): `removedIds`
+    * leave the store, the `arrived` receipt rows (shard, hh, n_chars)
+    * enter it. Affected shards = `removedShards` ∪ the arrivals'
+    * shards, ONE diff-sized collect whose literal partition-prunes the
+    * stored index; they are recomputed from it, every other shard
+    * passes through from the stored receipt — a deletion's receipt is
+    * O(affected shards), an arrival's O(batch). Package-private so the
+    * specs can drive it at a shard count where the pass-through path
+    * carries rows (at ShardCount=8 a spread delta touches every
+    * shard). */
   private[graft] def shardManifestFold(stored: DataFrame, idx: DataFrame,
       removedIds: DataFrame, removedShards: DataFrame,
       arrived: DataFrame): DataFrame = {
@@ -7013,38 +6900,6 @@ object Extensions {
         .unionByName(arrived.select("shard", "hh", "n_chars")))
     untouched.unionByName(recomputed).orderBy("shard")
   }
-
-  lazy val shardRefresh: Q = Q("ext_shard_refresh",
-    (spark, sfDir) => {
-      val diff = cachedSnapshotStatuses(spark, sfDir)
-      val stale = diff.stale
-      // arrival receipt: ONE O(delta) content-arithmetic projection
-      // over the fresh snapshot-B docs. CACHED (tracked): it feeds the
-      // affected-shard collect AND the recompute union.
-      val arrived = cacheTracked(shardReceiptRows(
-        snapshotDocsB(spark, sfDir).join(diff.fresh, Seq("doc_id"))))
-      val idxA = shardIndexAFixture(spark, sfDir)
-      shardManifestFold(shardManifestAFixture(spark, sfDir), idxA, stale,
-        idxA.join(stale, Seq("doc_id"), "left_semi"), arrived)
-    },
-    // the MONOLITHIC manifest SQL over the snapshot-B derivation
-    // verbatim: refreshed receipts must equal rebuilt-from-scratch
-    // receipts — the same "global counts are global counts" gate the
-    // fold (E66) and the purge (E71) carry
-    Some(s"""WITH d AS (SELECT doc_id, text,
-            |    ${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
-            |  FROM documents),
-            |bb AS (SELECT CASE WHEN bucket % $SnapRevMod = 0
-            |         THEN text || ' rev2' ELSE text END AS text
-            |  FROM d WHERE bucket >= $SnapBFrom),
-            |h AS (SELECT ${duckHash60("text")} AS hh,
-            |    CAST(len(text) AS BIGINT) AS n_chars FROM bb)
-            |SELECT CAST(hh % $ShardCount AS INT) AS shard,
-            |  count(*) AS n_docs,
-            |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-            |  min(hh) AS min_hash, max(hh) AS max_hash,
-            |  CAST(sum(hh % 100003) AS BIGINT) AS checksum
-            |FROM h GROUP BY 1 ORDER BY shard""".stripMargin))
 
   // =====================================================================
   // E81: REFRESH REPORT — the operational receipt the refresh verbs
@@ -7116,7 +6971,7 @@ object Extensions {
             col("rows_purged"), col("rows_arrived"))
       // postings: per-doc stored row counts — ONE index read, no
       // corpus tokenize; arrivals from the delta tokenize
-      val aRows = snapshotAPostingsFixture(spark, sfDir)
+      val aRows = PostingsIndex.stored(spark, sfDir, DocSplit.SnapA)
         .groupBy("doc_id").agg(count(lit(1)).as("rows_a"))
       val bRows = postingsOf(b.join(fresh, Seq("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("rows_b"))
@@ -7427,13 +7282,13 @@ object Extensions {
       // Lee et al. 2021 metric released corpora report): the
       // token-weighted duplicated fraction per language,
       // Σ dup_tokens / Σ n_tokens. The dup-gram SET is served from the
-      // STORED full-corpus gram index (the E71b artifact — its counts
+      // STORED full-corpus gram index (the purge target — its counts
       // over the full corpus equal the live pass's by definition), so
       // the report pays one positions pass but never re-aggregates
       // every gram occurrence
       val sdocs = substringDocs(docs.select(col("doc_id"), col("text")))
       val spans = substringStatsFrom(sdocs, substringGramPositions(sdocs),
-          substrGramsFullFixture(spark, sfDir)
+          GramIndex.stored(spark, sfDir, DocSplit.Full)
             .filter(col("cnt") >= 2).select("g"))
         .select(col("doc_id"), col("n_tokens"), col("dup_tokens"))
       perDoc.join(copies, Seq("text_hash"))
@@ -7591,7 +7446,7 @@ object Extensions {
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       val spanHeavy = substringStatsFrom(sdocs,
           substringGramPositions(sdocs),
-          substrGramsFullFixture(spark, sfDir)
+          GramIndex.stored(spark, sfDir, DocSplit.Full)
             .filter(col("cnt") >= 2).select("g"))
         .filter(col("dup_frac") >= SubstrCurateMaxDupFrac).select("doc_id")
       corpusCurateFull.fn(spark, sfDir)
@@ -8355,19 +8210,6 @@ object Extensions {
       .agg(count(lit(1)).cast("double").as("tf"), max(col("dl")).as("dl"))
   }
 
-  /** The MATERIALIZED inverted-postings table for the documents at
-    * `sfDir` — the stored index every lexical retrieval query
-    * (ext_bm25_search, ext_tfidf_terms, both hybrid sparse towers)
-    * reads instead of re-tokenizing the corpus per query. At 100 TB
-    * the postings table is written once per corpus build and reused
-    * across every query set — the inverted-index contract; a changed
-    * corpus or tokenization orphans it via the fixture key. */
-  def bm25Postings(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf0 = postingsOf(Tables.documents(spark, sfDir))
-    parquetFixture(spark, "bm25-postings", s"$sfDir/documents.parquet",
-      "tok1", tf0.queryExecution.logical.toString, tf0)
-  }
-
   /** BM25 top-k over `docsRaw` (doc_id, text) for a literal query set.
     * One postings pass; everything query-sized is broadcast.
     * `postings0` lets callers supply the materialized table. */
@@ -8449,116 +8291,9 @@ object Extensions {
   val bm25Search: Q = Q("ext_bm25_search",
     (spark, sfDir) =>
       bm25From(Tables.documents(spark, sfDir),
-        postings0 = Some(bm25Postings(spark, sfDir)))
+        postings0 = Some(PostingsIndex.stored(spark, sfDir, DocSplit.Full)))
         .orderBy("query_id", "rank"),
     Some(bm25OracleSql("documents")))
-
-  /** E71 (lexical): BM25 over the PURGED stored postings — one
-    * broadcast anti-join on the index (postings are per-doc facts;
-    * the corpus is never re-tokenized), and because the search derives
-    * n_docs/avgdl/df from the postings themselves, the purged index
-    * reproduces the filtered-corpus ranking EXACTLY. Oracle-paired on
-    * the full BM25 SQL over `documents WHERE NOT purged` — stats,
-    * scores, ranks all hash-matched. */
-  val bm25Purge: Q = Q("ext_bm25_purge",
-    (spark, sfDir) => {
-      val purged = bm25Postings(spark, sfDir)
-        .join(broadcast(purgeDocIds(spark, sfDir)), Seq("doc_id"), "left_anti")
-      bm25From(Tables.documents(spark, sfDir), postings0 = Some(purged))
-        .orderBy("query_id", "rank")
-    },
-    Some(bm25OracleSql(
-      s"documents WHERE NOT (${duckHash60("CAST(doc_id AS VARCHAR)")} % 100 >= $PurgeBucketFrom)")))
-
-  // =====================================================================
-  // Incremental LEXICAL index maintenance — ext_dedup_incremental's
-  // daily-increment contract applied to the stored inverted index: the
-  // standing corpus's postings are tokenized ONCE (stored fixture over
-  // the 90% split) and a new batch contributes its rows with one
-  // O(batch) tokenize scan, unioned at read time — at 100 TB the batch
-  // postings APPEND to the stored table; the corpus is never
-  // re-tokenized on arrival (PlanSpec gates the registered plan to one
-  // documents scan: the batch filter). Postings are per-doc rows, so
-  // the merged index is EXACTLY the full-corpus postings table — the
-  // query runs BM25 over it and shares ext_bm25_search's DuckDB oracle,
-  // the strongest gate available for a maintenance op.
-  // =====================================================================
-  /** The stored standing-corpus postings table — ONE fixture shared by
-    * the arrival (E35), the compaction (E46), and the cadence report
-    * (E61); a diverging inline copy of this read would silently fork
-    * the fixture key. */
-  private def bm25PostingsFixture(spark: SparkSession, sfDir: String,
-                                  corpus: DataFrame): DataFrame = {
-    val corpusPostings0 = postingsOf(corpus)
-    parquetFixture(spark, "bm25-postings",
-      s"$sfDir/documents.parquet", s"tok1_inc$IncrementalCorpusPct",
-      corpusPostings0.queryExecution.logical.toString, corpusPostings0)
-  }
-
-  val bm25Incremental: Q = Q("ext_bm25_incremental",
-    (spark, sfDir) => {
-      // ONE definition of the corpus/batch split across the whole
-      // incremental family — a diverging copy here would silently
-      // break the merged == monolithic invariant
-      val (corpus, batch) = incrementalDocSplit(spark, sfDir)
-      val corpusPostings = bm25PostingsFixture(spark, sfDir, corpus)
-      // ONE O(batch) tokenize scan — the only live corpus-data work
-      val merged = corpusPostings.unionByName(postingsOf(batch))
-      bm25From(corpus, postings0 = Some(merged)).orderBy("query_id", "rank")
-    },
-    bm25Search.oracle)
-
-  // =====================================================================
-  // E46/E47: compaction for the LEXICAL and LSH indexes — the E45
-  // settling verb applied to the other two accumulating arrival
-  // contracts, so EVERY stored index family now has the full lifecycle
-  // (build → arrive → compact → retrain), not just IVFPQ. The debts
-  // differ per family, which is why these are distinct operators and
-  // not a rename: the postings union carries no cap (postings rows are
-  // per-doc facts), so lexical compaction settles the small-files
-  // union and the PER-SEARCH batch tokenize; the LSH union carries the
-  // hot-bucket cap, and the arrival path re-applies it PER SEARCH (a
-  // window over the merged table on every query batch) — compaction
-  // pays that window once and stores its result, so post-compaction
-  // searches read pre-capped rows with zero re-cap work. Both jobs
-  // read only INDEX rows plus the O(batch) scan, never the raw corpus
-  // (the same index-sized-I/O asymmetry as E45), and both compacted
-  // tables are row-identical to the monolithic build under the frozen
-  // tokenization/plane models — for the lexical index that makes the
-  // post-compaction search ORACLE-PAIRED (it shares ext_bm25_search's
-  // DuckDB BM25 oracle, the strongest gate any maintenance op has).
-  // =====================================================================
-  /** Fold the lexical index's arrival state (stored corpus postings ∪
-    * one-scan batch postings) into ONE fresh stored postings table.
-    * Postings are per-doc rows — no cap to re-resolve — so the
-    * compacted table IS the full-corpus postings table, row-exact. */
-  def postingsCompacted(corpusPostings: DataFrame, batchPostings: DataFrame,
-                        src: String): DataFrame = {
-    val spark = corpusPostings.sparkSession
-    val merged = corpusPostings.unionByName(batchPostings)
-    // fingerprint = merged plan + the base table's scan root path
-    // (fixture reads render pathless — E45's collision note), so a
-    // changed tokenization or a different batch orphans the compact
-    parquetFixture(spark, "bm25-postings-compact", src, "tok1_compact1",
-      merged.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(merged).mkString(","), merged)
-  }
-
-  /** The post-compaction lexical search: BM25 served entirely from the
-    * compacted postings table — no union, no per-search batch
-    * tokenize, ZERO raw documents scans in the plan (PlanSpec gates
-    * all three). Oracle-paired: the compacted postings are
-    * row-identical to the full-corpus table (asserted), so the output
-    * must match DuckDB's monolithic BM25 exactly. */
-  val bm25Compact: Q = Q("ext_bm25_compact",
-    (spark, sfDir) => {
-      val (corpus, batch) = incrementalDocSplit(spark, sfDir)
-      val compacted = postingsCompacted(
-        bm25PostingsFixture(spark, sfDir, corpus), postingsOf(batch),
-        s"$sfDir/documents.parquet")
-      bm25From(corpus, postings0 = Some(compacted)).orderBy("query_id", "rank")
-    },
-    bm25Search.oracle)
 
   /** Fold the LSH index's arrival state (stored capped corpus buckets
     * ∪ one-scan uncapped batch rows) into ONE fresh stored bucket
@@ -8573,8 +8308,7 @@ object Extensions {
     def capped = capBuckets(merged, cap)
     parquetFixture(spark, "lsh-buckets-compact", src,
       s"t${LshTables}_b${LshBits}_c${cap}_compact1",
-      merged.queryExecution.logical.toString +
-        "\nscans:" + scanRootPaths(merged).mkString(","), capped)
+      fixturePlanOf(merged), capped)
   }
 
   // =====================================================================
@@ -8632,7 +8366,7 @@ object Extensions {
       val emb = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val (vCorpus, vBatch) = incrementalSplit(emb)
-      val (dCorpus, dBatch) = incrementalDocSplit(spark, sfDir)
+      val (_, dBatch) = incrementalDocSplit(spark, sfDir)
       // every count below is a pure function of (data, family
       // constants) — a metadata fact, exactly what this report exists
       // to read cheaply — so each is memoized per (session, source
@@ -8674,11 +8408,13 @@ object Extensions {
                ivfpqrCellCodes(vCorpus, cbsR, cs, ms, Some(src)), batchVecs)))
         }
       val rows = vecRows ++ Seq(
-        row("bm25-postings", docSrc, bm25PostingsFixture(spark, sfDir, dCorpus),
+        row("bm25-postings", docSrc,
+          PostingsIndex.stored(spark, sfDir, DocSplit.Corpus),
           memoCount("batch-postings", docSrc)(postingsOf(dBatch))),
         row("lsh-buckets", src, LshIndex.stored(vCorpus, (), src),
           memoCount("batch-lsh", src)(lshBucketRows(vBatch, None))),
-        row("substr-grams", docSrc, substrGramsFixture(spark, sfDir, dCorpus),
+        row("substr-grams", docSrc,
+          GramIndex.stored(spark, sfDir, DocSplit.Corpus),
           memoCount("batch-grams", docSrc)(substringGramIndex(dBatch))))
       rows.toDF("family", "base_rows", "batch_rows", "batch_ratio",
         "part_files", "compact_recommended").orderBy("family")
@@ -8700,7 +8436,8 @@ object Extensions {
       // branch-specialized column pruning defeats exchange reuse; the
       // frame itself is the materialized postings table (dl unused)
       val tf = cacheTracked(
-        bm25Postings(spark, sfDir).select("doc_id", "term", "tf"))
+        PostingsIndex.stored(spark, sfDir, DocSplit.Full)
+          .select("doc_id", "term", "tf"))
       // n_docs from the cached tf (every doc has ≥1 token), not a
       // second corpus scan
       val stats = tf.select("doc_id").distinct()
@@ -9288,17 +9025,11 @@ object Extensions {
     * incremental/compaction split derives from — a diverging copy of
     * this expression would silently mismatch the stored fixtures keyed
     * on it. */
-  private[graft] def bucketedDocs(spark: SparkSession, sfDir: String,
-                                  extraCols: Seq[String] = Nil): DataFrame = {
+  private[graft] def bucketedDocs(spark: SparkSession,
+                                  sfDir: String): DataFrame = {
     val bucket = pmod(Scalars.hash60(col("doc_id").cast("string")), lit(100L))
-    // extraCols = Nil keeps the projection (and so every fixture
-    // fingerprint derived from it) bit-identical to the historical
-    // form; callers needing more columns extend THIS projection rather
-    // than re-deriving the bucket expression (a diverging copy would
-    // silently mismatch the stored fixtures keyed on it)
     Tables.documents(spark, sfDir)
-      .select(Seq(col("doc_id"), col("text"), bucket.as("bucket")) ++
-        extraCols.map(col): _*)
+      .select(col("doc_id"), col("text"), bucket.as("bucket"))
   }
 
   private[graft] def incrementalDocSplit(spark: SparkSession,
@@ -10701,9 +10432,9 @@ object Extensions {
   def hybridSparseTop(spark: SparkSession, sfDir: String, q: DataFrame): DataFrame = {
     val qterms = q.select(col("query_id"),
       explode(array_distinct(split(edgeTrim(lower(col("qtext"))), "\\s+"))).as("term"))
-    // the MATERIALIZED postings table (see bm25Postings) — the sparse
+    // the MATERIALIZED postings table ([[PostingsIndex]]) — the sparse
     // tower reads the stored index, never re-tokenizes the corpus
-    val tf = cacheTracked(bm25Postings(spark, sfDir))
+    val tf = cacheTracked(PostingsIndex.stored(spark, sfDir, DocSplit.Full))
     val stats = tf.groupBy("doc_id").agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
     val dfq = tf.join(broadcast(qterms.select("term").distinct()), Seq("term"))

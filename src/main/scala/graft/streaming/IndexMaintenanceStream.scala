@@ -3,311 +3,91 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming twin of the batch index-arrival contract (E35): documents
-  * arrive on a stream, each micro-batch is tokenized ONCE (the same
-  * postings scan `ext_bm25_incremental` pays per batch) and APPENDED
-  * to the stored postings layout. Progress is checkpoint-owned —
-  * exactly-once offsets per micro-batch — and the append itself is
-  * made IDEMPOTENT against foreachBatch's at-least-once replay by
-  * writing each batch to a deterministic `batch=<id>` partition with
-  * overwrite semantics: a crash-replayed batch rewrites its own
-  * partition byte-identically instead of double-appending (the same
-  * discipline StreamingSync delegates to the id map). Readers take
-  * `spark.read.parquet(indexDir)` — the merged postings table — and
-  * feed it to bm25From exactly like the batch union does; at 100 TB
-  * the partitioned layout doubles as the compaction unit.
+/** Streaming twin of the batch index-arrival contract: rows arrive on a
+  * stream and each micro-batch pays its family's ONE arrival scan —
+  * the same one-scan landing the batch arrival pays: a tokenize
+  * (`Extensions.postingsOf`), a gram pass
+  * (`Extensions.substringGramIndex`), an encode+assign against FROZEN
+  * models (`Extensions.ivfpqEncodeAssign` and its imipq/ivfpqr twins),
+  * an UNCAPPED sign-hash (`Extensions.lshBucketRows(_, None)` — the
+  * hot-bucket cap is the search-side skew guard, re-resolved over the
+  * merged table per search), or a per-shard delta write
+  * (`Extensions.writeShards` — content-hash assignment is stateless,
+  * so the shard stream needs no standing-corpus read at all).
+  *
+  * Progress is checkpoint-owned — exactly-once offsets per micro-batch
+  * — and the append itself is IDEMPOTENT against foreachBatch's
+  * at-least-once replay: each batch lands in a deterministic
+  * `batch=<id>` directory with overwrite semantics, so a crash-replayed
+  * batch rewrites its own partition byte-identically instead of
+  * double-appending (the same discipline StreamingSync delegates to the
+  * id map). Frozen models are the contract's premise: a retrain is a
+  * batch-side event that restarts the stream against the new model
+  * fixtures and a fresh index dir. At 100 TB the partitioned layout
+  * doubles as the compaction unit; `Extensions.compactShards` folds
+  * streamed shard deltas exactly like batch-landed ones.
   */
 object IndexMaintenanceStream {
 
-  /** One micro-batch's append: tokenize + write to the batch-keyed
-    * partition. Exposed for the idempotence test — calling it twice
-    * with the same batchId must leave the index unchanged. */
-  def appendPostingsBatch(batch: DataFrame, indexDir: String,
-                          batchId: Long): Unit =
-    graft.ext.Extensions.postingsOf(batch)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+  /** A family's landing: writes one batch's index rows under a dir. */
+  type Landing = (DataFrame, String) => Unit
 
-  /** Start the maintenance stream: `docs` must carry (doc_id, text). */
-  def startPostingsAppend(docs: DataFrame, indexDir: String,
-                          checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .queryName("graft-postings-append")
+  /** The landing of a row-producing arrival (postingsOf, an
+    * *EncodeAssign with its frozen models, lshBucketRows,
+    * substringGramIndex): its rows, written with overwrite. */
+  def rowsOf(arrive: DataFrame => DataFrame): Landing =
+    (batch, dir) => arrive(batch).write.mode("overwrite").parquet(dir)
+
+  /** One micro-batch's append into the batch-keyed partition. Exposed
+    * for the idempotence tests — calling it twice with the same batchId
+    * must leave the index unchanged. */
+  def appendBatch(batch: DataFrame, indexDir: String, batchId: Long,
+                  land: Landing): Unit =
+    land(batch, s"$indexDir/batch=$batchId")
+
+  /** Start the maintenance stream `graft-<name>-append` over `rows`
+    * ((doc_id, text) documents or (vec_id, v) embeddings, whatever the
+    * landing reads). */
+  def start(name: String, rows: DataFrame, indexDir: String,
+            checkpointDir: String, land: Landing): StreamingQuery =
+    rows.writeStream
+      .queryName(s"graft-$name-append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) appendPostingsBatch(batch.toDF(), indexDir, batchId)
+        if (!batch.isEmpty) appendBatch(batch.toDF(), indexDir, batchId, land)
         ()
       }
       .start()
 
-  /** The merged postings table the searches read — every appended
-    * batch partition, batch column dropped. */
-  def mergedPostings(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select("doc_id", "term", "tf", "dl")
+  /** The merged table of a per-row family — every appended batch
+    * partition with the batch column dropped: the postings bm25From
+    * reads, the combined index the code searches read (`codes0`), or
+    * the UNCAPPED bucket table annTopK re-caps per search. */
+  def mergedRows(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.parquet(indexDir).drop("batch")
 
-  // ---------------------------------------------------------------------
-  // The VECTOR-index twin (E43's streaming form): embeddings arrive on
-  // a stream, each micro-batch is encoded + product-cell-assigned ONCE
-  // against the FROZEN models (the same one-scan projection
-  // ext_imipq_incremental pays per batch — imipqEncodeAssign) and
-  // appended to the stored combined-index layout. Same idempotence
-  // discipline: a deterministic batch=<id> partition with overwrite
-  // semantics, so an at-least-once replay rewrites byte-identically.
-  // Frozen models are exactly the contract's premise — retrain (the
-  // drift rule) is a batch-side event that restarts the stream against
-  // the new model fixtures and a fresh index dir.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's append: encode+assign + write to the batch-keyed
-    * partition. `batch` carries (vec_id, v). Exposed for the
-    * idempotence test. */
-  def appendImipqBatch(batch: DataFrame,
-                       cbs: Array[Array[Array[Double]]],
-                       cs0: Array[Array[Double]],
-                       cs1: Array[Array[Double]],
-                       indexDir: String, batchId: Long): Unit =
-    graft.ext.Extensions.imipqEncodeAssign(batch, cbs, cs0, cs1)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-
-  /** Start the vector-index maintenance stream: `vecs` must carry
-    * (vec_id, v) with v the embedding array. */
-  def startImipqAppend(vecs: DataFrame,
-                       cbs: Array[Array[Array[Double]]],
-                       cs0: Array[Array[Double]],
-                       cs1: Array[Array[Double]],
-                       indexDir: String,
-                       checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .queryName("graft-imipq-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          appendImipqBatch(batch.toDF(), cbs, cs0, cs1, indexDir, batchId)
-        ()
-      }
-      .start()
-
-  /** The merged combined-index table the searches read (the `codes0`
-    * input of imipqTopK), batch column dropped. */
-  def mergedImipqCodes(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select("cell", "corpus_id", "code")
-
-  // ---------------------------------------------------------------------
-  // The FLAT-IVF vector twin (E39's streaming form): identical contract
-  // to the product-quantizer stream above with the coarse quantizer
-  // swapped — each micro-batch runs ivfpqEncodeAssign's one-scan
-  // encode+assign against the frozen (codebook, centroid) pair and
-  // appends to the batch-keyed layout.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's append for the flat combined index. `batch`
-    * carries (vec_id, v). Exposed for the idempotence test. */
-  def appendIvfpqBatch(batch: DataFrame,
-                       cbs: Array[Array[Array[Double]]],
-                       cs: Array[Array[Double]],
-                       indexDir: String, batchId: Long): Unit =
-    graft.ext.Extensions.ivfpqEncodeAssign(batch, cbs, cs)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-
-  /** Start the flat-IVF maintenance stream: `vecs` must carry
-    * (vec_id, v) with v the embedding array. */
-  def startIvfpqAppend(vecs: DataFrame,
-                       cbs: Array[Array[Array[Double]]],
-                       cs: Array[Array[Double]],
-                       indexDir: String,
-                       checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .queryName("graft-ivfpq-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          appendIvfpqBatch(batch.toDF(), cbs, cs, indexDir, batchId)
-        ()
-      }
-      .start()
-
-  /** The merged flat combined-index table (the `codes0` input of
-    * ivfpqTopK), batch column dropped. */
-  def mergedIvfpqCodes(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select("cell", "corpus_id", "code")
-
-  // ---------------------------------------------------------------------
-  // The RESIDUAL vector twin (E49's streaming form): identical contract
-  // to the flat-IVF stream above with the encoder swapped — each
-  // micro-batch runs ivfpqrEncodeAssign's one-scan assign + residual +
-  // L2-nearest-code pass against the frozen (centroids, cell means,
-  // residual codebook) triple and appends to the batch-keyed layout.
-  // This was the only stored index family without a streaming arrival.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's append for the residual combined index. `batch`
-    * carries (vec_id, v). Exposed for the idempotence test. */
-  def appendIvfpqrBatch(batch: DataFrame,
-                        cbs: Array[Array[Array[Double]]],
-                        cs: Array[Array[Double]],
-                        ms: Array[Array[Double]],
-                        indexDir: String, batchId: Long): Unit =
-    graft.ext.Extensions.ivfpqrEncodeAssign(batch, cbs, cs, ms)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-
-  /** Start the residual-index maintenance stream: `vecs` must carry
-    * (vec_id, v) with v the embedding array. */
-  def startIvfpqrAppend(vecs: DataFrame,
-                        cbs: Array[Array[Array[Double]]],
-                        cs: Array[Array[Double]],
-                        ms: Array[Array[Double]],
-                        indexDir: String,
-                        checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .queryName("graft-ivfpqr-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          appendIvfpqrBatch(batch.toDF(), cbs, cs, ms, indexDir, batchId)
-        ()
-      }
-      .start()
-
-  /** The merged residual combined-index table (the `codes0` input of
-    * ivfpqrTopK) — the (cell, corpus_id, code) merged read is the
-    * SAME contract as the flat index's, so it delegates: a future
-    * change to the merged-read shape applies to both families once. */
-  def mergedIvfpqrCodes(spark: SparkSession, indexDir: String): DataFrame =
-    mergedIvfpqCodes(spark, indexDir)
-
-  // ---------------------------------------------------------------------
-  // The LSH-bucket twin (E36's streaming form) — the last stored index
-  // family without one: each micro-batch pays the one O(batch) sign-
-  // hash scan (lshBucketRows UNCAPPED — the hot-bucket cap is the
-  // SEARCH-side skew guard and must be re-resolved over the merged
-  // table, exactly like the batch arrival re-caps stored∪batch per
-  // search; a capped append would freeze per-batch caps that erode as
-  // increments accumulate) and appends to the batch-keyed layout.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's append for the bucket index. `batch` carries
-    * (vec_id, v). Exposed for the idempotence test. */
-  def appendLshBatch(batch: DataFrame, indexDir: String,
-                     batchId: Long): Unit =
-    graft.ext.Extensions.lshBucketRows(batch, cap = None)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-
-  /** Start the bucket-index maintenance stream: `vecs` must carry
-    * (vec_id, v) with v the embedding array. */
-  def startLshAppend(vecs: DataFrame, indexDir: String,
-                     checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .queryName("graft-lsh-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) appendLshBatch(batch.toDF(), indexDir, batchId)
-        ()
-      }
-      .start()
-
-  /** The merged UNCAPPED bucket table (the pre-cap input of annTopK's
-    * `buckets0` — callers re-apply the hot-bucket cap over it, the
-    * same per-search discipline as the batch arrival). */
-  def mergedLshBuckets(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select("corpus_id", "c_bucket")
-
-  // ---------------------------------------------------------------------
-  // The substring-dedup twin (E56's streaming form): documents arrive
-  // on a stream, each micro-batch pays ONE tokenize+gram scan and its
-  // (g, cnt) PARTIAL counts land in the batch-keyed partition. Counts
-  // are aggregates, not per-row facts, so — unlike postings — the
-  // merged read must SUM per gram across partitions (the same additive
-  // fold ext_substr_compact stores); the result is the monolithic
-  // count table by construction. Same idempotence discipline: a
-  // replayed batch rewrites its own partition byte-identically.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's append: gram-index + write to the batch-keyed
-    * partition. `batch` carries (doc_id, text). Partials carry the
-    * batch's own counts AND its canonical (min doc_id, pos) per gram
-    * — both monoid folds, so the merged read reconstructs the full
-    * index exactly (E60's rewrite arrival can probe a streamed index
-    * the same way it probes the batch-built fixture). Exposed for the
-    * idempotence test. */
-  def appendSubstrBatch(batch: DataFrame, indexDir: String,
-                        batchId: Long): Unit =
-    graft.ext.Extensions.substringGramIndex(batch)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-
-  /** Start the maintenance stream: `docs` must carry (doc_id, text). */
-  def startSubstrAppend(docs: DataFrame, indexDir: String,
-                        checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .queryName("graft-substr-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) appendSubstrBatch(batch.toDF(), indexDir, batchId)
-        ()
-      }
-      .start()
-
-  /** The merged (g, cnt, cdoc, cpos) index arrivals probe (the
-    * `stored` input of substrStatsAgainst AND substrRewriteAgainst):
-    * per-gram SUM of the partial counts + MIN of the partial
-    * canonicals — both monoids, so the fold equals the one-shot index
-    * over every streamed doc.
+  /** The merged (g, cnt, cdoc, cpos) index arrivals probe (the `stored`
+    * input of substrStatsAgainst AND substrRewriteAgainst). Partials are
+    * aggregates, not per-row facts, so the merged read folds them with
+    * the gram index's own compaction fold (`Extensions.foldGrams`):
+    * counts sum, canonicals min-fold — the one-shot index over every
+    * streamed doc.
     *
     * SCHEMA MIGRATION: partitions appended before the canon columns
-    * existed carry (g, cnt) only. The fold reads with mergeSchema and
-    * takes the canonical MIN over canon-CARRYING partials only (a
-    * legacy partition's nulls must never win the min — null struct
-    * fields sort first). Counts stay exact on any mix; canonicals are
-    * exact once every partial carries them. A dir with legacy
-    * partials therefore serves STATS exactly but cannot drive the
-    * rewrite's keep-one policy (its canonical facts were never
-    * recorded) — re-append or rebuild those batches before serving
-    * E60 from it; a null `cdoc` makes the rewrite treat the batch
-    * occurrence as canonical, which KEEPS spans it should remove. */
+    * existed carry (g, cnt) only. The fold reads with mergeSchema, and a
+    * legacy partition's null canonical never wins the min. Counts stay
+    * exact on any mix; canonicals are exact once every partial carries
+    * them. A dir with legacy partials therefore serves STATS exactly but
+    * cannot drive the rewrite's keep-one policy (its canonical facts
+    * were never recorded) — re-append or rebuild those batches before
+    * serving E60 from it; a null `cdoc` makes the rewrite treat the
+    * batch occurrence as canonical, which KEEPS spans it should remove. */
   def mergedSubstrGrams(spark: SparkSession, indexDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, min, struct, sum, when}
+    import org.apache.spark.sql.functions.lit
     val raw = spark.read.option("mergeSchema", "true").parquet(indexDir)
-    val typed =
+    graft.ext.Extensions.foldGrams(
       if (raw.columns.contains("cdoc")) raw
       else raw.withColumn("cdoc", lit(null).cast("long"))
-        .withColumn("cpos", lit(null).cast("long"))
-    typed.groupBy("g")
-      .agg(sum("cnt").as("cnt"),
-        min(when(col("cdoc").isNotNull,
-          struct(col("cdoc").as("d"), col("cpos").as("p")))).as("canon"))
-      .select(col("g"), col("cnt"),
-        col("canon.d").as("cdoc"), col("canon.p").as("cpos"))
+        .withColumn("cpos", lit(null).cast("long")))
   }
-
-  // ---------------------------------------------------------------------
-  // The SHARD-STORE twin (E66's streaming form), closing the streaming
-  // arrival set for the LAST stored artifact without one: documents
-  // arrive on a stream, each micro-batch lands as per-shard delta
-  // files in writeShards' strict (shard, content_hash, doc_id) order —
-  // assignment is STATELESS content-hash arithmetic, so the stream
-  // needs no standing-corpus read, no frozen model, no state store at
-  // all: the simplest twin in the set, because the artifact's arrival
-  // contract is itself stateless. Same idempotence discipline: a
-  // batch-keyed directory with overwrite semantics, so an
-  // at-least-once replay rewrites byte-identically. compactShards
-  // folds base ∪ streamed deltas exactly like batch-landed deltas —
-  // the store cannot tell how a delta arrived.
-  // ---------------------------------------------------------------------
-
-  /** One micro-batch's delta landing — writeShards under the
-    * batch-keyed dir. Exposed for the idempotence test. */
-  def appendShardDeltaBatch(batch: DataFrame, deltaDir: String,
-                            batchId: Long): Unit =
-    graft.ext.Extensions.writeShards(
-      batch.select("doc_id", "text"), s"$deltaDir/batch=$batchId")
-
-  /** Start the delta stream: `docs` must carry (doc_id, text). */
-  def startShardDeltaAppend(docs: DataFrame, deltaDir: String,
-                            checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .queryName("graft-shard-delta-append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) appendShardDeltaBatch(batch.toDF(), deltaDir, batchId)
-        ()
-      }
-      .start()
 }

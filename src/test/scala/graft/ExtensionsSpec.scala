@@ -139,7 +139,7 @@ class ExtensionsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
-    // the same monoid fold substrGramsCompacted runs: sum the counts,
+    // the same monoid fold GramIndex.fold runs: sum the counts,
     // min-struct the canonicals
     val folded = rows(Extensions.substringGramIndex(corpus)
       .unionByName(Extensions.substringGramIndex(day1))
@@ -555,9 +555,10 @@ class ExtensionsSpec extends SparkSpec {
     // oracle (the strongest gate any maintenance op has)
     val docSrc = s"$sf0001/documents.parquet"
     val (dCorpus, dBatch) = Extensions.incrementalDocSplit(spark, sf0001)
-    val compactedP = Extensions.postingsCompacted(
+    val compactedP = Extensions.PostingsIndex.fold(
       Extensions.postingsOf(dCorpus), Extensions.postingsOf(dBatch), docSrc)
-    val monoP = Extensions.bm25Postings(spark, sf0001)
+    val monoP = Extensions.PostingsIndex.stored(spark, sf0001,
+      Extensions.DocSplit.Full)
     assert(compactedP.exceptAll(monoP).count() == 0 &&
       monoP.exceptAll(compactedP).count() == 0,
       "compacted postings diverged from the monolithic table")
@@ -1034,6 +1035,29 @@ class ExtensionsSpec extends SparkSpec {
     assert(events.head.startsWith("{\"event\":\"fixture_fallback\"," +
       s"\"family\":\"$family\",\"src\":\"$src\",\"error\":\""), events.head)
     assert(got == live.collect().toSeq, "fallback did not serve the live frame")
+  }
+
+  test("fixture fingerprint over stored fixtures: one key per upstream, wherever the checkout lives") {
+    // two checkouts holding the same upstream fixture must fingerprint a
+    // downstream table alike (the key is shared, not re-minted per
+    // directory), while a different upstream key — a retrained model —
+    // must orphan it
+    val parent = java.nio.file.Files.createTempDirectory("fx-roots").toFile
+    def planOver(checkout: String, key: String): String = {
+      val target = new java.io.File(parent, s"$checkout/target")
+      val dir = new java.io.File(target, s"pq-codes/$key").toString
+      Seq((1L, 2L)).toDF("corpus_id", "code").write.parquet(dir)
+      Extensions.fixturePlanOf(spark.read.parquet(dir), target)
+        .replaceAll("#[0-9]+", "")
+    }
+    try {
+      val here = planOver("a", "fxk1")
+      assert(here.endsWith("\nscans:pq-codes/fxk1"), here)
+      assert(planOver("b", "fxk1") == here,
+        "the same upstream fixture fingerprints differently per checkout")
+      assert(planOver("a", "fxk2") != here,
+        "a different upstream key must orphan the downstream table")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(parent)
   }
 
   test("pq incremental maintenance: in-distribution batch low drift; shifted batch trips retrain") {

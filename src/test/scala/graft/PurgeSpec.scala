@@ -350,8 +350,9 @@ class PurgeSpec extends SparkSpec {
     val docs = Seq((1L, shared), (2L, shared), (3L, unique))
       .toDF("doc_id", "text")
     val stored = Extensions.substringGramIndex(docs)
-    val out = Extensions.substrPurgeHalf(stored,
-        docs.filter(col("doc_id") === 1L), d => d === 1L)
+    val purged = docs.filter(col("doc_id") === 1L)
+    val out = Extensions.substrRefreshFold(stored, purged, purged.limit(0),
+        d => d === 1L)
       .collect().map(r => (r.getLong(1), r.getBoolean(2)))
     assert(out.toSet == Set((1L, true), (1L, false)),
       s"want one tombstoned and one clean surviving gram, got ${out.toSeq}")
@@ -426,6 +427,25 @@ class PurgeSpec extends SparkSpec {
         none.select("doc_id"), none, none).collect().map(_.toSeq).toSeq
       assert(out.nonEmpty && out == stored.collect().map(_.toSeq).toSeq,
         "empty takedown changed the stored shard receipt")
+      // the postings and gram bindings' purge step: nothing leaves,
+      // nothing arrives, no witness is stale — each stored table comes
+      // back verbatim and no gram is tombstoned
+      val noDocs = docs.limit(0)
+      val takedown = Extensions.DocDelta(noDocs.select("doc_id"), noDocs,
+        _ => lit(false), noDocs)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val postings = Extensions.postingsOf(docs)
+      val postingsOut =
+        rows(Extensions.PostingsIndex.refresh(postings, takedown))
+      assert(postingsOut.nonEmpty && postingsOut == rows(postings),
+        "empty takedown changed the stored postings")
+      val grams = Extensions.substringGramIndex(docs)
+      val gramsOut = Extensions.GramIndex.refresh(grams, takedown)
+      assert(gramsOut.filter(col("tombstoned")).isEmpty,
+        "empty takedown tombstoned a gram")
+      assert(rows(gramsOut.drop("tombstoned")) == rows(grams),
+        "empty takedown changed the stored gram index")
     } finally Extensions.releaseCaches()
   }
 

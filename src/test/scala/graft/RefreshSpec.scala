@@ -15,8 +15,8 @@ class RefreshSpec extends SparkSpec {
 
   test("crawl refresh: refreshed index row-identical to a from-scratch snapshot-B build") {
     try {
-      val got = Extensions.refreshedSnapshotPostings(spark, sf0001)
-        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val got = Extensions.refreshedDocIndex(Extensions.PostingsIndex,
+          spark, sf0001).collect().map(_.toSeq).sortBy(_.toString).toSeq
       val twin = Extensions
         .postingsOf(Extensions.snapshotDocsB(spark, sf0001))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -99,8 +99,8 @@ class RefreshSpec extends SparkSpec {
       // postings: stored − purged + arrived == refreshed ROW count
       val pStored = Extensions.postingsOf(
         Extensions.snapshotDocsA(spark, sf0001)).count()
-      val pRefreshed = Extensions.refreshedSnapshotPostings(spark, sf0001)
-        .count()
+      val pRefreshed = Extensions.refreshedDocIndex(Extensions.PostingsIndex,
+        spark, sf0001).count()
       val pPurged = rows.collect { case (("postings", _), v) => v._2 }.sum
       val pArrived = rows.collect { case (("postings", _), v) => v._3 }.sum
       assert(pStored - pPurged + pArrived == pRefreshed,
@@ -114,7 +114,8 @@ class RefreshSpec extends SparkSpec {
         }
       val gStored = sumCnt(Extensions.substringGramIndex(
         Extensions.snapshotDocsA(spark, sf0001)))
-      val gRefreshed = sumCnt(Extensions.refreshedSnapshotGrams(spark, sf0001))
+      val gRefreshed = sumCnt(
+        Extensions.refreshedDocIndex(Extensions.GramIndex, spark, sf0001))
       val gPurged = rows.collect { case (("substr", _), v) => v._2 }.sum
       val gArrived = rows.collect { case (("substr", _), v) => v._3 }.sum
       assert(gStored - gPurged + gArrived == gRefreshed,
@@ -124,7 +125,8 @@ class RefreshSpec extends SparkSpec {
 
   test("substr refresh: counts equal the snapshot-B rebuild; non-tombstoned canonicals equal the rebuild; tombstones only where the stored witness was stale") {
     try {
-      val refr = Extensions.refreshedSnapshotGrams(spark, sf0001).collect()
+      val refr = Extensions.refreshedDocIndex(Extensions.GramIndex, spark,
+          sf0001).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2),
           if (r.isNullAt(3)) None else Some((r.getLong(3), r.getLong(4)))))
         .toMap

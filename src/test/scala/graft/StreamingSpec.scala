@@ -205,13 +205,14 @@ class StreamingSpec extends SparkSpec {
       (1L, "alpha beta beta"), (2L, "beta gamma"),
       (3L, "alpha alpha delta"), (4L, "gamma gamma gamma"))
     val ms = MemoryStream[(Long, String)]
-    val q = IndexMaintenanceStream.startPostingsAppend(
-      ms.toDF().toDF("doc_id", "text"), dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(graft.ext.Extensions.postingsOf)
+    val q = IndexMaintenanceStream.start("postings",
+      ms.toDF().toDF("doc_id", "text"), dir, ckpt, land)
     try {
       ms.addData(docsAll.take(2): _*); q.processAllAvailable()
       ms.addData(docsAll.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
-    val merged = IndexMaintenanceStream.mergedPostings(spark, dir)
+    val merged = IndexMaintenanceStream.mergedRows(spark, dir)
     val oneShot = graft.ext.Extensions.postingsOf(
       docsAll.toDF("doc_id", "text"))
     assert(merged.exceptAll(oneShot).count() == 0 &&
@@ -219,9 +220,9 @@ class StreamingSpec extends SparkSpec {
       "streamed postings diverged from the one-shot batch tokenize")
     // at-least-once replay: re-running a batch id overwrites in place
     val before = merged.count()
-    IndexMaintenanceStream.appendPostingsBatch(
-      docsAll.take(2).toDF("doc_id", "text"), dir, 0L)
-    assert(IndexMaintenanceStream.mergedPostings(spark, dir).count() == before,
+    IndexMaintenanceStream.appendBatch(
+      docsAll.take(2).toDF("doc_id", "text"), dir, 0L, land)
+    assert(IndexMaintenanceStream.mergedRows(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
 
@@ -245,21 +246,23 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("imipqidx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("imipqckpt").toString
     val ms = MemoryStream[(Long, Seq[Double])]
-    val q = IndexMaintenanceStream.startImipqAppend(
-      ms.toDF().toDF("vec_id", "v"), cbs, cs0, cs1, dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(
+      graft.ext.Extensions.imipqEncodeAssign(_, cbs, cs0, cs1))
+    val q = IndexMaintenanceStream.start("imipq",
+      ms.toDF().toDF("vec_id", "v"), dir, ckpt, land)
     try {
       ms.addData(vecsAll.take(6): _*); q.processAllAvailable()
       ms.addData(vecsAll.drop(6): _*); q.processAllAvailable()
     } finally q.stop()
-    val merged = IndexMaintenanceStream.mergedImipqCodes(spark, dir)
+    val merged = IndexMaintenanceStream.mergedRows(spark, dir)
     val oneShot = graft.ext.Extensions.imipqEncodeAssign(allDf, cbs, cs0, cs1)
     assert(merged.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(merged).count() == 0,
       "streamed combined-index rows diverged from the one-shot encode")
     val before = merged.count()
-    IndexMaintenanceStream.appendImipqBatch(
-      vecsAll.take(6).toDF("vec_id", "v"), cbs, cs0, cs1, dir, 0L)
-    assert(IndexMaintenanceStream.mergedImipqCodes(spark, dir).count() == before,
+    IndexMaintenanceStream.appendBatch(
+      vecsAll.take(6).toDF("vec_id", "v"), dir, 0L, land)
+    assert(IndexMaintenanceStream.mergedRows(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
 
@@ -279,21 +282,23 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ivfpqckpt").toString
     val ms = MemoryStream[(Long, Seq[Double])]
-    val q = IndexMaintenanceStream.startIvfpqAppend(
-      ms.toDF().toDF("vec_id", "v"), cbs, cs, dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(
+      graft.ext.Extensions.ivfpqEncodeAssign(_, cbs, cs))
+    val q = IndexMaintenanceStream.start("ivfpq",
+      ms.toDF().toDF("vec_id", "v"), dir, ckpt, land)
     try {
       ms.addData(vecsAll.take(6): _*); q.processAllAvailable()
       ms.addData(vecsAll.drop(6): _*); q.processAllAvailable()
     } finally q.stop()
-    val merged = IndexMaintenanceStream.mergedIvfpqCodes(spark, dir)
+    val merged = IndexMaintenanceStream.mergedRows(spark, dir)
     val oneShot = graft.ext.Extensions.ivfpqEncodeAssign(allDf, cbs, cs)
     assert(merged.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(merged).count() == 0,
       "streamed combined-index rows diverged from the one-shot encode")
     val before = merged.count()
-    IndexMaintenanceStream.appendIvfpqBatch(
-      vecsAll.take(6).toDF("vec_id", "v"), cbs, cs, dir, 0L)
-    assert(IndexMaintenanceStream.mergedIvfpqCodes(spark, dir).count() == before,
+    IndexMaintenanceStream.appendBatch(
+      vecsAll.take(6).toDF("vec_id", "v"), dir, 0L, land)
+    assert(IndexMaintenanceStream.mergedRows(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
 
@@ -316,21 +321,23 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpqridx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ivfpqrckpt").toString
     val ms2 = MemoryStream[(Long, Seq[Double])]
-    val q = IndexMaintenanceStream.startIvfpqrAppend(
-      ms2.toDF().toDF("vec_id", "v"), cbs, cs, ms, dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(
+      graft.ext.Extensions.ivfpqrEncodeAssign(_, cbs, cs, ms))
+    val q = IndexMaintenanceStream.start("ivfpqr",
+      ms2.toDF().toDF("vec_id", "v"), dir, ckpt, land)
     try {
       ms2.addData(vecsAll.take(6): _*); q.processAllAvailable()
       ms2.addData(vecsAll.drop(6): _*); q.processAllAvailable()
     } finally q.stop()
-    val merged = IndexMaintenanceStream.mergedIvfpqrCodes(spark, dir)
+    val merged = IndexMaintenanceStream.mergedRows(spark, dir)
     val oneShot = graft.ext.Extensions.ivfpqrEncodeAssign(allDf, cbs, cs, ms)
     assert(merged.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(merged).count() == 0,
       "streamed residual-index rows diverged from the one-shot encode")
     val before = merged.count()
-    IndexMaintenanceStream.appendIvfpqrBatch(
-      vecsAll.take(6).toDF("vec_id", "v"), cbs, cs, ms, dir, 0L)
-    assert(IndexMaintenanceStream.mergedIvfpqrCodes(spark, dir).count() == before,
+    IndexMaintenanceStream.appendBatch(
+      vecsAll.take(6).toDF("vec_id", "v"), dir, 0L, land)
+    assert(IndexMaintenanceStream.mergedRows(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
 
@@ -347,21 +354,23 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("lshckpt").toString
     val ms = MemoryStream[(Long, Seq[Double])]
-    val q = IndexMaintenanceStream.startLshAppend(
-      ms.toDF().toDF("vec_id", "v"), dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(
+      graft.ext.Extensions.lshBucketRows(_, cap = None))
+    val q = IndexMaintenanceStream.start("lsh",
+      ms.toDF().toDF("vec_id", "v"), dir, ckpt, land)
     try {
       ms.addData(vecsAll.take(6): _*); q.processAllAvailable()
       ms.addData(vecsAll.drop(6): _*); q.processAllAvailable()
     } finally q.stop()
-    val merged = IndexMaintenanceStream.mergedLshBuckets(spark, dir)
+    val merged = IndexMaintenanceStream.mergedRows(spark, dir)
     val oneShot = graft.ext.Extensions.lshBucketRows(allDf, cap = None)
     assert(merged.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(merged).count() == 0,
       "streamed bucket rows diverged from the one-shot hash scan")
     val before = merged.count()
-    IndexMaintenanceStream.appendLshBatch(
-      vecsAll.take(6).toDF("vec_id", "v"), dir, 0L)
-    assert(IndexMaintenanceStream.mergedLshBuckets(spark, dir).count() == before,
+    IndexMaintenanceStream.appendBatch(
+      vecsAll.take(6).toDF("vec_id", "v"), dir, 0L, land)
+    assert(IndexMaintenanceStream.mergedRows(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
 
@@ -381,8 +390,10 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("substridx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("substrckpt").toString
     val ms = MemoryStream[(Long, String)]
-    val q = IndexMaintenanceStream.startSubstrAppend(
-      ms.toDF().toDF("doc_id", "text"), dir, ckpt)
+    val land = IndexMaintenanceStream.rowsOf(
+      graft.ext.Extensions.substringGramIndex)
+    val q = IndexMaintenanceStream.start("substr",
+      ms.toDF().toDF("doc_id", "text"), dir, ckpt, land)
     try {
       ms.addData(docsAll.take(2): _*); q.processAllAvailable()
       ms.addData(docsAll.drop(2): _*); q.processAllAvailable()
@@ -407,8 +418,8 @@ class StreamingSpec extends SparkSpec {
     val dupTotal = merged.filter(col("cnt") >= 2).count()
     assert(dupTotal >= 1, "cross-micro-batch duplicate gram not summed")
     val before = merged.count()
-    IndexMaintenanceStream.appendSubstrBatch(
-      docsAll.take(2).toDF("doc_id", "text"), dir, 0L)
+    IndexMaintenanceStream.appendBatch(
+      docsAll.take(2).toDF("doc_id", "text"), dir, 0L, land)
     assert(IndexMaintenanceStream.mergedSubstrGrams(spark, dir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
   }
@@ -426,8 +437,9 @@ class StreamingSpec extends SparkSpec {
     // legacy partition: counts-only schema, written as the old append did
     graft.ext.Extensions.substringGramCounts(oldDocs.toDF("doc_id", "text"))
       .write.mode("overwrite").parquet(s"$dir/batch=0")
-    IndexMaintenanceStream.appendSubstrBatch(
-      newDocs.toDF("doc_id", "text"), dir, 1L)
+    IndexMaintenanceStream.appendBatch(newDocs.toDF("doc_id", "text"),
+      dir, 1L, IndexMaintenanceStream.rowsOf(
+        graft.ext.Extensions.substringGramIndex))
     val merged = IndexMaintenanceStream.mergedSubstrGrams(spark, dir).collect()
     assert(merged.length == 1)
     val r = merged(0)
@@ -462,8 +474,10 @@ class StreamingSpec extends SparkSpec {
     val Seq(baseDir, deltaDir, ckpt, compDir, monoDir) = dirs
     graft.ext.Extensions.writeShards(base.toDF("doc_id", "text"), baseDir)
     val ms = MemoryStream[(Long, String)]
-    val q = IndexMaintenanceStream.startShardDeltaAppend(
-      ms.toDF().toDF("doc_id", "text"), deltaDir, ckpt)
+    val land: IndexMaintenanceStream.Landing =
+      graft.ext.Extensions.writeShards(_, _)
+    val q = IndexMaintenanceStream.start("shard-delta",
+      ms.toDF().toDF("doc_id", "text"), deltaDir, ckpt, land)
     try {
       ms.addData(arriving.take(10): _*); q.processAllAvailable()
       ms.addData(arriving.drop(10): _*); q.processAllAvailable()
@@ -484,8 +498,8 @@ class StreamingSpec extends SparkSpec {
     assert(shardSeqs(compDir).values.map(_.size).sum == 60)
     // at-least-once replay: re-running a batch id overwrites in place
     val before = spark.read.parquet(deltaDir).count()
-    IndexMaintenanceStream.appendShardDeltaBatch(
-      arriving.take(10).toDF("doc_id", "text"), deltaDir, 0L)
+    IndexMaintenanceStream.appendBatch(
+      arriving.take(10).toDF("doc_id", "text"), deltaDir, 0L, land)
     assert(spark.read.parquet(deltaDir).count() == before,
       "replayed micro-batch double-appended instead of rewriting its partition")
     dirs.foreach(d =>
